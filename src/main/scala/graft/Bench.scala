@@ -77,23 +77,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     val load0 = loadavg1()
     val jif0 = cpuJiffies()
     val psi0 = psiCpuSomeUs()
     val thr0 = throttledNs()
     val wall0 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config(model.Tables.ShuffleWriterThreshold._1, model.Tables.ShuffleWriterThreshold._2)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warmup: a tiny shuffle + parquet reads via the Tables loader (which
-    // also pre-sets the session confs — nanos timestamps, ICU opt-out — so
-    // the first timed query doesn't pay first-touch costs).
+    val spark = Session.build(cpus, cpus)
+    // Warmup: a tiny shuffle + parquet reads via the Tables loader, so the
+    // first timed query doesn't pay first-touch costs (codegen, footers).
     try {
       spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().count()
       graft.model.Tables(spark, sfDir, "events").limit(10).count()

@@ -5,46 +5,60 @@ import org.apache.spark.sql.SparkSession
 /** Plan auditor: prints the formatted physical plan for selected registered
   * queries so pushdown / broadcast / codegen can be inspected and iterated.
   *
-  * Usage: runMain graft.Explain <sfDir> [queryName ...]
-  * With no names, explains a representative subset.
+  * Usage: runMain graft.Explain [sfDir] [--sweep] [queryName ...]
+  * With no names, explains a representative subset; `--sweep` (anywhere)
+  * prints one summary line per named query, or per registered query when
+  * none is named.
   */
 object Explain {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val names = if (args.length > 1) args.tail.toSeq
-      else Seq("s1_scan_clean", "t10_point_lookup", "t18_dim_join",
-        "join_shuffle_agg", "join_interval", "a1_weighted_gpa",
-        "flagship_progress", "d3_lsh_jaccard_pairs", "d7_minhash_rowsig",
-        "e1_cosine_topk", "x5_clean_corpus", "x10_contamination")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Same extensions as Verify/Bench: t16_grade_band_ext resolves the
-      // injected grade_scale routine, so the sweep can cover all 159.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config(model.Tables.ShuffleWriterThreshold._1, model.Tables.ShuffleWriterThreshold._2)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (names == Seq("--sweep")) sweep(spark, sfDir)
-    else names.foreach { n =>
+  val Usage = "usage: graft.Explain [sfDir] [--sweep] [queryName ...]"
+
+  final case class Args(sfDir: String, sweep: Boolean, names: Seq[String])
+
+  /** Pure command-line parse: flags may appear anywhere, the first
+    * positional argument is the sf directory, the rest are query names. */
+  def parse(args: Seq[String]): Either[String, Args] = {
+    val (flags, positional) = args.partition(_.startsWith("--"))
+    flags.filterNot(_ == "--sweep") match {
+      case Seq() =>
+        val sweep = flags.nonEmpty
+        val names = positional.drop(1)
+        Right(Args(positional.headOption.getOrElse("/root/testdata/sf0.001"), sweep,
+          if (names.nonEmpty || sweep) names else DefaultNames))
+      case bad => Left(s"unknown flag ${bad.mkString(", ")}\n$Usage")
+    }
+  }
+
+  private val DefaultNames = Seq("s1_scan_clean", "t10_point_lookup",
+    "t18_dim_join", "join_shuffle_agg", "join_interval", "a1_weighted_gpa",
+    "flagship_progress", "d3_lsh_jaccard_pairs", "d7_minhash_rowsig",
+    "e1_cosine_topk", "x5_clean_corpus", "x10_contamination")
+
+  def main(argv: Array[String]): Unit = {
+    val args = parse(argv.toSeq).flatMap { a =>
+      val unknown = a.names.filterNot(SparkEntry.queries.keySet)
+      if (unknown.isEmpty) Right(a) else Left(s"unknown query ${unknown.mkString(", ")}\n$Usage")
+    }.fold(msg => { System.err.println(msg); sys.exit(2) }, identity)
+    val spark = Session.build(Session.cpus, Session.cpus)
+    if (args.sweep) sweep(spark, args.sfDir, args.names)
+    else args.names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      SparkEntry.queries(n)(spark, args.sfDir).explain("formatted")
     }
     spark.stop()
   }
 
-  /** `runMain graft.Explain <sfDir> --sweep` — one line per REGISTERED query
-    * summarizing its formatted physical plan (exchange count, join
-    * strategies, scans with/without PushedFilters, cartesian/BNLJ flags), so "all ~150 untouched plans are clean" is a
-    * committed, diffable artifact instead of a /tmp claim (r19 verdict #6).
+  /** `runMain graft.Explain <sfDir> --sweep [query ...]` — one line per
+    * named query (every REGISTERED query when none is named) summarizing its
+    * formatted physical plan (exchange count, join strategies, scans
+    * with/without PushedFilters, cartesian/BNLJ flags), so "all ~150
+    * untouched plans are clean" is a committed, diffable artifact instead of
+    * a /tmp claim (r19 verdict #6).
     * Streaming replay rungs execute at build time — run at a small sf. */
-  private def sweep(spark: SparkSession, sfDir: String): Unit = {
+  private def sweep(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     val nodeRe = """\(\d+\) ([A-Za-z]+)""".r
     val pushedRe = """PushedFilters: \[(.*?)\]""".r
-    for (n <- SparkEntry.queries.keys.toSeq.sorted) {
+    for (n <- if (names.nonEmpty) names else SparkEntry.queries.keys.toSeq.sorted) {
       val line = try {
         val df = SparkEntry.queries(n)(spark, sfDir)
         val plan = df.queryExecution.explainString(

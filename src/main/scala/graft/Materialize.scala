@@ -84,7 +84,7 @@ object Materialize {
 
   // NOTE (r20): a pinWithMetrics seam — riding row-level aggregates on the
   // checkpoint action via Dataset.observe — was built, verified to deliver
-  // metrics on eager localCheckpoint (tools/ProbeObserve), and then REVERTED:
+  // metrics on eager localCheckpoint (OPTIMIZATION_r20.md, ProbeObserve), and then REVERTED:
   // interleaved A/B showed Observation.get's wait on the ASYNC listener bus
   // (which drains behind a 32-wide run's task events) costs MORE per
   // iteration than the synchronous sub-second count it replaced (d6 7.9→9.7 s,

@@ -1380,7 +1380,7 @@ object SparkEntry {
     // compose as plain DataFrame stages; one pipeline, one oracle.
     // Registered at the FOLD shape since r18: the per-doc token stats run
     // as one map-side higher-order aggregate() instead of explode +
-    // groupBy(doc_id) — 7.2× at ×1000 (145 → 20.1 s warm, ProbeX5; x5 was
+    // groupBy(doc_id) — 7.2× at ×1000 (145 → 20.1 s warm, BASELINE.md r18 (ProbeX5); x5 was
     // the slowest linear pass in the r17 fourth-decade table). Output is
     // row-identical (OpsSpec equivalence); the explode form stays as the
     // library reference shape cleanCorpus.
@@ -1899,10 +1899,10 @@ object SparkEntry {
     // dedup. Registered at the PRODUCTION configuration: real k-means
     // centroids (the same deterministic Lloyd iterations e6 gates) at the
     // derived k = ⌈√n⌉ — a fixed small k lets per-cell density grow with
-    // the corpus and the in-cell pair term go quadratic (ProbeAnn measured
-    // the old k=8 stand-in at ~255 s / 2.5B within-cell pairs at ×100,
-    // where a corpus-grown k ran 7.3 s; the stand-in survives as OpsSpec's
-    // semantics fixture).
+    // the corpus and the in-cell pair term go quadratic (BASELINE.md r16
+    // (ProbeAnn): the old k=8 stand-in at ~255 s / 2.5B within-cell pairs
+    // at ×100, where a corpus-grown k ran 7.3 s; the stand-in survives as
+    // OpsSpec's semantics fixture).
     ("d8_semdedup",
       (s, d) => {
         val e = emb(s, d)

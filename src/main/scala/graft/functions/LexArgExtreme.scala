@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * PRIMITIVE aggregation-buffer slots — the codegen-fast replacement for
   * `max_by(v, struct(o1, o2))`.
   *
-  * Why it exists (measured, ProbeAnn lab at ×100 / 160M candidate rows):
+  * Why it exists (measured, BASELINE.md r16 (ProbeAnn) at ×100 / 160M candidate rows):
   * a struct-typed ordering makes the aggregate's buffer schema contain a
   * StructType, which is not an UnsafeRow-mutable field type — the whole
   * HashAggregate drops off the codegen fast path and every input row pays

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
   * (`row_number().over(partitionBy(g).orderBy(o)) <= k`, planned as
   * Sort → WindowGroupLimit(Partial) → Exchange → Sort →
   * WindowGroupLimit(Final) → Window) is GROUP CARDINALITY, and it was
-  * measured, not guessed (ProbeTopN, BASELINE.md round 17): this
+  * measured, not guessed (BASELINE.md r17 (ProbeTopN)): this
   * aggregate replaces both full-partition O(n log n) sorts with one hash
   * probe + ≤k slot comparisons per row, which wins while the per-task
   * group table stays cache-resident (sf0.1, 1.5k groups: 0.73 s vs the

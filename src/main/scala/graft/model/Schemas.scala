@@ -85,41 +85,19 @@ object Dims {
   *   - TIMESTAMP(NANOS): Spark 4 rejects it by default; read nanos as long
   *     and truncate to a micros timestamp — exactly what DuckDB does.
   *   - TIMESTAMP_MICROS with isAdjustedToUTC=0: Spark 4 infers TIMESTAMP_NTZ,
-  *     which `unix_millis`/`unix_micros` reject at analysis. Disable NTZ
-  *     inference so it reads as plain TimestampType; the session timezone is
-  *     UTC everywhere (Verify/Bench/tests), so the wall-clock values are
-  *     identical to DuckDB's naive-timestamp reading and oracle hashes agree.
-  *     A cast branch below catches any NTZ column that still slips through
-  *     (e.g. a future explicitly-annotated NTZ logical type).
+  *     which `unix_millis`/`unix_micros` reject at analysis. With NTZ
+  *     inference off it reads as plain TimestampType; the session timezone is
+  *     UTC everywhere, so the wall-clock values are identical to DuckDB's
+  *     naive-timestamp reading and oracle hashes agree. A cast branch below
+  *     catches any NTZ column that still slips through (e.g. a future
+  *     explicitly-annotated NTZ logical type).
+  *
+  * The two shims (`nanosAsLong`, NTZ inference off) are session confs set by
+  * [[graft.Session.build]]; loading a table reads and normalizes only.
   */
 object Tables {
 
-  /** Static (builder-time) conf every graft measurement/driver session
-    * applies: the bypass-merge shuffle writer keeps one buffered stream PER
-    * REDUCE PARTITION open in every map task, and the lexical family's
-    * volume-derived pair/agg exchanges routinely land in the 65–199
-    * partition band where that is 3× slower than the sort-based writer
-    * (×100 probe, plans/r20: the 183-wide pair stage read 313 s of task
-    * time under bypass, 110 s under sort, same records/bytes). 64 keeps
-    * the session-width (≤ core count) exchanges — the common case — on the
-    * bypass fast path and puts every derived-width exchange on the sort
-    * writer, which is also Spark's own default regime past 200. Must be
-    * set at session BUILD time (core conf, not runtime-settable). */
-  val ShuffleWriterThreshold: (String, String) =
-    "spark.shuffle.sort.bypassMergeThreshold" -> "64"
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    try {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // Spark 4's ICU-backed lower()/upper() triggers
-      // CollationAwareUTF8String.<clinit>, which builds a full ICU titlecase
-      // table on first use — measured ~60 s of CPU once per JVM, blocking
-      // every concurrent task (profiled via jstack: all 32 tasks parked on
-      // the class-init monitor). Our corpora are ASCII; JVM case mapping is
-      // identical there (and matches DuckDB), so opt out of ICU.
-      spark.conf.set("spark.sql.icu.caseMappings.enabled", "false")
-    } catch { case _: Exception => }
     val path = s"$dir/$name.parquet"
     val df = spark.read.parquet(path)
     val fixed = df.schema.fields.find(_.name == "ts").map(_.dataType) match {
@@ -127,7 +105,7 @@ object Tables {
         df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
       case _ => df
     }
-    // Cast EVERY explicitly-NTZ-annotated column (inference is off above, but
+    // Cast EVERY explicitly-NTZ-annotated column (inference is off, but
     // an explicit TIMESTAMP_NTZ logical type still reads as NTZ) — the naive
     // columns are not just `ts`: orders.o_orderdate and lineitem.l_shipdate
     // share the storage convention. Value-preserving under the UTC session tz.

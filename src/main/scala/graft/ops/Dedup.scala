@@ -479,8 +479,8 @@ object Dedup {
       // Observation.get waits on the ASYNC listener bus, which drains
       // behind the 32-wide run's task events — costlier per iteration
       // than this synchronous sub-second count over the just-checkpointed
-      // frame (ProbeObserve holds the mechanism; OPTIMIZATION_r20.md the
-      // numbers).
+      // frame (OPTIMIZATION_r20.md (ProbeObserve) holds the mechanism and
+      // the numbers).
       val step = propagate(propagate(labels.withColumn("label0", col("label"))))
         .pinned
       changed = step.filter(col("label") =!= col("label0")).count()
@@ -669,7 +669,7 @@ object Dedup {
     * hash-collision caveat. No document pair ever materializes — linear in
     * corpus chunks.
     *
-    * Measured (ProbeChunk, ×100 replica corpus, PLANS.md r16): this shape
+    * Measured (BASELINE.md r16 (ProbeChunk), ×100 replica corpus): this shape
     * 66.8 MB / 5.1 s vs the r15 text-keyed window's 68.4 MB / 5.2 s (the
     * ×100 corpus scatters each chunk's ~6 copies across 32 partitions, so
     * combine finds no co-located duplicates — parity here, a win wherever
@@ -1106,7 +1106,7 @@ object Dedup {
     *    8g, but shared with the pinned posting blocks), and the stage
     *    measured 1 555 MB spilled + 8–12 s GC. At 512k/task the map stays
     *    ≈25 MB/task: same stage re-measured 0 B spilled, GC 8.5→3.3 s,
-    *    task time −26 % (ProfStages, BASELINE.md r19).
+    *    task time −26 % (BASELINE.md r19, stage profile).
     *
     * 512k/task keeps small corpora at the configured width (the max() in
     * [[widthForVolume]]), turns sf0.1 into ~67 tasks (2 waves on 32 cores),
@@ -1116,27 +1116,13 @@ object Dedup {
   /** Pair-join parallelism derived from the CANDIDATE VOLUME, not the
     * posting bytes (r13 verdict #2): the posting self-join expands each
     * term into df² candidate rows, so the right task count scales with
-    * Σ_term df² — computable for free from the pinned posting frame, since
-    * each kept term contributes exactly df rows each carrying its df
-    * (Σ_rows df = Σ_term df²). Clamped below by the configured shuffle
-    * width (small corpora keep their session width; AQE still cannot
-    * coalesce a numbered repartition) and above at 32768 (a runaway-volume
-    * backstop: past that, waves of tasks amortize fine). This removed the
-    * manual SPARK_GRAFT_SHUFFLE=256 override the sf1 runs needed.
-    *
-    * PROBE-ONLY since r19: the production lexical paths derive their width
-    * from the fused LexPostingStats volume via [[widthForVolume]]; this
-    * Σdf form remains for ProbeWidth and the unit test. Keep the two
-    * arithmetically identical (Σ_rows df = Σ_term df² = stats.volume) or
-    * the probe silently drifts from what ships (ADVICE r19). */
-  private[graft] def pairJoinWidth(posts: DataFrame): Int = {
-    val row = posts.agg(sum(col("df"))).head()
-    if (row.isNullAt(0)) numShufflePartitions(posts)
-    else widthForVolume(numShufflePartitions(posts), row.getLong(0))
-  }
-
-  /** The clamp itself: configured width ≤ ceil(vol / budget) ≤ 32768. */
-  private def widthForVolume(conf: Int, vol: Long): Int =
+    * `vol` = Σ_term df² (the fused LexPostingStats volume). Clamped below by
+    * the configured shuffle width `conf` (small corpora keep their session
+    * width; AQE still cannot coalesce a numbered repartition) and above at
+    * 32768 (a runaway-volume backstop: past that, waves of tasks amortize
+    * fine): conf ≤ ceil(vol / budget) ≤ 32768. This removed the manual
+    * SPARK_GRAFT_SHUFFLE=256 override the sf1 runs needed. */
+  private[graft] def widthForVolume(conf: Int, vol: Long): Int =
     math.max(conf.toLong, math.min(32768L,
       (vol + PairRecordsPerTask - 1) / PairRecordsPerTask)).toInt
 
@@ -1186,12 +1172,30 @@ object Dedup {
     // driver round-trip hides under the pin instead of following it. The
     // count cannot ride the pin itself: observe forbids DISTINCT aggregates,
     // and tf's plan drops short documents the cap arithmetic must count.
-    val nDocsF = scala.concurrent.Future {
+    val sc = docs.sparkSession.sparkContext
+    val tag = s"graft-doc-count-${java.util.UUID.randomUUID()}"
+    val nDocsF = new java.util.concurrent.FutureTask[Long](() => {
+      sc.addJobTag(tag)
+      sc.setInterruptOnCancel(true)
       docs.select(countDistinct(col("doc_id"))).head().getLong(0)
-    }(scala.concurrent.ExecutionContext.global)
-    val tf = postingTf(docs, textCol, n)
-    val nDocs = scala.concurrent.Await.result(
-      nDocsF, scala.concurrent.duration.Duration.Inf)
+    })
+    // A thread started here inherits the caller's Spark local properties
+    // (job group, tags, scheduler pool), so cancelling the caller's group
+    // cancels the count too; a pooled thread would carry none of them.
+    val counter = new Thread(nDocsF, "graft-doc-count")
+    counter.setDaemon(true)
+    counter.start()
+    val tf =
+      try postingTf(docs, textCol, n)
+      catch { case e: Throwable =>
+        // No count job may outlive this call. Cancel until the thread is
+        // done: a cancel can land before the job is submitted.
+        while (counter.isAlive) { sc.cancelJobsWithTag(tag); counter.join(50) }
+        throw e
+      }
+    val nDocs =
+      try nDocsF.get()
+      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
     val capVal = math.min(maxDfCap.toLong,
       math.max(2L, math.ceil(nDocs * maxDfFrac).toLong))
     val dfs = tf.groupBy("term").agg(count(lit(1)).as("df"))
@@ -1434,7 +1438,7 @@ object Dedup {
     // N=10⁹), so tf·wfx < 2⁶³ needs a single document of ~10¹² tokens.
     // One job yields BOTH driver scalars: the overflow-bound stats (per-doc
     // groupBy, map-side combined) and the pair-join candidate volume
-    // (Σ_rows df = Σ_term df², the pairJoinWidth input — folded here so the
+    // (Σ_rows df = Σ_term df², the widthForVolume input — folded here so the
     // idf path pays one stats job, not two).
     val stats = posts.groupBy("doc_id")
       .agg(count(lit(1)).as("__nt"), max(vExpr).as("__mv"),
@@ -1477,12 +1481,10 @@ object Dedup {
 
   /** The Bayardo hot→rare prefix index d14 scores over: per doc, running
     * squared-mass in df-desc order; a (term, doc_id) posting is indexed
-    * once the running mass reaches threshold² · ‖d‖². ONE definition,
-    * shared by [[prefixNearDup]] and the stage-volume probe
-    * (`tools/ProbeWidth`) so the probe's Σdf²/candidate numbers describe
-    * exactly what d14 executes — a hand-copied twin would silently drift.
-    * `norms` is taken as a parameter (not derived here) so the caller's
-    * already-built norms frame is reused and the plan shape is unchanged. */
+    * once the running mass reaches threshold² · ‖d‖² (PLANS.md r14
+    * (ProbeWidth) holds its stage volumes). `norms` is taken as a parameter
+    * (not derived here) so the caller's already-built norms frame is reused
+    * and the plan shape is unchanged. */
   private[graft] def prefixIndexFrame(posts: DataFrame,
                                       threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window

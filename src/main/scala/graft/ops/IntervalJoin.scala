@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * SCD2 9999-12-31 sentinel row from dragging the median to ~8000 years).
   * Median-length buckets mean a typical interval explodes to ≤ 2 bucket
   * rows while a typical bucket is spanned by O(1) intervals — the same
-  * measured-volume sizing used by Dedup.pairJoinWidth (Σdf² → width).
+  * measured-volume sizing used by Dedup.widthForVolume (Σdf² → width).
   */
 object IntervalJoin {
 

@@ -313,8 +313,8 @@ object Similarity {
     // max_by(struct(cell, emb, nrm), struct(cos, -cell)) had TWO struct
     // buffer fields; struct buffers are not UnsafeRow-mutable, so the whole
     // n×k reduction fell off the HashAggregate codegen fast path (measured
-    // at ×100 / k=800 / 160M candidate rows: 353 s warm vs 12 s — ProbeAnn
-    // lab, BASELINE.md round-16). The winner cell folds back onto `base`
+    // at ×100 / k=800 / 160M candidate rows: 353 s warm vs 12 s — BASELINE.md
+    // r16 (ProbeAnn)). The winner cell folds back onto `base`
     // with one narrow equi-join on vec_id (n rows — noise next to the
     // candidate stream).
     val win = b.select(col("vec_id"), col("emb"), col("nrm")).join(cent)
@@ -427,8 +427,8 @@ object Similarity {
       .select(col("vec_id"), asDouble(col("embedding")).as("emb"),
         l2norm(col("embedding")).as("nrm"))
       .filter(col("nrm") > 0)
-    // Sampled training (SemDeDup's own posture, measured ProbeAnn e2sample
-    // r18: 10% sample cuts the ×1000 wall 143.8 → 58.9 s, recall flat):
+    // Sampled training (SemDeDup's own posture, measured BASELINE.md r18
+    // (ProbeAnn e2sample): 10% sample cuts the ×1000 wall 143.8 → 58.9 s, recall flat):
     // seeds AND every Lloyd iteration read only the deterministic
     // md5-bucket sample; callers assign the FULL corpus against the
     // resulting centroids. Membership is hash arithmetic on vec_id (the
@@ -617,7 +617,7 @@ object Similarity {
     * sharing a coarse partition key (here: label) — the oracle-trivial
     * spec shape. The key bounds the pair space only as far as the key's
     * own cardinality: with a handful of labels over a grown corpus the
-    * within-label pair count is density-QUADRATIC (ProbeAnn measured 2.0B
+    * within-label pair count is density-QUADRATIC (BASELINE.md r16 (ProbeAnn): 2.0B
     * candidate pairs / 92.6 s at ×100), so the registered production
     * shape is [[embeddingNearDupCelled]], which composes the label with a
     * corpus-grown k-means cell. This form remains the recall ground truth
@@ -688,7 +688,7 @@ object Similarity {
     *   | label ∧ cell, 10% train, nprobe=1  | 0.225    | 0.121        |
     *   | label ∧ cell, 10% train, nprobe=2 (r19, REGISTERED) | **0.459** | **0.299** |
     *
-    * (ProbeAnn e2recall r18 / e2probe r19) — the cell blocking dominates
+    * (BASELINE.md r18/r19 (ProbeAnn e2recall / e2probe)) — the cell blocking dominates
     * every SRP width that is still scale-bounded, at the same
     * O(n²/(labels·k)) pair-space bound with k growing as √n. The
     * corpus-side nprobe=2 multi-probe ([[assignCellsMulti]]) recovers the
@@ -700,7 +700,7 @@ object Similarity {
     * Training cost is the d8 price: O(n·k) assignment per Lloyd iteration
     * over the 10% training sample, O(k·dims·iters) driver traffic.
     *
-    * 100-TB training posture (measured, ProbeAnn e2sample r18; REGISTERED
+    * 100-TB training posture (measured, BASELINE.md r18 (ProbeAnn e2sample); REGISTERED
     * r19 at `trainPct = 10` per the r18 verdict): train the Lloyd
     * iterations on a deterministic md5-bucket SAMPLE (the
     * Sampling.hashBucket convention — oracle-replayable) and assign the
@@ -741,7 +741,7 @@ object Similarity {
     * total cost ≈ c1·n·k (assignment) + c2·n²/k (within-cell pairs) is a
     * U-curve in k with optimum at k ≈ √(c2·n/c1), so k grows with the
     * corpus instead of letting per-cell density (the quadratic term) grow
-    * unbounded — ProbeAnn measured the k=8 stand-in at ~255 s / 2.5B
+    * unbounded — BASELINE.md r16 (ProbeAnn) has the k=8 stand-in at ~255 s / 2.5B
     * within-cell pairs at ×100 where k=800 ran 7.3 s. One driver-side
     * scalar (a count), same bounded-collect contract as the guard scalars. */
   def derivedCellCount(df: DataFrame, dims: Int = 64): Int = {

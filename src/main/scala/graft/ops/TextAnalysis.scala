@@ -108,7 +108,7 @@ object TextAnalysis {
     * contract, so the tokenizer regexp runs once per doc). Row-identical
     * to [[languageId]] (VietnameseTextSpec pins it).
     *
-    * MEASURED AND NOT REGISTERED (ProbeX5 x3 arm, ×1000/5M docs,
+    * MEASURED AND NOT REGISTERED (BASELINE.md r18 (ProbeX5 x3 arm), ×1000/5M docs,
     * hash-forced): the explode form wins here — 6.7 s vs 13.0 s warm —
     * the OPPOSITE of x5's 7.2× fold win. The crossover rule: the
     * higher-order fold is interpreted per element, so it pays a fixed
@@ -309,7 +309,7 @@ object TextAnalysis {
     * materializes; the only remaining shuffle is the content-hash dedup
     * group. Output is row-identical to [[cleanCorpus]] (OpsSpec pins the
     * equivalence); which form is FASTER is measured, not assumed — see
-    * BASELINE.md round 18 (ProbeX5) before switching a registration. */
+    * BASELINE.md r18 (ProbeX5) before switching a registration. */
   def cleanCorpusFold(df: DataFrame, textCol: String, minQuality: Double = 0.7,
                       keepLang: String = "en"): DataFrame = {
     val t = col(textCol)

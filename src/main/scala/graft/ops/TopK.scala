@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * them entirely, so swap shapes only where the ordering columns are
   * non-null or null rows are not wanted in the leaderboard. Which shape
   * wins is a GROUP-CARDINALITY crossover —
-  * measured at two decades in BASELINE.md round 17 (ProbeTopN): the
+  * measured at two decades in BASELINE.md r17 (ProbeTopN): the
   * aggregate wins while the per-task group table stays cache-resident,
   * the window's flat-row sort wins 3–4× once groups number in the
   * millions. Pick by corpus shape; LexTopK's Scaladoc carries the rule. */

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the scaling-probe corpus (PLANS.md "Scaling probe"): the sf
@@ -14,7 +13,7 @@ import org.apache.spark.sql.functions._
   *   runMain graft.tools.ScaleCorpus <srcSfDir> <outDir> <factor> [exact]
   *
   * Writes `<outDir>/documents.parquet` and `<outDir>/embeddings.parquet`
-  * with ids offset per replica; point TimeQueries at <outDir> for any
+  * with ids offset per replica; point `Prof time` at <outDir> for any
   * documents/embeddings-only query.
   *
   * A 4th arg `exact` switches the documents replicas to EXACT duplicates
@@ -40,10 +39,7 @@ object ScaleCorpus {
       s"unknown mode '${args(3)}': accepted 4th args are 'exact' and 'dims768'")
     val exactMode = args.length > 3 && args(3) == "exact"
     val dims768Mode = args.length > 3 && args(3) == "dims768"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.cpus, graft.Session.cpus)
     // Replication shape: a broadcast cross-join against spark.range(factor)
     // — ONE plan node regardless of factor, where the original factor-way
     // unionByName built an O(factor) plan that the analyzer/optimizer walk

@@ -287,15 +287,30 @@ class OpsSpec extends SparkSpec {
 
   test("pair-join width derives from candidate volume, floored at session width") {
     val conf = spark.sessionState.conf.numShufflePartitions
-    // tiny volume: stays at the configured width
+    // tiny volume (this corpus's Σ_rows df): stays at the configured width
     val (_, posts, _) = Dedup.cappedPostingsWithTf(docs, "text", 2, 1.0, 1000)
-    assert(Dedup.pairJoinWidth(posts) == conf)
-    // synthetic posting frame with sum(df) = 9e9 -> ceil(9e9/512e3) = 17579
+    val vol = posts.agg(sum(col("df"))).head().getLong(0)
+    assert(Dedup.widthForVolume(conf, vol) == conf)
+    // Σdf = 9e9 -> ceil(9e9/512e3) = 17579
     // (r19: budget lowered 4M -> 512k so the pair join's partial-agg map
     // stays ~25 MB/task — the measured spill-free regime)
-    val fat = Seq(("t", 0L, 3L, 3000000000L), ("u", 1L, 2L, 6000000000L))
-      .toDF("term", "doc_id", "tf", "df")
-    assert(Dedup.pairJoinWidth(fat) == 17579)
+    assert(Dedup.widthForVolume(conf, 9000000000L) == 17579)
+  }
+
+  test("a failing posting pin leaves no doc-count job behind") {
+    // Each row sleeps, so the concurrent doc count (4 tasks × ~10 s) is still
+    // running when the pin fails on the missing text column.
+    val slowId = udf { (id: Long) => Thread.sleep(20); id }.asNondeterministic()
+    val noText = spark.range(0, 2000, 1, 4).select(slowId(col("id")).as("doc_id"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Dedup.cappedPostingsWithTf(noText, "text", 2, 1.0, 1000)
+    }
+    // An orphaned count is submitted only after its planning (~2 s on a cold
+    // session), so watch for a while: no job may run once the call is over.
+    for (_ <- 1 to 16) {
+      Thread.sleep(250)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    }
   }
 
   test("recall guard: loud failure in the zero-recall regime, silent when healthy") {

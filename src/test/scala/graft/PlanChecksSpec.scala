@@ -228,7 +228,7 @@ class PlanChecksSpec extends SparkSpec {
     // The r16 keep-first is min(doc_id*K + pos) precisely so the heaviest
     // stage hash-aggregates with map-side combine; a regression to the
     // struct-min shape would plan SortAggregate and re-sort every partition
-    // of the exploded corpus (ProbeChunk measured the difference — see
+    // of the exploded corpus (BASELINE.md r16 (ProbeChunk) has the difference — see
     // ops/Dedup.chunkDedup's Scaladoc). The rebuild's collect_list
     // legitimately plans ObjectHashAggregate; only SortAggregate is the
     // regression signal.

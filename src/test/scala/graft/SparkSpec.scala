@@ -3,23 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one JVM-wide session, UTC, small shuffle
-  * fan-out (local[4] is plenty for unit-scale frames). */
+/** Shared local session for specs — one JVM-wide session built like every
+  * main's, at local[4] with 4 shuffle partitions (plenty for unit-scale
+  * frames, and the partitioning regime the plan pins assume). */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.build(cpus = 4, width = 4)
 }

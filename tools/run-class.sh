@@ -1,11 +1,15 @@
 #!/usr/bin/env bash
 # Run a graft main class against the sbt-compiled classes WITHOUT sbt —
-# avoids the sbt build lock so probes/benches can run while a test suite
+# avoids the sbt build lock so profiles/benches can run while a test suite
 # compiles, and starts ~10 s faster. Mirrors build.sbt's forked-run JVM
 # setup (JDK17 add-opens, UTC, UI off, 8g default heap).
 #   tools/run-class.sh graft.Bench
 #   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 tools/run-class.sh graft.Bench
 #   tools/run-class.sh graft.Explain /root/testdata/sf0.001 d13_lexical_neardup
+#   tools/run-class.sh graft.tools.Prof time /root/testdata/sf0.1 d6_dup_clusters
+#   SPARK_GRAFT_CPUS=32 tools/run-class.sh graft.tools.Prof stages /root/testdata/sf0.1 d13_lexical_neardup
+#   tools/run-class.sh graft.tools.Prof jobs /root/testdata/sf0.1 d14_prefix_neardup
+#   tools/run-class.sh graft.tools.Prof replay /root/testdata/sf0.1 sess_stream_replay
 set -euo pipefail
 cd "$(dirname "$0")/.."
 # SPARK_EXTRA_JARS keeps parity with build.sbt's forked run (the opt-in
