@@ -921,8 +921,8 @@ object SparkEntry {
     // the one-shot batch arbitration: exactly-once recovery semantics
     // certified end-to-end, same oracle as the steady-state replay.
     ("s2_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replayUpsertRestart(s, ev(s, d),
-        stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replayUpsertDaily(s, ev(s, d),
+        killAfterBatches = 2, stageKey = Some(d)),
       Some(upsertDailyOracle)),
 
     // ---- S2 LITERAL-EXCEL leg (r14 verdict #3): the reference's watcher
@@ -943,8 +943,8 @@ object SparkEntry {
     // deserializeOffset + seen-file diff under test — and the idempotent
     // per-batchId sink absorbs the replayed workbook. Same oracle.
     ("s2_xlsx_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replayXlsxStreamRestart(s,
-        Tables(s, d, "customer"), stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replayXlsxStream(s,
+        Tables(s, d, "customer"), killAfterBatches = 2, stageKey = Some(d)),
       Some(xlsxReplayOracle)),
 
     // ---- T1 (§2.5): the watermarked STREAMING dedup under the oracle gate —
@@ -979,8 +979,8 @@ object SparkEntry {
     // rows-seen arbitration. Oracle: the same one-shot batch aggregate as
     // the steady-state replay.
     ("gpa_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replayStatefulGpaRestart(s, ev(s, d),
-        EventsAdapter.ExcludedSemester, stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replayStatefulGpa(s, ev(s, d),
+        EventsAdapter.ExcludedSemester, killAfterBatches = 2, stageKey = Some(d)),
       Some(gpaReplayOracle)),
 
     // ---- §2.5 event-time TIMERS under the oracle gate: SessionTimeout
@@ -1000,8 +1000,8 @@ object SparkEntry {
     // (user_id, start_ms) dedup. Oracle: the steady replay's batch
     // sessionization.
     ("sess_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replaySessionSummariesRestart(s,
-        ev(s, d), stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replaySessionSummaries(s,
+        ev(s, d), killAfterBatches = 2, stageKey = Some(d)),
       Some(sessReplayOracle)),
 
     ("sess_stream_replay",
@@ -1032,8 +1032,8 @@ object SparkEntry {
     // hash gate. Re-emitted pairs absorbed by (l_id, r_id) dedup. Oracle:
     // the steady replay's batch theta-join.
     ("ssjoin_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replayIntervalJoinRestart(s, ev(s, d),
-        stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replayIntervalJoin(s, ev(s, d),
+        killAfterBatches = 1, stageKey = Some(d)),
       Some(ssjoinReplayOracle)),
 
     // ---- §2.5 stream-stream LEFT-OUTER interval join under the gate: the
@@ -1053,8 +1053,8 @@ object SparkEntry {
     // never-matched lefts (their nulls never emit). Completes the restart
     // family: every §2.5 replay now has a crash-recovery twin.
     ("ssjoin_outer_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replayIntervalJoinOuterRestart(s,
-        ev(s, d), stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replayIntervalJoinOuter(s,
+        ev(s, d), killAfterBatches = 1, stageKey = Some(d)),
       Some(ssjoinOuterReplayOracle)),
 
     // ---- §2.5 watermarked-dedup state recovery under the gate: the
@@ -1062,8 +1062,8 @@ object SparkEntry {
     // classify the replayed batch's first occurrences as already-seen and
     // DROP them — missing rows, caught by the hash gate.
     ("t1_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replayStreamDedupRestart(s,
-        docs(s, d), stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replayStreamDedup(s,
+        docs(s, d), killAfterBatches = 2, stageKey = Some(d)),
       Some(streamDedupOracle)),
 
     // ---- s8: SCD Type-2 history — the keep-ALL-versions complement to s5's
@@ -1139,8 +1139,8 @@ object SparkEntry {
     // overwrite sink replaces the orphaned output instead, so the settled
     // result must still equal the one-shot split — same oracle.
     ("s4_dlq_restart_replay",
-      (s, d) => graft.streaming.Pipeline.replayDeadLetterRestart(s, docs(s, d),
-        stageKey = Some(d)),
+      (s, d) => graft.streaming.Pipeline.replayDeadLetter(s, docs(s, d),
+        killAfterBatches = 2, stageKey = Some(d)),
       Some(corruptAuditOracle)),
 
     // ---- S4 (salvage leg): replay-after-fix over the dead-letter shape —

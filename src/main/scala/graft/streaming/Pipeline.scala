@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.Row
 import graft.etl.{Enrich, Ingest, Upsert}
 import graft.model.Schemas
+import graft.util.{StageMemo, TempRoots}
 
 /** Structured-Streaming wiring for the reference's pipeline
   * (SURVEY.md §2.1 S2-S5, §2.5):
@@ -20,185 +21,6 @@ import graft.model.Schemas
   * reference's in-memory hash state lost on restart, `pro.py:18`).
   */
 object Pipeline {
-
-  /** Replay-harness staging root, deleted on JVM exit: each batch-replay
-    * stages a corpus copy plus checkpoint/sink dirs under /tmp, and a
-    * driver that runs the oracle gate repeatedly would otherwise accrete
-    * them unboundedly. Deletion is deferred to exit (not eager) because the
-    * returned DataFrames lazily re-read the staged sink until the caller's
-    * final action. */
-  // One static hook draining a queue of registered roots (review finding:
-  // a hook Thread PER ROOT would accrete without bound) — shared with the
-  // jsonl round-trip staging in graft.util.TempRoots.
-  private def replayTempRoot(prefix: String): java.nio.file.Path =
-    graft.util.TempRoots.create(prefix)
-
-  /** Staged-INPUT memo (the l3 memoization pattern): each replay's input
-    * staging — the range-split write plus its premise scalars (watermark
-    * horizon, straddling-key check, sentinel timestamp) — is a pure
-    * function of the source table, so a JVM that invokes the same replay
-    * repeatedly (oracle gate + bench passes + determinism sweep) pays it
-    * once per `stageKey`. What each invocation still runs IN FULL is
-    * everything the replay certifies: file-source discovery, one
-    * micro-batch per staged file, checkpointed offsets, the state store,
-    * the sink write and re-read — those always get FRESH ckpt/out dirs
-    * (a reused checkpoint would no-op-resume and certify nothing).
-    * `stageKey = None` (the default) disables the memo for callers that
-    * stage ad-hoc frames. Memoized roots ride the same exit-time cleanup
-    * as ad-hoc ones. Every SHAPE parameter of the staging (nFiles for all
-    * replays; gapMs/withinMs where they bake into sentinel timestamps)
-    * must ride in the tag — two same-key calls with different shapes would
-    * otherwise silently reuse the first call's staging (r10 advice), and
-    * the staged FRAME's plan identity rides in the key as a semantic hash
-    * (r14 advice: the stageKey names the corpus, but a same-key caller
-    * staging a DIFFERENT frame — e.g. a filtered slice — must stage
-    * independently). The implementation is [[graft.util.StageMemo]] — ONE
-    * definition shared with Tabular's corrupt-JSONL staging, so the key
-    * invariants can't drift between the two sites (review finding). */
-  private def memoStage[T <: AnyRef](stageKey: Option[String], tag: String,
-                                     staged: DataFrame*)(build: => T): T =
-    graft.util.StageMemo(stageKey, tag, staged: _*)(build)
-
-  /** Shared crash-detection for the restart legs: run the drain, demand the
-    * injected failure, and re-throw anything that is NOT the injected crash.
-    * The failure surfaces as a StreamingQueryException carrying the marker
-    * in its cause chain; a clean drain means the injection never fired and
-    * the leg certified nothing — fail loudly. */
-  private def expectInjectedCrash(mark: String)(drain: => Unit): Unit =
-    try { drain; sys.error("crash was injected but query drained cleanly") }
-    catch {
-      case e: org.apache.spark.sql.streaming.StreamingQueryException =>
-        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
-          .map(t => Option(t.getMessage).getOrElse("")).toSeq
-        if (!msgs.exists(_.contains(mark))) throw e
-    }
-
-  /** Actual staged micro-batch count: `repartitionByRange(nFiles, …)` emits
-    * only NON-EMPTY partitions (it clamps to the distinct sampled boundary
-    * values), so a small or skewed corpus can stage fewer files than
-    * requested — and a restart leg's `killAfterBatches < nFiles` premise
-    * would silently hold against a number of batches that never existed.
-    * The restart legs re-check against THIS count (review finding). */
-  private def stagedPartCount(dir: String, ext: String = ".parquet"): Int = {
-    val fs = new java.io.File(dir).listFiles()
-    if (fs == null) 0
-    else fs.count(f => f.getName.startsWith("part-") && f.getName.endsWith(ext))
-  }
-
-  private def requireRealBatchAfterCrash(killAfterBatches: Int, realBatches: Int,
-                                         what: String): Unit =
-    require(killAfterBatches < realBatches,
-      s"$what staged only $realBatches real micro-batches " +
-        s"(repartitionByRange clamps empty partitions); killAfterBatches=" +
-        s"$killAfterBatches would leave no fresh data for the recovery query")
-
-  /** Copy the part files of `srcDirs` (in sequence; name-sorted within each)
-    * into `destDir` with strictly increasing mtimes AND an order-pinning
-    * filename prefix — the file source (oldest-first, one file per trigger)
-    * then replays them in exactly this order, with the name prefix breaking
-    * ties even on coarse-mtime filesystems. Event-time ordering of staged
-    * files is correctness-critical for the session/outer replays; ONE
-    * implementation serves both (review finding: two hand-rolled copies). */
-  private def layOrdered(srcDirs: Seq[String], destDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import java.nio.file.attribute.FileTime
-    Files.createDirectories(Paths.get(destDir))
-    val base = System.currentTimeMillis()
-    var slot = 0
-    for (src <- srcDirs;
-         f <- new java.io.File(src).listFiles().sortBy(_.getName)
-           if f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) {
-      val dst = Paths.get(destDir, f"$slot%03d-" + f.getName)
-      Files.copy(f.toPath, dst)
-      Files.setLastModifiedTime(dst, FileTime.fromMillis(base + slot * 10000L))
-      slot += 1
-    }
-  }
-
-  /** Stateful fan-out cap for the replay harness. Every stateful streaming
-    * operator holds `spark.sql.shuffle.partitions` state-store instances
-    * (a stream-stream join holds FOUR per partition), and every micro-batch
-    * loads, commits and snapshots all of them even when the batch carries a
-    * handful of rows — so a staged replay's machinery cost is
-    * partitions × batches × stores while its data cost is near zero. At
-    * bench fan-out (32) that is hundreds of store commits per replay for
-    * corpora of a few thousand rows. Scope the fan-out down to
-    * min(current, 8) for one replay run: the conf is read at stream-query
-    * start (each run gets a FRESH checkpoint, so the state partition count
-    * is self-consistent), and restored afterwards. The emitted SET is
-    * partition-count-independent — exactly the invariant the replays'
-    * set-shaped oracles hash and DeterminismSpec certifies batch-side — so
-    * this changes nothing about what the replays certify: batch cuts are
-    * per staged FILE, not per partition. At real scale a stream carries
-    * real per-batch volume and wants the full fan-out; this is a
-    * replay-harness knob, not an operator default. Tests run at 4
-    * partitions already — min() keeps them byte-identical.
-    * SPARK_GRAFT_STATE_SHUFFLE overrides the width EXACTLY (up or down;
-    * validated positive-integer) for the scale probes, where the state
-    * width IS the experiment. */
-  private def withReplayFanout[T](spark: SparkSession)(body: => T): T =
-    // Serialized on a monitor: the save/set/restore below mutates a
-    // session-GLOBAL conf, so two concurrent replays on one SparkSession
-    // could interleave and a late restore would write back the temporary
-    // width, permanently capping the session (ADVICE r11). Replays are
-    // driver-sequential today; the lock makes that assumption enforced
-    // rather than assumed.
-    //
-    // The width this sets is the replay's STATE width: a streaming query
-    // pins its state-store partition count from spark.sql.shuffle.partitions
-    // at first checkpoint, so this — not the session width outside the
-    // block — decides how many RocksDB instances the live keys spread
-    // over. The default clamp (8) fits the gate corpora, where wider state
-    // is pure per-partition overhead. Scale probes override it with
-    // SPARK_GRAFT_STATE_SHUFFLE (mirroring SPARK_GRAFT_SHUFFLE): at ×1000
-    // the sess replay carries ~43M live session keys, and the clamp packs
-    // them into 8 RocksDB instances at ~5.4M keys each — the exact cost a
-    // real cluster answers by widening state partitions. SIZING RULE
-    // (measured U-curve, BASELINE.md rounds 17-18, 43M keys / 32 cores):
-    // 8 → 503 s, 256 → 256 s, 512 → 338 s, 1024 → 339 s min-of-passes.
-    // The knee sits at ~8 state partitions per core (~170k keys per
-    // RocksDB instance here); past it, per-instance PER-BATCH lifecycle
-    // (open/commit/snapshot) grows linearly in width while the key-side
-    // win is already amortized, so width = min(keys / ~150k, ~8 × total
-    // cores) — width is a query-start decision, so size it to the
-    // projected LIVE-key plateau, not the first batch. Checkpoint
-    // compatibility is not a concern here: every replay starts from a
-    // fresh checkpoint dir.
-    replayConfLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val saved = spark.conf.get(key)
-      // The env override must fail LOUDLY on junk (same rule as the
-      // rowsPerBand sentinel): a typo'd value would otherwise run a
-      // state-width measurement silently at the default clamp and ledger
-      // a wrong number.
-      val target = sys.env.get("SPARK_GRAFT_STATE_SHUFFLE").map { s =>
-        val t = scala.util.Try(s.toInt).getOrElse(throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STATE_SHUFFLE must be a positive integer; got '$s'"))
-        require(t > 0,
-          s"SPARK_GRAFT_STATE_SHUFFLE must be a positive integer; got $t")
-        t
-      }
-      // An EXPLICIT override always applies — even when the session value
-      // is non-integer (e.g. "auto" on managed platforms) and can't be
-      // compared to it. The old (parsed, target) match let that case fall
-      // through to the bare-body arm, silently running a state-width probe
-      // at an unknown width — the wrong-ledger failure the fail-loud
-      // validation above exists to prevent (ADVICE r17). The saved STRING
-      // is restored verbatim either way. Only the no-override default
-      // clamp still needs the parse: an unparseable width can't be
-      // compared to the clamp, so it runs as-is.
-      (scala.util.Try(saved.toInt).toOption, target) match {
-        case (_, Some(t)) if saved != t.toString => // probe: exact-set, up or down
-          spark.conf.set(key, t.toString)
-          try body finally spark.conf.set(key, saved)
-        case (Some(n), None) if n > 8 => // default: min(current, 8)
-          spark.conf.set(key, "8")
-          try body finally spark.conf.set(key, saved)
-        case _ => body
-      }
-    }
-
-  private val replayConfLock = new Object
 
   /** S2: streaming file source over a watched directory. Spark's file source
     * discovers *new* files; the reference's modified-file re-processing is
@@ -435,1084 +257,495 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
 
-  /** S2+S5 end-to-end BATCH-REPLAY: stage `events` as `nFiles` parquet
-    * splits, stream them through the real file source (`maxFilesPerTrigger
-    * = 1` → one micro-batch per file, AvailableNow to drain and stop), and
-    * foreachBatch-merge every batch into a date-partitioned store keyed
+  // ---- §2.5 batch replays ------------------------------------------------
+  // Every replay below is one function over `Replay.run`: the rung stages
+  // its input (memoized per `stageKey` through StageMemo, so a JVM that runs
+  // the same replay repeatedly stages it once; every SHAPE parameter of a
+  // staging rides in its memo tag) and hands the harness its stream, sink,
+  // output mode and settle step. `killAfterBatches = 0` is the steady replay;
+  // `k > 0` crashes after batch k and recovers on the same checkpoint, and
+  // the settled result must equal the steady one under the same oracle.
+
+  /** One micro-batch per staged parquet file. */
+  private def parquetStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(dir).schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir)
+
+  private def appendTo(out: String): (DataFrame, Long) => Unit =
+    (batch: DataFrame, _: Long) => batch.write.mode("append").parquet(out)
+
+  /** Copy the part files of `srcDirs` (in sequence; name-sorted within each)
+    * into `destDir` with strictly increasing mtimes AND an order-pinning
+    * filename prefix — the file source (oldest-first, one file per trigger)
+    * then replays them in exactly this order, with the name prefix breaking
+    * ties even on coarse-mtime filesystems. Event-time ordering of staged
+    * files is correctness-critical for the session/outer replays. */
+  private def layOrdered(srcDirs: Seq[String], destDir: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    import java.nio.file.attribute.FileTime
+    Files.createDirectories(Paths.get(destDir))
+    val base = System.currentTimeMillis()
+    var slot = 0
+    for (src <- srcDirs;
+         f <- new java.io.File(src).listFiles().sortBy(_.getName)
+           if f.getName.startsWith("part-") && f.getName.endsWith(".parquet")) {
+      val dst = Paths.get(destDir, f"$slot%03d-" + f.getName)
+      Files.copy(f.toPath, dst)
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(base + slot * 10000L))
+      slot += 1
+    }
+  }
+
+  /** S2+S5 end-to-end BATCH-REPLAY: `events` staged as `nFiles` parquet
+    * splits, streamed through the real file source one micro-batch per file,
+    * and foreachBatch-merged into a date-partitioned store keyed
     * (user_id, ingest_date) — the daily-upsert shape T9 routes into. The
-    * settled table is returned for the cross-engine correctness gate: it
-    * must equal the one-shot batch arbitration (latest (ts, event_id) per
-    * key), which holds for ANY batch cut because latest-wins is commutative
+    * settled table must equal the one-shot batch arbitration (latest
+    * (ts, event_id) per key) for ANY batch cut: latest-wins is commutative
     * and associative across batches once the partition column is a function
     * of the key (a key's versions always land in the same partition, so
-    * dynamic partition overwrite can never strand a stale winner in an
-    * untouched partition).
+    * dynamic partition overwrite can never strand a stale winner).
     *
-    * This is what promotes the streaming leg (S2 file source, checkpointed
-    * offsets, foreachBatch upsert) from sbt-only coverage into the DuckDB
-    * oracle gate. */
-  /** Shared s2 staging — ONE builder for the steady and restart legs (same
-    * rationale as [[stagedDedupSrc]]; this was the one pair the round-13
-    * extraction missed). Staged through Spark so the files carry micros
-    * timestamps (the raw testdata is TIMESTAMP(NANOS), which the batch
-    * Tables loader already normalizes). The range split is just a file
-    * cut — the result is provably independent of how rows land in files. */
-  private def stagedUpsertSrc(spark: SparkSession, events: DataFrame,
-                              nFiles: Int, stageKey: Option[String]): String =
-    memoStage(stageKey, s"s2|$nFiles", events) {
-      val root = replayTempRoot("graft_s2_replay_")
-      events.repartitionByRange(nFiles, col("event_id"))
-        .write.mode("overwrite").parquet(s"$root/src")
-      s"$root/src"
-    }
-
+    * Crash leg (offsets + idempotent sink): the replayed, unacknowledged
+    * batch is merged twice and the keyed latest-wins merge absorbs it —
+    * exactly-once END-TO-END, the reference's manual-commit contract
+    * (`con.py:18,79-88`) certified by the gate rather than asserted.
+    *
+    * Staged through Spark so the files carry micros timestamps (the raw
+    * testdata is TIMESTAMP(NANOS), which the batch Tables loader already
+    * normalizes). */
   def replayUpsertDaily(spark: SparkSession, events: DataFrame,
-                        nFiles: Int = 4,
-                        stageKey: Option[String] = None): DataFrame = {
-    val src = stagedUpsertSrc(spark, events, nFiles, stageKey)
-    val run = replayTempRoot("graft_s2_run_")
-    val tgt = s"$run/tgt"; val ckpt = s"$run/ckpt"
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .withColumn("ingest_date", to_date(col("ts")))
-    withReplayFanout(spark) {
-      val q = stream.writeStream
-        .foreachBatch(Upsert.foreachBatchMerge(tgt,
+                        nFiles: Int = 4, killAfterBatches: Int = 0,
+                        stageKey: Option[String] = None): DataFrame =
+    Replay.run(spark, "s2", nFiles, killAfterBatches) { out =>
+      val src = StageMemo(stageKey, s"s2|$nFiles", events) {
+        val root = TempRoots.create("graft_s2_replay_")
+        events.repartitionByRange(nFiles, col("event_id"))
+          .write.mode("overwrite").parquet(s"$root/src")
+        s"$root/src"
+      }
+      Replay.Rung(
+        stream = () => parquetStream(spark, src)
+          .withColumn("ingest_date", to_date(col("ts"))),
+        sink = Upsert.foreachBatchMerge(out,
           keyCols = Seq("user_id", "ingest_date"), tsCol = "ts",
-          tieCol = "event_id", partitionCol = "ingest_date"))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+          tieCol = "event_id", partitionCol = "ingest_date"),
+        settle = () => spark.read.parquet(out)
+          .select(col("user_id"), col("ingest_date"), col("event_id"),
+            col("event_type"), col("value"), col("ts")),
+        realBatches = () => Replay.partCount(src))
     }
-    spark.read.parquet(tgt)
-      .select(col("user_id"), col("ingest_date"), col("event_id"),
-        col("event_type"), col("value"), col("ts"))
-  }
 
-  /** S2-over-xlsx staging: the corpus split into `nFiles` REAL workbooks,
-    * written from inside executors (foreachPartition → XlsxWriter over the
-    * Hadoop FileSystem — no driver collect; a cluster would land the same
-    * files on the shared store). Values are stringified IN the frame
-    * before writing so every staged cell is a shared-string entry and the
+  /** S2 LITERAL-EXCEL replay (r14 verdict #3): the reference's watcher fires
+    * on `.xlsx` files specifically (`pro.py:96-108`). Real workbooks staged
+    * one per micro-batch through `readStream.format("xlsx")` (the source's
+    * own MicroBatchStream: seen-file offsets in the checkpoint, per-file
+    * partitions, admission-controlled discovery), landed via the per-batchId
+    * idempotent overwrite sink, settled and re-read. The oracle is the plain
+    * batch projection: the Excel round trip plus the streaming machinery
+    * must lose and invent nothing, byte-for-byte. Crash leg: the recovery
+    * query's `deserializeOffset` + seen-file diff is the machinery under
+    * test, and the replayed workbook's overwrite replaces its orphaned
+    * output.
+    *
+    * Staging writes the workbooks from inside executors (foreachPartition →
+    * XlsxWriter over the Hadoop FileSystem — no driver collect), with values
+    * stringified IN the frame so every cell is a shared-string entry and the
     * DuckDB oracle's `CAST(.. AS VARCHAR)` predicts each byte. */
-  private def stagedXlsxSrc(spark: SparkSession, customer: DataFrame,
-                            nFiles: Int, stageKey: Option[String]): String =
-    memoStage(stageKey, s"s2xlsx|$nFiles", customer) {
-      val root = replayTempRoot("graft_xlsx_stage_")
-      val dir = s"$root/src"
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val header: Seq[Any] = XlsxReplayCols
-      val hconf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      customer
-        .select(col("c_custkey").cast("string").as("c_custkey"),
-          col("c_name"), col("c_mktsegment"))
-        .repartitionByRange(nFiles, col("c_custkey"))
-        .foreachPartition { (it: Iterator[Row]) =>
-          // one workbook per non-empty partition; rows buffered in memory —
-          // XlsxWriter ENFORCES the Excel sheet cap, so an undersized
-          // nFiles fails loud here instead of emitting unopenable workbooks
-          val rows = it.map(r =>
-            Seq[Any](r.getString(0), r.getString(1), r.getString(2))).toSeq
-          if (rows.nonEmpty) {
-            val pid = org.apache.spark.TaskContext.getPartitionId()
-            val p = new org.apache.hadoop.fs.Path(f"$dir/part-$pid%05d.xlsx")
-            val out = p.getFileSystem(hconf.value).create(p, true)
-            try graft.sources.xlsx.XlsxWriter.writeTo(out, header +: rows)
-            finally out.close()
-          }
-        }
-      dir
-    }
-
-  /** S2 LITERAL-EXCEL replay (r14 verdict #3, missing #2): the reference's
-    * watcher fires on `.xlsx` files specifically (`pro.py:96-108`); this
-    * leg runs that exact composition — real workbooks staged one per
-    * micro-batch through `readStream.format("xlsx")` (the source's own
-    * MicroBatchStream: seen-file offsets in the checkpoint, per-file
-    * partitions, admission-controlled discovery), landed via the
-    * per-batchId idempotent overwrite sink, settled and re-read for the
-    * cross-engine gate. The oracle is the plain batch projection of the
-    * same table: the Excel round trip plus the streaming machinery must
-    * lose and invent nothing, byte-for-byte. */
   def replayXlsxStream(spark: SparkSession, customer: DataFrame,
-                       nFiles: Int = 4,
-                       stageKey: Option[String] = None): DataFrame = {
-    val src = stagedXlsxSrc(spark, customer, nFiles, stageKey)
-    val run = replayTempRoot("graft_xlsx_run_")
-    val store = s"$run/store"; val ckpt = s"$run/ckpt"
-    new java.io.File(store).mkdirs()
-    withReplayFanout(spark) {
-      val q = xlsxReplayStream(spark, src).writeStream
-        .foreachBatch(xlsxBatchSink(store) _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+                       nFiles: Int = 4, killAfterBatches: Int = 0,
+                       stageKey: Option[String] = None): DataFrame =
+    Replay.run(spark, "xlsx", nFiles, killAfterBatches) { out =>
+      val src = StageMemo(stageKey, s"s2xlsx|$nFiles", customer) {
+        val dir = s"${TempRoots.create("graft_xlsx_stage_")}/src"
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+        val header: Seq[Any] = XlsxReplayCols
+        val hconf = new org.apache.spark.util.SerializableConfiguration(
+          spark.sessionState.newHadoopConf())
+        customer
+          .select(col("c_custkey").cast("string").as("c_custkey"),
+            col("c_name"), col("c_mktsegment"))
+          .repartitionByRange(nFiles, col("c_custkey"))
+          .foreachPartition { (it: Iterator[Row]) =>
+            // one workbook per non-empty partition; XlsxWriter ENFORCES the
+            // Excel sheet cap, so an undersized nFiles fails loud here
+            val rows = it.map(r =>
+              Seq[Any](r.getString(0), r.getString(1), r.getString(2))).toSeq
+            if (rows.nonEmpty) {
+              val pid = org.apache.spark.TaskContext.getPartitionId()
+              val p = new org.apache.hadoop.fs.Path(f"$dir/part-$pid%05d.xlsx")
+              val os = p.getFileSystem(hconf.value).create(p, true)
+              try graft.sources.xlsx.XlsxWriter.writeTo(os, header +: rows)
+              finally os.close()
+            }
+          }
+        dir
+      }
+      new java.io.File(out).mkdirs()
+      val schema = org.apache.spark.sql.types.StructType(XlsxReplayCols.map(n =>
+        org.apache.spark.sql.types.StructField(n,
+          org.apache.spark.sql.types.StringType, nullable = true)))
+      Replay.Rung(
+        stream = () => spark.readStream.format("xlsx").schema(schema)
+          .option("maxFilesPerTrigger", "1").load(src),
+        sink = (b: DataFrame, id: Long) =>
+          b.write.mode("overwrite").parquet(s"$out/batch=$id"),
+        // Pinned schema: an empty corpus stages zero workbooks, so there is
+        // no parquet to infer from and the settle must read back empty.
+        settle = () => spark.read.schema(schema).parquet(out)
+          .select(XlsxReplayCols.map(col): _*),
+        realBatches = () => Replay.partCount(src, ext = ".xlsx"))
     }
-    xlsxSettled(spark, store)
-  }
 
-  /** One projection + schema + sink + settle for BOTH xlsx legs (the
-    * one-definition-per-pair convention the oracle table enforces for SQL:
-    * a one-sided edit can no longer gate the twins against different
-    * shapes). */
   private val XlsxReplayCols = Seq("c_custkey", "c_name", "c_mktsegment")
-  private def xlsxReplaySchema = org.apache.spark.sql.types.StructType(
-    XlsxReplayCols.map(n => org.apache.spark.sql.types.StructField(n,
-      org.apache.spark.sql.types.StringType, nullable = true)))
-  private def xlsxReplayStream(spark: SparkSession, src: String): DataFrame =
-    spark.readStream.format("xlsx").schema(xlsxReplaySchema)
-      .option("maxFilesPerTrigger", "1")
-      .load(src)
-  private def xlsxBatchSink(store: String)(b: DataFrame, id: Long): Unit =
-    b.write.mode("overwrite").parquet(s"$store/batch=$id")
-  private def xlsxSettled(spark: SparkSession, store: String): DataFrame =
-    // Pinned schema (the dlqSettled convention): a legitimately-empty
-    // corpus stages zero workbooks → zero batches → no parquet to infer
-    // from; without the pin the settle crashes instead of returning an
-    // empty frame (review finding).
-    spark.read.schema(xlsxReplaySchema).parquet(store)
-      .select(XlsxReplayCols.map(col): _*)
-
-  /** Crash-recovery twin of [[replayXlsxStream]] (8th member of the restart
-    * family): the first query crashes inside foreachBatch after the k-th
-    * batch's sink write lands and before its offset commits; a second query
-    * reopens the checkpoint — which makes the custom source's
-    * `deserializeOffset` + seen-file diff the machinery under test — re-runs
-    * the unacknowledged workbook (its per-batchId overwrite replaces the
-    * orphaned output), and drains the rest. Same oracle as the steady leg. */
-  def replayXlsxStreamRestart(spark: SparkSession, customer: DataFrame,
-                              nFiles: Int = 4, killAfterBatches: Int = 2,
-                              stageKey: Option[String] = None): DataFrame = {
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    val src = stagedXlsxSrc(spark, customer, nFiles, stageKey)
-    requireRealBatchAfterCrash(killAfterBatches,
-      stagedPartCount(src, ext = ".xlsx"), "s2 xlsx restart")
-    val run = replayTempRoot("graft_xlsxr_run_")
-    val store = s"$run/store"; val ckpt = s"$run/ckpt"
-    new java.io.File(store).mkdirs()
-    val CrashMark = "graft-simulated-crash-post-xlsx-write-pre-commit"
-    withReplayFanout(spark) {
-      val written = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q1 = xlsxReplayStream(spark, src).writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          xlsxBatchSink(store)(b, id)
-          if (written.incrementAndGet() == killAfterBatches)
-            throw new RuntimeException(CrashMark)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      expectInjectedCrash(CrashMark)(q1.awaitTermination())
-      val q2 = xlsxReplayStream(spark, src).writeStream
-        .foreachBatch(xlsxBatchSink(store) _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-    }
-    xlsxSettled(spark, store)
-  }
 
   /** S4 DEAD-LETTER replay — the pipeline half of warn-and-keep: counting
     * junk ([[consumerTransform]]'s observed metric) is monitoring; a real
-    * ingest pipeline also needs the junk ITSELF to land somewhere
-    * queryable for triage and replay-after-fix. The corrupt-line fixture
-    * (same injection as `s3_s4_corrupt_audit` — one definition,
-    * [[graft.sources.Tabular.corruptJsonlLines]]) is staged as `nFiles`
-    * text splits and streamed through the REAL file text source one
-    * micro-batch per file (AvailableNow drain). Each foreachBatch runs the
-    * S4 PERMISSIVE parse ONCE (persisted, so the split does not recompute
-    * the source) and routes it two ways: parsed rows to the store table,
-    * corrupt rows (raw payload) to the dead-letter table. Both tables are
-    * re-read after settle and returned as one frame, so the DuckDB oracle
-    * predicts every byte on both sides.
+    * ingest pipeline also needs the junk ITSELF to land somewhere queryable
+    * for triage and replay-after-fix. The corrupt-line fixture (one
+    * definition with `s3_s4_corrupt_audit`,
+    * [[graft.sources.Tabular.corruptJsonlLines]]) is staged as `nFiles` text
+    * splits and streamed through the file text source one micro-batch per
+    * file. Each foreachBatch runs the S4 PERMISSIVE parse
+    * ([[graft.sources.Tabular.corruptParsed]], one definition with the batch
+    * audit leg) ONCE, persisted, and routes it two ways: parsed rows to the
+    * store table, corrupt rows (raw payload) to the dead-letter table. Both
+    * are re-read after settle as one frame, so the DuckDB oracle predicts
+    * every byte on both sides.
     *
-    * The sink is the per-batchId deterministic-path pattern (each batch
-    * OVERWRITES `<table>/batch=<id>`), NOT blind appends: a batch whose
-    * write landed but whose offset never committed re-runs on recovery,
-    * and an append sink would duplicate every one of its rows — the
-    * overwrite replaces them instead, making the split idempotent and the
-    * settled result exact for ANY crash point
-    * ([[replayDeadLetterRestart]] certifies exactly that).
-    * Schema-pinned re-reads: a corpus with NO junk leaves the dead-letter
-    * table legitimately empty, which must read back as an empty frame,
-    * not an inference error. */
+    * The sink OVERWRITES per-batchId paths, NOT blind appends: a batch whose
+    * write landed but whose offset never committed re-runs on recovery, and
+    * an append sink would duplicate every one of its rows. The crash leg
+    * certifies exactly that window. Schema-pinned re-reads: a corpus with
+    * NO junk leaves the dead-letter table legitimately empty. */
   def replayDeadLetter(spark: SparkSession, docs: DataFrame,
-                       nFiles: Int = 4,
-                       stageKey: Option[String] = None): DataFrame = {
-    val src = dlqStagedSrc(docs, nFiles, stageKey)
-    val run = replayTempRoot("graft_dlq_run_")
-    val store = s"$run/store"; val dlq = s"$run/dlq"; val ckpt = s"$run/ckpt"
-    new java.io.File(store).mkdirs(); new java.io.File(dlq).mkdirs()
-    withReplayFanout(spark) {
-      val q = dlqParsedStream(spark, src).writeStream
-        .foreachBatch(dlqSplitWriter(store, dlq))
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    dlqSettled(spark, store, dlq)
-  }
-
-  /** Crash-recovery twin of [[replayDeadLetter]] (the restart-family
-    * pattern): the first query crashes INSIDE foreachBatch after the
-    * k-th batch's two table writes land and BEFORE its offset commits —
-    * the exact window where an append sink would duplicate the whole
-    * batch on recovery. A second query reopens the checkpoint, re-runs
-    * the uncommitted batch (whose per-batchId overwrite replaces its own
-    * orphaned output), drains the rest, and the settled result must
-    * STILL equal the one-shot split — same oracle as the steady leg. */
-  def replayDeadLetterRestart(spark: SparkSession, docs: DataFrame,
-                              nFiles: Int = 4, killAfterBatches: Int = 2,
-                              stageKey: Option[String] = None): DataFrame = {
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    val src = dlqStagedSrc(docs, nFiles, stageKey)
-    requireRealBatchAfterCrash(killAfterBatches,
-      stagedPartCount(src, ext = ".txt"), "s4 dlq restart")
-    val run = replayTempRoot("graft_dlqr_run_")
-    val store = s"$run/store"; val dlq = s"$run/dlq"; val ckpt = s"$run/ckpt"
-    new java.io.File(store).mkdirs(); new java.io.File(dlq).mkdirs()
-    val write = dlqSplitWriter(store, dlq)
-    val CrashMark = "graft-simulated-crash-post-dlq-write-pre-commit"
-    withReplayFanout(spark) {
-      val written = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q1 = dlqParsedStream(spark, src).writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          write(batch, id)
-          if (written.incrementAndGet() == killAfterBatches)
-            throw new RuntimeException(CrashMark)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      expectInjectedCrash(CrashMark)(q1.awaitTermination())
-      val q2 = dlqParsedStream(spark, src).writeStream
-        .foreachBatch(write)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-    }
-    dlqSettled(spark, store, dlq)
-  }
-
-  private def dlqStagedSrc(docs: DataFrame, nFiles: Int,
-                           stageKey: Option[String]): String =
-    memoStage(stageKey, s"s4dlq|$nFiles", docs) {
-      val root = replayTempRoot("graft_dlq_stage_")
-      graft.sources.Tabular.corruptJsonlLines(docs)
-        .repartition(nFiles)
-        .write.mode("overwrite").text(s"$root/src")
-      s"$root/src"
+                       nFiles: Int = 4, killAfterBatches: Int = 0,
+                       stageKey: Option[String] = None): DataFrame =
+    Replay.run(spark, "dlq", nFiles, killAfterBatches) { out =>
+      val src = StageMemo(stageKey, s"s4dlq|$nFiles", docs) {
+        val root = TempRoots.create("graft_dlq_stage_")
+        graft.sources.Tabular.corruptJsonlLines(docs)
+          .repartition(nFiles)
+          .write.mode("overwrite").text(s"$root/src")
+        s"$root/src"
+      }
+      val store = s"$out/store"; val dlq = s"$out/dlq"
+      new java.io.File(store).mkdirs(); new java.io.File(dlq).mkdirs()
+      Replay.Rung(
+        stream = () => graft.sources.Tabular.corruptParsed(
+          spark.readStream.option("maxFilesPerTrigger", 1).text(src)),
+        sink = (batch: DataFrame, id: Long) => {
+          batch.persist()
+          try {
+            batch.filter(col("corrupt_payload").isNull)
+              .select("doc_id", "n_chars")
+              .write.mode("overwrite").parquet(s"$store/batch=$id")
+            batch.filter(col("corrupt_payload").isNotNull)
+              .select("corrupt_payload")
+              .write.mode("overwrite").parquet(s"$dlq/batch=$id")
+          } finally batch.unpersist()
+        },
+        settle = () => {
+          import org.apache.spark.sql.types.StructType
+          // partition discovery surfaces batch=<id> on top of the pinned
+          // schema; project it away — batch placement is sink mechanics
+          val storeDf = spark.read
+            .schema(StructType.fromDDL("doc_id BIGINT, n_chars BIGINT"))
+            .parquet(store).select("doc_id", "n_chars")
+          val dlqDf = spark.read
+            .schema(StructType.fromDDL("corrupt_payload STRING"))
+            .parquet(dlq).select("corrupt_payload")
+          storeDf.withColumn("corrupt_payload", lit(null).cast("string"))
+            .unionByName(dlqDf
+              .withColumn("doc_id", lit(null).cast("long"))
+              .withColumn("n_chars", lit(null).cast("long")))
+        },
+        realBatches = () => Replay.partCount(src, ext = ".txt"))
     }
 
-  /** The S4 PERMISSIVE parse over the staged text splits — the parse
-    * itself is [[graft.sources.Tabular.corruptParsed]], ONE definition
-    * with the batch audit leg so the two cannot drift. `def`, not `val`,
-    * so the restart leg's recovery query gets a fresh plan. */
-  private def dlqParsedStream(spark: SparkSession, src: String): DataFrame =
-    graft.sources.Tabular.corruptParsed(
-      spark.readStream.option("maxFilesPerTrigger", 1).text(src))
-
-  /** Idempotent two-way split sink: per-batchId deterministic paths,
-    * overwritten — NOT appended — so a crash-replayed batch replaces its
-    * own orphaned output instead of duplicating it. */
-  private def dlqSplitWriter(store: String, dlq: String)
-      : (DataFrame, Long) => Unit =
-    (batch: DataFrame, id: Long) => {
-      batch.persist()
-      try {
-        batch.filter(col("corrupt_payload").isNull)
-          .select("doc_id", "n_chars")
-          .write.mode("overwrite").parquet(s"$store/batch=$id")
-        batch.filter(col("corrupt_payload").isNotNull)
-          .select("corrupt_payload")
-          .write.mode("overwrite").parquet(s"$dlq/batch=$id")
-      } finally batch.unpersist()
-    }
-
-  private def dlqSettled(spark: SparkSession, store: String,
-                         dlq: String): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    // partition discovery surfaces batch=<id> as an extra column on top of
-    // the pinned schema; project it away — batch placement is sink
-    // mechanics, not data
-    val storeDf = spark.read
-      .schema(StructType.fromDDL("doc_id BIGINT, n_chars BIGINT"))
-      .parquet(store).select("doc_id", "n_chars")
-    val dlqDf = spark.read
-      .schema(StructType.fromDDL("corrupt_payload STRING"))
-      .parquet(dlq).select("corrupt_payload")
-    storeDf.withColumn("corrupt_payload", lit(null).cast("string"))
-      .unionByName(dlqDf
-        .withColumn("doc_id", lit(null).cast("long"))
-        .withColumn("n_chars", lit(null).cast("long")))
-  }
-
-  /** [[replayUpsertDaily]] with a CRASH INJECTED MID-CORPUS: the first query
-    * run merges `killAfterBatches` micro-batches and then throws INSIDE
-    * foreachBatch — after the sink write, BEFORE the offset commit, the
-    * worst-case failure point (the sink holds a batch the checkpoint does
-    * not acknowledge). A second query then reopens the SAME checkpoint and
-    * drains the remaining files. Recovery replays the unacknowledged batch —
-    * at-least-once delivery — and the idempotent keyed latest-wins merge
-    * collapses the duplicate, so the settled table must still hash-match the
-    * one-shot batch arbitration: exactly-once END-TO-END, certified by the
-    * cross-engine gate rather than asserted. (This strengthens the
-    * reference's manual-commit contract, `con.py:18,79-88`, where a crash
-    * between ES write and Kafka commit re-delivers and idempotent doc ids
-    * absorb the replay.)
+  /** T1 (streaming) BATCH-REPLAY: the REAL watermarked streaming dedup
+    * (`dropDuplicatesWithinWatermark` on the content hash) over `nFiles`
+    * splits, one micro-batch per file. Event time is synthesized from doc_id
+    * with the horizon DERIVED from the staged doc_id span (plus a day of
+    * slack, instead of a fixed 365 days that silently breaks past ~31.5M
+    * ids — r8 advice), so no duplicate can arrive outside the watermark: the
+    * emitted set is EXACTLY one row per distinct content hash wherever the
+    * batch cuts fall (only hash-determined columns are emitted). Oracle:
+    * SELECT DISTINCT over the batch table.
     *
-    * The staged input rides the same memo as [[replayUpsertDaily]] (staging
-    * is shape-identical); the checkpoint, sink, and both query lifecycles
-    * are always fresh — a reused checkpoint would no-op-resume and certify
-    * nothing. */
-  def replayUpsertRestart(spark: SparkSession, events: DataFrame,
-                          nFiles: Int = 4, killAfterBatches: Int = 2,
-                          stageKey: Option[String] = None): DataFrame = {
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    val src = stagedUpsertSrc(spark, events, nFiles, stageKey)
-    requireRealBatchAfterCrash(killAfterBatches, stagedPartCount(src), "s2 restart")
-    val run = replayTempRoot("graft_s2r_run_")
-    val tgt = s"$run/tgt"; val ckpt = s"$run/ckpt"
-    val schema = spark.read.parquet(src).schema
-    def stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .withColumn("ingest_date", to_date(col("ts")))
-    val merge = Upsert.foreachBatchMerge(tgt,
-      keyCols = Seq("user_id", "ingest_date"), tsCol = "ts",
-      tieCol = "event_id", partitionCol = "ingest_date")
-    val CrashMark = "graft-simulated-crash-post-sink-pre-commit"
-    withReplayFanout(spark) {
-      val merged = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q1 = stream.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          merge(batch, id)
-          if (merged.incrementAndGet() == killAfterBatches)
-            throw new RuntimeException(CrashMark)
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      expectInjectedCrash(CrashMark)(q1.awaitTermination())
-      // Recovery: same checkpoint, plain merge. The crashed batch was
-      // written to the sink but never committed, so it re-runs here first.
-      val q2 = stream.writeStream
-        .foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-    }
-    spark.read.parquet(tgt)
-      .select(col("user_id"), col("ingest_date"), col("event_id"),
-        col("event_type"), col("value"), col("ts"))
-  }
-
-  /** T1 (streaming) BATCH-REPLAY: stage the corpus as `nFiles` splits,
-    * stream them through the file source one micro-batch per file, and run
-    * the REAL watermarked streaming dedup (`dropDuplicatesWithinWatermark`
-    * on the content hash) into a parquet sink. Event time is synthesized
-    * from doc_id with the horizon DERIVED from the corpus' doc_id span, so
-    * no duplicate can ever arrive outside the watermark — the emitted set is
-    * then EXACTLY one row per distinct content hash regardless of where
-    * batch cuts fall (only hash-determined columns are emitted; which
-    * doc_id arrived first is batch-order-dependent and deliberately not
-    * part of the output). Oracle: SELECT DISTINCT over the batch table —
-    * the second §2.5 leg promoted into the cross-engine gate. */
-  /** Shared t1 staging — ONE builder for the steady and restart legs, so
-    * the same-key memo can never be fed by two divergent copies (the
-    * silent-drift hazard memoStage's doc warns about). */
-  private def stagedDedupSrc(spark: SparkSession, docs: DataFrame, nFiles: Int,
-                             stageKey: Option[String]): (String, java.lang.Long) =
-    memoStage(stageKey, s"t1|$nFiles", docs) {
-      val root = replayTempRoot("graft_t1_replay_")
-      val s = s"$root/src"
-      docs.select(col("doc_id"), col("text"))
-        .repartitionByRange(nFiles, col("doc_id"))
-        .write.mode("overwrite").parquet(s)
-      // The exactness premise is "no duplicate arrives outside the horizon",
-      // i.e. the synthesized event-time span must sit inside the watermark.
-      // Derive the horizon from the actual doc_id span (plus a day of slack)
-      // instead of a fixed 365 days that silently breaks past ~31.5M ids
-      // (r8 advice: ScaleCorpus-replicated corpora cross that quietly).
-      val span = spark.read.parquet(s)
-        .agg(max(col("doc_id")) - min(col("doc_id"))).head().getLong(0)
-      (s, java.lang.Long.valueOf(span + 86400L))
-    }
-
+    * Crash leg (seen-hash state): the reopened query must hand the replayed
+    * batch the PRE-batch state — a post-batch resume would classify its
+    * first occurrences as already-seen and DROP them (missing rows, which
+    * the hash gate catches). Re-emitted firsts are byte-identical and
+    * absorbed by row_hash. */
   def replayStreamDedup(spark: SparkSession, docs: DataFrame,
-                        nFiles: Int = 4,
-                        stageKey: Option[String] = None): DataFrame = {
-    val (src, horizonSec) = stagedDedupSrc(spark, docs, nFiles, stageKey)
-    val run = replayTempRoot("graft_t1_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    val schema = spark.read.parquet(src).schema
-    val deduped = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-      .withColumn("row_hash", md5(col("text")))
-      .withWatermark("ts", s"$horizonSec seconds")
-      .dropDuplicatesWithinWatermark("row_hash")
-      .select(col("row_hash"), length(col("text")).as("text_len"))
-    withReplayFanout(spark) {
-      val q = deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+                        nFiles: Int = 4, killAfterBatches: Int = 0,
+                        stageKey: Option[String] = None): DataFrame =
+    Replay.run(spark, "t1", nFiles, killAfterBatches) { out =>
+      val (src, horizonSec) = StageMemo(stageKey, s"t1|$nFiles", docs) {
+        val s = s"${TempRoots.create("graft_t1_replay_")}/src"
+        docs.select(col("doc_id"), col("text"))
+          .repartitionByRange(nFiles, col("doc_id"))
+          .write.mode("overwrite").parquet(s)
+        val span = spark.read.parquet(s)
+          .agg(max(col("doc_id")) - min(col("doc_id"))).head().getLong(0)
+        (s, java.lang.Long.valueOf(span + 86400L))
+      }
+      Replay.Rung(
+        stream = () => parquetStream(spark, src)
+          .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
+          .withColumn("row_hash", md5(col("text")))
+          .withWatermark("ts", s"$horizonSec seconds")
+          .dropDuplicatesWithinWatermark("row_hash")
+          .select(col("row_hash"), length(col("text")).as("text_len")),
+        sink = appendTo(out),
+        settle = () => spark.read.parquet(out),
+        realBatches = () => Replay.partCount(src),
+        absorbKeys = Seq("row_hash"))
     }
-    spark.read.parquet(out)
-  }
 
-  /** [[replayStreamDedup]] with a CRASH INJECTED MID-CORPUS: the
-    * watermarked-dedup state leg of the recovery family. The seen-hash
-    * state committed through batch k survives the crash; the reopened
-    * query must hand the replayed batch the PRE-batch version — a
-    * post-batch resume would classify the replayed batch's first
-    * occurrences as already-seen and DROP them (missing rows, not wrong
-    * ones), which the hash gate catches. Re-emitted firsts are
-    * byte-identical (only hash-determined columns are emitted) and
-    * absorbed by row_hash dedup. Same oracle as the steady replay. */
-  def replayStreamDedupRestart(spark: SparkSession, docs: DataFrame,
-                               nFiles: Int = 4, killAfterBatches: Int = 2,
-                               stageKey: Option[String] = None): DataFrame = {
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    val (src, horizonSec) = stagedDedupSrc(spark, docs, nFiles, stageKey)
-    requireRealBatchAfterCrash(killAfterBatches, stagedPartCount(src), "t1 restart")
-    val run = replayTempRoot("graft_t1r_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    val schema = spark.read.parquet(src).schema
-    def deduped = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .withColumn("ts", timestamp_seconds(lit(1700000000L) + col("doc_id")))
-      .withColumn("row_hash", md5(col("text")))
-      .withWatermark("ts", s"$horizonSec seconds")
-      .dropDuplicatesWithinWatermark("row_hash")
-      .select(col("row_hash"), length(col("text")).as("text_len"))
-    val append = (batch: DataFrame, _: Long) =>
-      batch.write.mode("append").parquet(out)
-    val CrashMark = "graft-simulated-crash-post-dedup-pre-commit"
-    withReplayFanout(spark) {
-      val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q1 = deduped.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          append(batch, id)
-          if (seen.incrementAndGet() == killAfterBatches)
-            throw new RuntimeException(CrashMark)
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      expectInjectedCrash(CrashMark)(q1.awaitTermination())
-      val q2 = deduped.writeStream
-        .foreachBatch(append)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-    }
-    spark.read.parquet(out).dropDuplicates("row_hash")
-  }
-
-  /** §2.5 stateful-aggregation BATCH-REPLAY: the flagship per-student GPA
-    * maintained as keyed streaming state ([[StatefulGpa]], mapGroupsWithState)
-    * over a file-source replay of the enrollment-mapped events, one
-    * micro-batch per staged file. Each batch's updates append to a parquet
-    * sink via foreachBatch; the FINAL state per student is the update with
-    * the maximal rows-seen counter (strictly increasing per key, so the
-    * arbitration is total).
+  /** §2.5 stateful-aggregation BATCH-REPLAY: the flagship per-student GPA as
+    * keyed streaming state ([[StatefulGpa]], mapGroupsWithState) over the
+    * enrollment-mapped events, one micro-batch per staged file. Each batch's
+    * updates append to the sink; the FINAL state per student is the update
+    * with the maximal rows-seen counter (strictly increasing per key, so the
+    * arbitration is total). Deterministic to the BIT for any batch cut:
+    * quality points are grade4 (quarter steps) × integer credits, so every
+    * partial sum is exactly representable and the fold order cannot change
+    * the state. The oracle is the one-shot batch aggregate.
     *
-    * Deterministic to the BIT for any batch cut: quality points are
-    * grade4 (quarter steps) × integer credits and credits are small
-    * integers — every partial sum is exactly representable, so addition is
-    * associative here and the fold order Spark happens to use cannot change
-    * the state. The oracle is the one-shot batch aggregate. */
-  /** Shared gpa staging — ONE builder for the steady and restart legs (same
-    * rationale as [[stagedDedupSrc]]). */
-  private def stagedGpaSrc(spark: SparkSession, events: DataFrame, nFiles: Int,
-                           stageKey: Option[String]): String =
-    memoStage(stageKey, s"gpa|$nFiles", events) {
-      val root = replayTempRoot("graft_gpa_replay_")
-      val s = s"$root/src"
-      // Range-split on EVENT TIME, not on the stateful key: a split on F_MASV
-      // would land every student's rows in a single file/micro-batch and the
-      // cross-batch state fold this replay exists to certify would never run
-      // (r8 advice). Time-splitting spreads each student across ~all batches.
-      graft.query.EventsAdapter.enrollmentView(events)
-        .repartitionByRange(nFiles, col("@timestamp"))
-        .write.mode("overwrite").parquet(s)
-      // Loud guard on the premise: at least one key must straddle micro-batch
-      // files, else the replay certifies nothing about cross-batch state.
-      val straddling = spark.read.parquet(s)
-        .select(col("F_MASV"), input_file_name().as("__f"))
-        .groupBy("F_MASV").agg(countDistinct(col("__f")).as("__nf"))
-        .filter(col("__nf") > 1).count()
-      require(straddling > 0,
-        "GPA replay staging left every key inside one micro-batch; " +
-          "cross-batch state accumulation would be untested")
-      s
-    }
-
+    * Crash leg (keyed accumulators): Spark's versioned state store must hand
+    * the replayed batch the PRE-batch version — a resume from the
+    * post-batch version would double-fold every student it touched and fail
+    * the hash gate. The duplicated sink append is absorbed by the rows-seen
+    * arbitration (identical rows; latest-by-n picks one). */
   def replayStatefulGpa(spark: SparkSession, events: DataFrame,
                         excludedSemester: Int, nFiles: Int = 4,
-                        stageKey: Option[String] = None): DataFrame = {
-    val src = stagedGpaSrc(spark, events, nFiles, stageKey)
-    val run = replayTempRoot("graft_gpa_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    val schema = spark.read.parquet(src).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-    val updates = StatefulGpa.stream(stream, excludedSemester).toDF()
-    withReplayFanout(spark) {
-      val q = updates.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          batch.write.mode("append").parquet(out)
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+                        killAfterBatches: Int = 0,
+                        stageKey: Option[String] = None): DataFrame =
+    Replay.run(spark, "gpa", nFiles, killAfterBatches) { out =>
+      val src = StageMemo(stageKey, s"gpa|$nFiles", events) {
+        val s = s"${TempRoots.create("graft_gpa_replay_")}/src"
+        // Range-split on EVENT TIME, not on the stateful key: a split on
+        // F_MASV would land every student's rows in one micro-batch and the
+        // cross-batch state fold would never run (r8 advice).
+        graft.query.EventsAdapter.enrollmentView(events)
+          .repartitionByRange(nFiles, col("@timestamp"))
+          .write.mode("overwrite").parquet(s)
+        // Loud guard on the premise: at least one key must straddle files.
+        val straddling = spark.read.parquet(s)
+          .select(col("F_MASV"), input_file_name().as("__f"))
+          .groupBy("F_MASV").agg(countDistinct(col("__f")).as("__nf"))
+          .filter(col("__nf") > 1).count()
+        require(straddling > 0,
+          "GPA replay staging left every key inside one micro-batch; " +
+            "cross-batch state accumulation would be untested")
+        s
+      }
+      Replay.Rung(
+        stream = () => StatefulGpa.stream(parquetStream(spark, src),
+          excludedSemester).toDF(),
+        sink = appendTo(out),
+        settle = () =>
+          Upsert.latestByKey(spark.read.parquet(out), Seq("masv"), "n", "n"),
+        realBatches = () => Replay.partCount(src),
+        outputMode = "update")
     }
-    Upsert.latestByKey(spark.read.parquet(out), Seq("masv"), "n", "n")
-  }
 
-  /** [[replayStatefulGpa]] with a CRASH INJECTED MID-CORPUS — the STATE-STORE
-    * twin of [[replayUpsertRestart]]. That leg certifies file-source offset
-    * recovery plus an idempotent sink; this one certifies recovery of
-    * ARBITRARY KEYED STATE (`mapGroupsWithState` accumulators): the first
-    * query folds `killAfterBatches` micro-batches into per-student state and
-    * then throws inside foreachBatch AFTER the batch's sink append and state
-    * commit, BEFORE its offset commit. The reopened query replays the
-    * unacknowledged batch, and Spark's versioned state store must hand its
-    * tasks the PRE-batch state version — if recovery instead resumed from
-    * the already-committed post-batch version, the replayed fold would
-    * double-count (points/credits/n inflated for every student the batch
-    * touched) and the cross-engine hash gate would fail. The duplicated
-    * sink append from the replayed batch is absorbed by the rows-seen
-    * arbitration (identical rows; latest-by-n picks one), so the settled
-    * output must STILL equal the one-shot batch aggregate — exactly-once
-    * STATE semantics certified end-to-end, same oracle as the steady-state
-    * replay. Staging rides the gpa memo (shape-identical); checkpoint,
-    * sink, and both query lifecycles are always fresh. */
-  def replayStatefulGpaRestart(spark: SparkSession, events: DataFrame,
-                               excludedSemester: Int, nFiles: Int = 4,
-                               killAfterBatches: Int = 2,
-                               stageKey: Option[String] = None): DataFrame = {
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    val src = stagedGpaSrc(spark, events, nFiles, stageKey)
-    requireRealBatchAfterCrash(killAfterBatches, stagedPartCount(src), "gpa restart")
-    val run = replayTempRoot("graft_gpar_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    val schema = spark.read.parquet(src).schema
-    def updates = StatefulGpa.stream(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src),
-      excludedSemester).toDF()
-    val append = (batch: DataFrame, _: Long) =>
-      batch.write.mode("append").parquet(out)
-    val CrashMark = "graft-simulated-crash-post-state-pre-commit"
-    withReplayFanout(spark) {
-      val folded = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q1 = updates.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          append(batch, id)
-          if (folded.incrementAndGet() == killAfterBatches)
-            throw new RuntimeException(CrashMark)
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      expectInjectedCrash(CrashMark)(q1.awaitTermination())
-      val q2 = updates.writeStream
-        .foreachBatch(append)
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-    }
-    Upsert.latestByKey(spark.read.parquet(out), Seq("masv"), "n", "n")
-  }
-
-  /** §2.5 event-time-TIMER leg BATCH-REPLAY: [[SessionTimeout.summaries]]
+  /** §2.5 event-time-TIMER BATCH-REPLAY: [[SessionTimeout.summaries]]
     * (transformWithState, one summary per closed session, fired by the
-    * watermark) over a file-source replay of the events table, promoted into
-    * the DuckDB oracle gate against the batch gap-island sessionization.
+    * watermark) over a file-source replay of the events table, gated against
+    * the batch gap-island sessionization.
     *
-    * Unlike the other replays, session state is ORDER-SENSITIVE across
-    * micro-batches (an out-of-order batch would fold a later session's
-    * events into the open one — the documented late-data caveat), so the
+    * Session state is ORDER-SENSITIVE across micro-batches (an out-of-order
+    * batch would fold a later session's events into the open one), so the
     * staging enforces event-time batch order: the range split on `ts` makes
-    * file k hold strictly earlier events than file k+1, each staged file
-    * gets a strictly increasing mtime, and the file source (oldest-first,
-    * one file per trigger) replays them in that order. Batch CUTS then
-    * cannot matter: within a batch [[SessionTimeout.Summarizer]] folds in
-    * event-time order and splits on gap inline; across batches the state
-    * carries last-event time forward — both paths close a session exactly
-    * where event-time gaps exceed `gapMs`.
+    * file k hold strictly earlier events than file k+1, and [[layOrdered]]
+    * pins the replay order. Batch CUTS then cannot matter: within a batch
+    * the Summarizer folds in event-time order and splits on gap inline;
+    * across batches the state carries last-event time forward.
     *
     * A sentinel row (user_id = -1) staged LAST at max(ts) + gap + 1 h pushes
     * the final watermark past every real session's close timer, so the
-    * drain's no-data batch fires them all — every real session emits, and
-    * the oracle is the PLAIN batch sessionization (strict `>` gap, ms
-    * precision), no watermark arithmetic in SQL. The sentinel's own open
-    * session is filtered out.
+    * drain's no-data batch fires them all and the oracle is the PLAIN batch
+    * sessionization (strict `>` gap, ms precision). `value` is pre-converted
+    * map-side to integer cents riding a double, so per-session totals are
+    * exact in any fold order. Timers need the RocksDB provider
+    * (transformWithState's contract).
     *
-    * Determinism of the sums: `value` is pre-converted map-side to integer
-    * cents riding a double (exactly representable, associative addition), so
-    * the per-session totals are exact integers in any fold order; the output
-    * emits them as longs. Timers need the RocksDB state store provider
-    * (transformWithState's contract); set and restored around the run. */
+    * Crash leg (state PLUS timers, in RocksDB): the engine may interleave
+    * watermark-driven no-data batches, so batch k can land a file or two
+    * early in the corpus; the premise only needs fresh files to remain. Lost
+    * timers would leave sessions unclosed when the sentinel fires (missing
+    * rows). Re-appended summaries are absorbed by (user_id, start_ms): a
+    * user's sessions are disjoint, so start_ms keys a session. */
   def replaySessionSummaries(spark: SparkSession, events: DataFrame,
                              gapMs: Long = 1800000L, nFiles: Int = 4,
+                             killAfterBatches: Int = 0,
                              stageKey: Option[String] = None): DataFrame =
-    sessionReplayCore(spark, events, gapMs, nFiles, stageKey, killAfterBatches = 0)
-
-  /** [[replaySessionSummaries]] with a CRASH INJECTED MID-CORPUS — the third
-    * and hardest state shape in the recovery family (after s2's offsets+sink
-    * and gpa's keyed accumulators): transformWithState session state PLUS
-    * its registered event-time TIMERS, in the RocksDB provider. The first
-    * query crashes inside foreachBatch after the k-th MICRO-BATCH (post
-    * sink-append and RocksDB commit, pre offset commit). With maxFilesPerTrigger=1
-    * micro-batch k usually carries the k-th staged file, but the engine may
-    * interleave watermark-driven no-data batches, so the crash can land a
-    * file or two earlier in corpus consumption — the safety premise only
-    * needs killAfterBatches < stagedPartCount (fresh files remain for the
-    * recovery query), which holds a fortiori. Either way the crash sits
-    * between a RocksDB commit and its offset commit; the reopened
-    * query must restore both the open-session accumulators AND their close
-    * timers from the checkpointed RocksDB version — lost timers would leave
-    * sessions unclosed when the sentinel's watermark no-data batch fires,
-    * and the missing rows fail the cross-engine gate. The replayed batch's
-    * re-appended summaries are absorbed by (user_id, start_ms) dedup — a
-    * user's sessions are disjoint intervals, so start_ms uniquely keys a
-    * session and re-emissions are byte-identical. Same oracle as the
-    * steady-state replay. */
-  def replaySessionSummariesRestart(spark: SparkSession, events: DataFrame,
-                                    gapMs: Long = 1800000L, nFiles: Int = 4,
-                                    killAfterBatches: Int = 2,
-                                    stageKey: Option[String] = None): DataFrame = {
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    sessionReplayCore(spark, events, gapMs, nFiles, stageKey, killAfterBatches)
-  }
-
-  private def sessionReplayCore(spark: SparkSession, events: DataFrame,
-                                gapMs: Long, nFiles: Int,
-                                stageKey: Option[String],
-                                killAfterBatches: Int): DataFrame = {
-    val (staged, src) = memoStage(stageKey, s"sess|$gapMs|$nFiles", events) {
-      val root = replayTempRoot("graft_sess_replay_")
-      val stagedD = s"$root/staged"; val sent = s"$root/sent"
-      val srcD = s"$root/src"
-      val prep = events.select(col("user_id").cast("long").as("user_id"),
-        col("ts"), round(col("value") * 100).cast("long").cast("double").as("value"))
-      prep.repartitionByRange(nFiles, col("ts"))
-        .write.mode("overwrite").parquet(stagedD)
-      // Premise scalar from the JUST-WRITTEN staging, not the upstream plan
-      // (a .head() on `prep` would re-execute the whole source load —
-      // review finding).
-      val maxTs = spark.read.parquet(stagedD)
-        .agg(max(unix_millis(col("ts")))).head().getLong(0)
-      spark.range(1).select(lit(-1L).as("user_id"),
-          timestamp_millis(lit(maxTs + gapMs + 3600000L)).as("ts"),
-          lit(0.0).as("value"))
-        .coalesce(1).write.mode("overwrite").parquet(sent)
-      // Lay the staged splits into the watched dir in replay order
-      // (range-partition index IS ascending time order), sentinel last.
-      // The mtimes are fixed at stage time, so a memoized reuse replays
-      // the identical oldest-first order.
-      layOrdered(Seq(stagedD, sent), srcD)
-      (stagedD, srcD)
-    }
-    if (killAfterBatches > 0)
-      requireRealBatchAfterCrash(killAfterBatches, stagedPartCount(staged),
-        "sess restart")
-    val run = replayTempRoot("graft_sess_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    // Same session-global save/set/restore shape as withReplayFanout, same
-    // monitor (reentrant — the nested fanout clamp below locks it again):
-    // two concurrent swaps could otherwise restore the temporary RocksDB
-    // provider as if it were the session default (ADVICE r11).
-    replayConfLock.synchronized {
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val savedProvider = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val schema = spark.read.parquet(staged).schema
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      val append = (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out)
-      def writer(fn: (org.apache.spark.sql.DataFrame, Long) => Unit) =
-        SessionTimeout.summaries(stream, gapMs, watermark = "0 seconds")
-          .toDF().writeStream
-          .foreachBatch(fn)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-      withReplayFanout(spark) {
-        if (killAfterBatches > 0) {
-          // Crash leg: append, then throw after the k-th batch — post
-          // RocksDB commit + sink append, pre offset commit.
-          val CrashMark = "graft-simulated-crash-post-timer-pre-commit"
-          val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-          val q1 = writer { (batch, id) =>
-            append(batch, id)
-            if (seen.incrementAndGet() == killAfterBatches)
-              throw new RuntimeException(CrashMark)
-          }.start()
-          expectInjectedCrash(CrashMark) {
-            try q1.processAllAvailable() finally q1.stop()
-          }
-        }
-        // Steady drain (the only query when killAfterBatches == 0; the
-        // recovery query otherwise). processAllAvailable (not AvailableNow):
-        // the last summaries emit in the watermark-driven NO-DATA batch
-        // after the sentinel, which this drain is documented to wait out.
-        // stop() in finally so a failed drain can't leak a running query
-        // with open state stores.
-        val q = writer(append).start()
-        try q.processAllAvailable() finally q.stop()
+    Replay.run(spark, "sess", nFiles, killAfterBatches) { out =>
+      val (staged, src) = StageMemo(stageKey, s"sess|$gapMs|$nFiles", events) {
+        val root = TempRoots.create("graft_sess_replay_")
+        val stagedD = s"$root/staged"; val sent = s"$root/sent"
+        val srcD = s"$root/src"
+        events.select(col("user_id").cast("long").as("user_id"), col("ts"),
+            round(col("value") * 100).cast("long").cast("double").as("value"))
+          .repartitionByRange(nFiles, col("ts"))
+          .write.mode("overwrite").parquet(stagedD)
+        // Premise scalar from the JUST-WRITTEN staging, not the upstream
+        // plan (which would re-execute the whole source load).
+        val maxTs = spark.read.parquet(stagedD)
+          .agg(max(unix_millis(col("ts")))).head().getLong(0)
+        spark.range(1).select(lit(-1L).as("user_id"),
+            timestamp_millis(lit(maxTs + gapMs + 3600000L)).as("ts"),
+            lit(0.0).as("value"))
+          .coalesce(1).write.mode("overwrite").parquet(sent)
+        // range-partition index IS ascending time order; sentinel last
+        layOrdered(Seq(stagedD, sent), srcD)
+        (stagedD, srcD)
       }
-      val raw = spark.read.parquet(out)
-        .filter(col("user_id") >= 0L)
-        .select(col("user_id"), col("n_events"),
-          col("total").cast("long").as("total_cents"),
-          col("start_ms"), col("end_ms"))
-      // At-least-once absorb (crash leg only): the replayed batch re-appends
-      // byte-identical summaries; (user_id, start_ms) uniquely keys a
-      // session (a user's sessions are disjoint intervals), so keep one row
-      // per key. The steady leg emits each session exactly once and takes
-      // no dedup — a duplicate there would be a real bug the gate must see.
-      if (killAfterBatches > 0) raw.dropDuplicates("user_id", "start_ms")
-      else raw
-    } finally savedProvider.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+      Replay.Rung(
+        stream = () => SessionTimeout.summaries(parquetStream(spark, src),
+          gapMs, watermark = "0 seconds").toDF(),
+        sink = appendTo(out),
+        settle = () => spark.read.parquet(out)
+          .filter(col("user_id") >= 0L)
+          .select(col("user_id"), col("n_events"),
+            col("total").cast("long").as("total_cents"),
+            col("start_ms"), col("end_ms")),
+        realBatches = () => Replay.partCount(staged),
+        absorbKeys = Seq("user_id", "start_ms"),
+        confs = Map(Replay.StateProvider -> Replay.RocksDbProvider))
     }
-  }
 
-  /** §2.5 STREAM-STREAM event-time interval join BATCH-REPLAY: promotes
-    * [[intervalJoinStreams]] (previously certified only against
-    * MemoryStream in StreamingSpec) into the cross-engine oracle gate.
-    * Left stream = view/click events, right stream = purchases; each is
-    * staged as `nFiles` time-range splits and replayed through its OWN
-    * file source one micro-batch per file, so join pairs form both within
-    * a micro-batch and ACROSS the two streams' interleaved batches (the
-    * stateful path this replay exists to certify).
+  /** §2.5 STREAM-STREAM event-time interval join BATCH-REPLAY over
+    * [[intervalJoinStreams]]: view/click events (left) and purchases (right)
+    * staged as `nFiles` time-range splits each, replayed through their OWN
+    * file sources one file per trigger, so pairs form both within a batch
+    * and ACROSS the two streams' batches. The watermark is derived from the
+    * staged event-time span (plus a day), so no join state is evicted before
+    * the drain: each qualifying pair emits exactly once and the emitted SET
+    * equals the batch theta-join for any cut. (Bounded-state eviction under
+    * a REAL watermark is StreamingSpec's horizon test; here it would make
+    * the output depend on batch timing.)
     *
-    * Deterministic for any batch cut or interleaving: the watermark is
-    * derived from the corpus' full event-time span (plus a day of slack),
-    * so no join state can be evicted before the drain completes; an inner
-    * interval join in append mode then emits each qualifying pair exactly
-    * once — when the later of its two sides arrives — and the emitted SET
-    * equals the batch theta-join whatever the cut. The oracle is that
-    * plain batch join. (Bounded-state eviction under a REAL watermark is
-    * certified separately by StreamingSpec's horizon test; certifying it
-    * here would make the output depend on batch timing by design.) */
-  /** Shared ssjoin staging — ONE builder for the steady and restart legs
-    * (same rationale as [[stagedDedupSrc]]). Memo tag carries EVERY shape
-    * parameter (`within` included, even though today's staged artifacts
-    * don't depend on it) so a future change that does bake `within` into
-    * staging can't silently reuse a stale stage. */
-  private def stagedSsjoinSrcs(spark: SparkSession, events: DataFrame,
-                               within: String, nFiles: Int,
-                               stageKey: Option[String])
-      : (String, String, java.lang.Long) =
-    memoStage(stageKey, s"ssjoin|$within|$nFiles", events) {
-      val root = replayTempRoot("graft_ssj_replay_")
-      val cols = Seq(col("event_id"), col("user_id"), col("ts"))
-      events.filter(col("event_type").isin("view", "click"))
-        .select(cols: _*).repartitionByRange(nFiles, col("ts"))
-        .write.mode("overwrite").parquet(s"$root/l")
-      events.filter(col("event_type") === "purchase")
-        .select(cols: _*).repartitionByRange(nFiles, col("ts"))
-        .write.mode("overwrite").parquet(s"$root/r")
-      // Premise scalar from the JUST-WRITTEN staging, not the upstream plan
-      // (the sess-leg convention — aggregating `events` here re-executed
-      // the whole source load a third time; review finding). The staged
-      // union's span is also the tighter correct bound: only staged rows
-      // replay, so the no-eviction-before-drain invariant needs exactly
-      // their span.
-      val span = spark.read.parquet(s"$root/l", s"$root/r")
-        .agg(max(unix_millis(col("ts"))) - min(unix_millis(col("ts"))))
-        .head().getLong(0)
-      (s"$root/l", s"$root/r",
-        java.lang.Long.valueOf(span / 1000L + 86400L))
-    }
-
+    * Crash leg (symmetric join buffers, four state stores per partition):
+    * lost buffers drop every pair straddling the crash; a post-batch resume
+    * re-inserts the replayed rows. Re-emitted pairs are absorbed by
+    * (l_id, r_id). maxFilesPerTrigger is PER SOURCE, so the sources drain in
+    * lockstep: nFiles file batches, each one file from EACH side (not
+    * 2*nFiles), which is what the crash-point bound counts. The memo tag
+    * carries `within` so a future staging that bakes it in cannot reuse a
+    * stale stage. */
   def replayIntervalJoin(spark: SparkSession, events: DataFrame,
                          within: String = "30 minutes", nFiles: Int = 2,
-                         stageKey: Option[String] = None): DataFrame = {
-    val (lsrc, rsrc, horizonSec) = stagedSsjoinSrcs(spark, events, within,
-      nFiles, stageKey)
-    val run = replayTempRoot("graft_ssj_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    def src(dir: String) = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-    val joined = intervalJoinStreams(src(lsrc), src(rsrc), "user_id", "ts",
-        within = within, watermark = s"$horizonSec seconds")
-      .select(col("l.event_id").as("l_id"), col("r.event_id").as("r_id"),
-        col("l.user_id").as("user_id"))
-    withReplayFanout(spark) {
-      val q = joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+                         killAfterBatches: Int = 0,
+                         stageKey: Option[String] = None): DataFrame =
+    Replay.run(spark, "ssjoin", nFiles, killAfterBatches) { out =>
+      val (lsrc, rsrc, horizonSec) =
+        StageMemo(stageKey, s"ssjoin|$within|$nFiles", events) {
+          val root = TempRoots.create("graft_ssj_replay_")
+          stageSides(events, nFiles, s"$root/l", s"$root/r")
+          val span = spark.read.parquet(s"$root/l", s"$root/r")
+            .agg(max(unix_millis(col("ts"))) - min(unix_millis(col("ts"))))
+            .head().getLong(0)
+          (s"$root/l", s"$root/r", java.lang.Long.valueOf(span / 1000L + 86400L))
+        }
+      Replay.Rung(
+        stream = () => joinPairs(spark, lsrc, rsrc, within,
+          s"$horizonSec seconds", "inner"),
+        sink = appendTo(out),
+        settle = () => spark.read.parquet(out),
+        realBatches = () => math.min(Replay.partCount(lsrc), Replay.partCount(rsrc)),
+        absorbKeys = Seq("l_id", "r_id"))
     }
-    spark.read.parquet(out)
+
+  /** Stage the two join sides (view/click left, purchase right) as `nFiles`
+    * time-range splits each. */
+  private def stageSides(events: DataFrame, nFiles: Int, l: String, r: String): Unit = {
+    def stage(side: DataFrame, dir: String): Unit =
+      side.select(col("event_id"), col("user_id"), col("ts"))
+        .repartitionByRange(nFiles, col("ts"))
+        .write.mode("overwrite").parquet(dir)
+    stage(events.filter(col("event_type").isin("view", "click")), l)
+    stage(events.filter(col("event_type") === "purchase"), r)
   }
 
-  /** [[replayIntervalJoin]] with a CRASH INJECTED MID-CORPUS — the fourth
-    * and last state class in the recovery family: SYMMETRIC JOIN BUFFERS.
-    * A stream-stream join checkpoints both sides' unmatched rows (four
-    * state stores per partition); the first query crashes inside
-    * foreachBatch after `killAfterBatches` batches (post sink append and
-    * state commit, pre offset commit), and the reopened query replays the
-    * unacknowledged batch against the restored PRE-batch buffers. Lost
-    * buffers would drop every pair whose two sides straddle the crash
-    * point (the join's whole reason for state); a post-batch resume would
-    * re-insert the replayed batch's rows into buffers that already hold
-    * them. Either corruption changes the emitted pair set and fails the
-    * hash gate. The replayed batch's re-emitted pairs are absorbed by
-    * (l_id, r_id) dedup — a qualifying pair emits exactly once in steady
-    * state, so pair identity is a key. Same oracle as the steady replay. */
-  def replayIntervalJoinRestart(spark: SparkSession, events: DataFrame,
-                                within: String = "30 minutes", nFiles: Int = 2,
-                                killAfterBatches: Int = 1,
-                                stageKey: Option[String] = None): DataFrame = {
-    // Batch arithmetic: maxFilesPerTrigger is PER SOURCE, so the two
-    // sources drain in lockstep — nFiles file batches total, each holding
-    // one file from EACH side (NOT 2*nFiles; the original bound here let a
-    // crash land on the trailing no-data batch and certify nothing). The
-    // crash must leave at least one real file batch for the reopened query
-    // to process against the recovered buffers.
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    val (lsrc, rsrc, horizonSec) = stagedSsjoinSrcs(spark, events, within,
-      nFiles, stageKey)
-    requireRealBatchAfterCrash(killAfterBatches,
-      math.min(stagedPartCount(lsrc), stagedPartCount(rsrc)), "ssjoin restart")
-    val run = replayTempRoot("graft_ssjr_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    def src(dir: String) = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-    def joined = intervalJoinStreams(src(lsrc), src(rsrc), "user_id", "ts",
-        within = within, watermark = s"$horizonSec seconds")
+  private def joinPairs(spark: SparkSession, lsrc: String, rsrc: String,
+                        within: String, watermark: String,
+                        joinType: String): DataFrame =
+    intervalJoinStreams(parquetStream(spark, lsrc), parquetStream(spark, rsrc),
+        "user_id", "ts", within = within, watermark = watermark,
+        joinType = joinType)
       .select(col("l.event_id").as("l_id"), col("r.event_id").as("r_id"),
         col("l.user_id").as("user_id"))
-    val append = (batch: DataFrame, _: Long) =>
-      batch.write.mode("append").parquet(out)
-    val CrashMark = "graft-simulated-crash-post-buffer-pre-commit"
-    withReplayFanout(spark) {
-      val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q1 = joined.writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          append(batch, id)
-          if (seen.incrementAndGet() == killAfterBatches)
-            throw new RuntimeException(CrashMark)
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      expectInjectedCrash(CrashMark)(q1.awaitTermination())
-      val q2 = joined.writeStream
-        .foreachBatch(append)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q2.awaitTermination()
-    }
-    spark.read.parquet(out).dropDuplicates("l_id", "r_id")
-  }
 
   /** §2.5 stream-stream LEFT-OUTER interval join BATCH-REPLAY: the
     * did-NOT-convert leg — every view/click with no purchase inside the
-    * window must emit (left, null) once the watermark PROVES none can
-    * still arrive. That negative emission is the one §2.5 semantic the
-    * inner-join replay cannot certify, because it is driven by state
-    * eviction, not by data arrival.
+    * window emits (left, null) once the watermark PROVES none can still
+    * arrive, a negative emission driven by state eviction, not by data
+    * arrival. Matched pairs emit exactly once as in the inner replay (the
+    * delay spans the corpus). Null rows emit once per never-matched left in
+    * the no-data batches after two sentinel files per stream (staged
+    * mtime-LAST; two because eviction runs a trigger behind the watermark
+    * advance — see StreamingSpec's outer test), which push the final
+    * watermark past every real left's eviction bound `l.ts + within +
+    * delay`. Emitted set = the batch LEFT theta-join whatever the cut;
+    * sentinels filter out by user_id < 0.
     *
-    * Determinism: matched pairs emit exactly once as in the inner replay
-    * (the join-state watermark delay spans the corpus, so no right row is
-    * evicted while a matching left could still arrive in any batch
-    * order). Null rows emit exactly once per never-matched left, in the
-    * watermark-driven no-data batches after two sentinel files per stream
-    * (staged mtime-LAST, the sess-replay trick; two because eviction runs
-    * a trigger behind the watermark advance — see StreamingSpec's outer
-    * test) push the final watermark past every real left row's eviction
-    * bound `l.ts + within + delay`. Emitted set = the batch LEFT
-    * theta-join, whatever the cut; sentinels filter out by user_id < 0.
+    * The window is given ONCE as `withinMs` and the join's interval string
+    * is derived from it, so the sentinel horizon and the eviction bound can
+    * never disagree (r10 advice).
     *
-    * The join window is given ONCE as `withinMs`; the join expression's
-    * interval string is derived from it, so the sentinel horizon and the
-    * eviction bound can never disagree (r10 advice — the old two-parameter
-    * form let a caller override one and silently break the other). */
+    * Crash leg (eviction from recovered state): the crash lands during the
+    * file batches, so the recovered buffers carry through the rest of the
+    * corpus and the sentinels' no-data batches must still emit one null per
+    * never-matched left. Lost buffers both drop straddling pairs and lose
+    * pending lefts; re-emitted pairs are absorbed by (l_id, r_id) — a null
+    * row's l_id appears only when NO match exists for it. */
   def replayIntervalJoinOuter(spark: SparkSession, events: DataFrame,
                               withinMs: Long = 1800000L, nFiles: Int = 2,
+                              killAfterBatches: Int = 0,
                               stageKey: Option[String] = None): DataFrame =
-    outerJoinReplayCore(spark, events, withinMs, nFiles, stageKey,
-      killAfterBatches = 0)
-
-  /** [[replayIntervalJoinOuter]] with a CRASH INJECTED MID-CORPUS: the
-    * eviction-driven leg of the join-buffer recovery story. The crash lands
-    * during the file batches (the corpus-spanning watermark delay means no
-    * eviction can fire before the sentinels), so the reopened query carries
-    * recovered buffers through the REST of the corpus and then the
-    * watermark no-data batches must still emit exactly one null row per
-    * never-matched left — eviction fired from recovered state, the one
-    * semantic the inner restart leg can't reach. Lost buffers would both
-    * drop straddling pairs AND lose pending never-matched lefts (their
-    * nulls never emit); re-emitted matched pairs are absorbed by
-    * (l_id, r_id) dedup. Same oracle as the steady outer replay. */
-  def replayIntervalJoinOuterRestart(spark: SparkSession, events: DataFrame,
-                                     withinMs: Long = 1800000L, nFiles: Int = 2,
-                                     killAfterBatches: Int = 1,
-                                     stageKey: Option[String] = None): DataFrame = {
-    // Same per-source lockstep arithmetic as the inner restart: the two
-    // sources yield nFiles REAL file batches (each per-trigger file pair),
-    // then the sentinel batches. Bounding by nFiles keeps the crash on a
-    // real data batch with real data still ahead of the recovery query.
-    require(killAfterBatches >= 1 && killAfterBatches < nFiles,
-      s"crash must land mid-corpus: need 1 <= killAfterBatches < nFiles, " +
-        s"got $killAfterBatches / $nFiles")
-    outerJoinReplayCore(spark, events, withinMs, nFiles, stageKey,
-      killAfterBatches)
-  }
-
-  private def outerJoinReplayCore(spark: SparkSession, events: DataFrame,
-                                  withinMs: Long, nFiles: Int,
-                                  stageKey: Option[String],
-                                  killAfterBatches: Int): DataFrame = {
-    val within = s"$withinMs milliseconds"
-    val (lsrc, rsrc, delaySec) = memoStage(stageKey, s"ssjoin_outer|$withinMs|$nFiles", events) {
-      val root = replayTempRoot("graft_ssjo_replay_")
-      val cols = Seq(col("event_id"), col("user_id"), col("ts"))
-      def stageTmp(tmp: String, side: DataFrame): Unit =
-        side.select(cols: _*).repartitionByRange(nFiles, col("ts"))
-          .write.mode("overwrite").parquet(tmp)
-      stageTmp(s"$root/l.tmp",
-        events.filter(col("event_type").isin("view", "click")))
-      stageTmp(s"$root/r.tmp", events.filter(col("event_type") === "purchase"))
-      // Premise scalars from the JUST-WRITTEN staging in ONE aggregation
-      // pass — aggregating `events` here re-executed the full source plan a
-      // third time after the two staging writes (review finding; the
-      // sess-leg convention). The staged union's bounds are also the
-      // tighter correct ones: only staged rows replay, so the sentinel
-      // horizon and eviction bound need exactly their span and max.
-      val bounds = spark.read.parquet(s"$root/l.tmp", s"$root/r.tmp").agg(
-        (max(unix_millis(col("ts"))) - min(unix_millis(col("ts")))).as("span"),
-        max(unix_millis(col("ts"))).as("mx")).head()
-      val span = bounds.getLong(0); val maxMs = bounds.getLong(1)
-      val delayMs = span + 86400000L
-      def layWithSentinels(dir: String, sentinelUser: Long): String = {
-        val tmp = s"$dir.tmp"; val sentTmp = s"$dir.sent"
-        // Two sentinel files, each its own micro-batch: the first advances
-        // the watermark past every real left's eviction bound, the second
-        // drives the extra trigger in which eviction actually emits.
-        (0 to 1).foreach { i =>
-          spark.range(1).select(lit(-1L - i).as("event_id"),
-              lit(sentinelUser).as("user_id"),
-              timestamp_millis(lit(maxMs + withinMs + delayMs + 3600000L
-                + i * 1000L)).as("ts"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$sentTmp$i")
-        }
-        layOrdered(Seq(tmp, s"${sentTmp}0", s"${sentTmp}1"), dir)
-        dir
-      }
-      (layWithSentinels(s"$root/l", -1L),
-       layWithSentinels(s"$root/r", -2L),
-       java.lang.Long.valueOf(delayMs / 1000L))
-    }
-    if (killAfterBatches > 0)
-      requireRealBatchAfterCrash(killAfterBatches,
-        math.min(stagedPartCount(s"$lsrc.tmp"), stagedPartCount(s"$rsrc.tmp")),
-        "outer-join restart")
-    val run = replayTempRoot("graft_ssjo_run_")
-    val out = s"$run/out"; val ckpt = s"$run/ckpt"
-    def src(dir: String) = spark.readStream
-      .schema(spark.read.parquet(dir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(dir)
-    def joined = intervalJoinStreams(src(lsrc), src(rsrc), "user_id", "ts",
-        within = within, watermark = s"$delaySec seconds",
-        joinType = "left_outer")
-      .select(col("l.event_id").as("l_id"), col("r.event_id").as("r_id"),
-        col("l.user_id").as("user_id"))
-    val append = (batch: DataFrame, _: Long) =>
-      batch.write.mode("append").parquet(out)
-    withReplayFanout(spark) {
-      if (killAfterBatches > 0) {
-        val CrashMark = "graft-simulated-crash-pre-eviction"
-        val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-        val q1 = joined.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            append(batch, id)
-            if (seen.incrementAndGet() == killAfterBatches)
-              throw new RuntimeException(CrashMark)
+    Replay.run(spark, "outer", nFiles, killAfterBatches) { out =>
+      val (lsrc, rsrc, delaySec) =
+        StageMemo(stageKey, s"ssjoin_outer|$withinMs|$nFiles", events) {
+          val root = TempRoots.create("graft_ssjo_replay_")
+          stageSides(events, nFiles, s"$root/l.tmp", s"$root/r.tmp")
+          // Premise scalars from the JUST-WRITTEN staging in ONE pass; only
+          // staged rows replay, so their span and max are the bounds.
+          val bounds = spark.read.parquet(s"$root/l.tmp", s"$root/r.tmp").agg(
+            (max(unix_millis(col("ts"))) - min(unix_millis(col("ts")))).as("span"),
+            max(unix_millis(col("ts"))).as("mx")).head()
+          val span = bounds.getLong(0); val maxMs = bounds.getLong(1)
+          val delayMs = span + 86400000L
+          def layWithSentinels(dir: String, sentinelUser: Long): String = {
+            // Two sentinel files, each its own micro-batch: the first
+            // advances the watermark past every real left's eviction bound,
+            // the second drives the trigger in which eviction emits.
+            (0 to 1).foreach { i =>
+              spark.range(1).select(lit(-1L - i).as("event_id"),
+                  lit(sentinelUser).as("user_id"),
+                  timestamp_millis(lit(maxMs + withinMs + delayMs + 3600000L
+                    + i * 1000L)).as("ts"))
+                .coalesce(1).write.mode("overwrite").parquet(s"$dir.sent$i")
+            }
+            layOrdered(Seq(s"$dir.tmp", s"$dir.sent0", s"$dir.sent1"), dir)
+            dir
           }
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .start()
-        expectInjectedCrash(CrashMark) {
-          try q1.processAllAvailable() finally q1.stop()
+          (layWithSentinels(s"$root/l", -1L), layWithSentinels(s"$root/r", -2L),
+            java.lang.Long.valueOf(delayMs / 1000L))
         }
-      }
-      val q = joined.writeStream
-        .foreachBatch(append)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .start()
-      // processAllAvailable, not AvailableNow: the null rows emit in
-      // watermark-driven no-data batches after the sentinels. stop() in
-      // finally so a failed drain can't leak a running query.
-      try q.processAllAvailable() finally q.stop()
+      Replay.Rung(
+        stream = () => joinPairs(spark, lsrc, rsrc, s"$withinMs milliseconds",
+          s"$delaySec seconds", "left_outer"),
+        sink = appendTo(out),
+        settle = () => spark.read.parquet(out).filter(col("user_id") >= 0L),
+        realBatches = () => math.min(Replay.partCount(s"$lsrc.tmp"),
+          Replay.partCount(s"$rsrc.tmp")),
+        absorbKeys = Seq("l_id", "r_id"))
     }
-    val raw = spark.read.parquet(out).filter(col("user_id") >= 0L)
-    // Crash leg only: absorb the replayed batch's re-emitted matched pairs.
-    // (l_id, r_id) keys the output — a matched pair emits once, and a null
-    // row's l_id appears only when NO match exists for it.
-    if (killAfterBatches > 0) raw.dropDuplicates("l_id", "r_id") else raw
-  }
 
   /** Full consumer leg: Kafka -> enrich -> upsert (compile-time wiring; needs
     * live brokers, exercised in tests via MemoryStream + consumerTransform). */

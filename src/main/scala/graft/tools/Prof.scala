@@ -71,30 +71,30 @@ object Prof {
   }
 
   private def time(spark: SparkSession, names: Seq[String], query: String => DataFrame): Unit = {
-    for (k <- Seq(graft.Materialize.ModeKey, graft.Materialize.DirKey);
-         v <- sys.props.get(k)) {
-      spark.conf.set(k, v)
-      println(s"[time] $k=$v")
-    }
+    val confs = (for (k <- Seq(graft.Materialize.ModeKey, graft.Materialize.DirKey);
+                      v <- sys.props.get(k)) yield k -> v).toMap
+    confs.foreach { case (k, v) => println(s"[time] $k=$v") }
     val forceHash = sys.env.get("SPARK_GRAFT_FORCE").contains("hash")
-    for (pass <- 1 to 2; n <- names) {
-      val t0 = System.nanoTime()
-      val df = query(n)
-      val rows =
-        if (forceHash) {
-          import org.apache.spark.sql.functions._
-          // xxhash64 rejects MapType at analysis (Skew.hashSafe documents
-          // the constraint): route non-hashable columns through to_json so
-          // EVERY output column still evaluates per row. xor, not sum — an
-          // ANSI long sum overflows on full-range hashes.
-          val folded = df.schema.fields.map { f =>
-            if (graft.ops.Skew.hashSafe(f.dataType)) col(f.name) else to_json(col(f.name))
-          }
-          val r = df.agg(count(lit(1)), bit_xor(xxhash64(folded.toIndexedSeq: _*))).head()
-          println(s"[time] $n checksum=${r.get(1)}")
-          r.getLong(0)
-        } else df.count()
-      println(f"[time] pass=$pass $n rows=$rows t=${(System.nanoTime() - t0) / 1e9}%.2fs")
+    graft.streaming.Replay.withConfs(spark, confs) {
+      for (pass <- 1 to 2; n <- names) {
+        val t0 = System.nanoTime()
+        val df = query(n)
+        val rows =
+          if (forceHash) {
+            import org.apache.spark.sql.functions._
+            // xxhash64 rejects MapType at analysis (Skew.hashSafe documents
+            // the constraint): route non-hashable columns through to_json so
+            // EVERY output column still evaluates per row. xor, not sum — an
+            // ANSI long sum overflows on full-range hashes.
+            val folded = df.schema.fields.map { f =>
+              if (graft.ops.Skew.hashSafe(f.dataType)) col(f.name) else to_json(col(f.name))
+            }
+            val r = df.agg(count(lit(1)), bit_xor(xxhash64(folded.toIndexedSeq: _*))).head()
+            println(s"[time] $n checksum=${r.get(1)}")
+            r.getLong(0)
+          } else df.count()
+        println(f"[time] pass=$pass $n rows=$rows t=${(System.nanoTime() - t0) / 1e9}%.2fs")
+      }
     }
   }
 
@@ -236,7 +236,7 @@ object Prof {
       println(f"[replay]   stateCommit      total=${stateCommit.get() / 1e3}%6.2fs " +
         f"per-batch=${stateCommit.get() / 1e3 / nb}%6.3fs")
       val trig = sums.getOrElse("triggerExecution", 0L) / 1e3
-      println(f"[replay]   harness(wall-Σtrigger)=${wall - trig}%.2fs")
+      println(f"[replay]   harness(wall-sum_trigger)=${wall - trig}%.2fs")
     }
   }
 }

@@ -1703,7 +1703,7 @@ class PropertySpec extends SparkSpec {
       }
       val df = events.toDF("event_id", "user_id", "event_type", "value", "ts")
       val got = graft.streaming.Pipeline
-        .replayUpsertRestart(spark, df, nFiles, kill)
+        .replayUpsertDaily(spark, df, nFiles, kill)
         .select(col("user_id"), col("event_id"))
         .as[(Long, Long)].collect().toSet
       // sequential latest-wins: max (ts, event_id) per (user, calendar day).
@@ -1756,7 +1756,7 @@ class PropertySpec extends SparkSpec {
       val steady = settle(graft.streaming.Pipeline
         .replayStatefulGpa(spark, df, excl, nFiles = 4, stageKey = key))
       val restarted = settle(graft.streaming.Pipeline
-        .replayStatefulGpaRestart(spark, df, excl, nFiles = 4,
+        .replayStatefulGpa(spark, df, excl, nFiles = 4,
           killAfterBatches = kill, stageKey = key))
       steady.nonEmpty && restarted == steady
     })
@@ -1792,7 +1792,7 @@ class PropertySpec extends SparkSpec {
       val steady = settle(graft.streaming.Pipeline
         .replaySessionSummaries(spark, df, nFiles = 4, stageKey = key))
       val restarted = settle(graft.streaming.Pipeline
-        .replaySessionSummariesRestart(spark, df, nFiles = 4,
+        .replaySessionSummaries(spark, df, nFiles = 4,
           killAfterBatches = kill, stageKey = key))
       steady.nonEmpty && restarted == steady
     })

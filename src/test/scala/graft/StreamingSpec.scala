@@ -2,11 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.etl.Upsert
-import graft.streaming.Pipeline
+import graft.streaming.{Pipeline, Replay}
 
 /** §2.5 streaming semantics with MemoryStream (SURVEY.md §5.5): delta-dedup
   * emits each distinct row version once; keyed upsert is last-write-wins and
@@ -16,6 +18,12 @@ class StreamingSpec extends SparkSpec {
   implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def ts(s: String) = Timestamp.valueOf(s)
+  // The sf0.001 replays share one staging per JVM through the memo; each
+  // run still gets a fresh checkpoint and sink.
+  private val sf = "/root/testdata/sf0.001"
+  private val sfKey = Some(sf)
+  private def withRocksDb[T](body: => T): T =
+    Replay.withConfs(spark, Map(Replay.StateProvider -> Replay.RocksDbProvider))(body)
 
   test("T1 streaming: re-sent file with one changed row emits exactly the change") {
     val input = MemoryStream[(Timestamp, String, Double)]
@@ -135,13 +143,15 @@ class StreamingSpec extends SparkSpec {
       .option("checkpointLocation", ckpt)
       .start()
     val q1 = start()
-    input.addData((ts("2024-01-01 09:00:00"), "a", 1.0))
-    q1.processAllAvailable()
-    q1.stop() // simulate crash/restart — the reference loses its state here (pro.py:18)
+    try {
+      input.addData((ts("2024-01-01 09:00:00"), "a", 1.0))
+      q1.processAllAvailable()
+    } finally q1.stop() // simulate crash/restart — the reference loses its state here (pro.py:18)
     val q2 = start()
-    input.addData((ts("2024-01-01 10:00:00"), "b", 2.0))
-    q2.processAllAvailable()
-    q2.stop()
+    try {
+      input.addData((ts("2024-01-01 10:00:00"), "b", 2.0))
+      q2.processAllAvailable()
+    } finally q2.stop()
     val out = spark.read.parquet(dir).select("k", "v").as[(String, Double)].collect().toMap
     assert(out == Map("a" -> 1.0, "b" -> 2.0)) // both batches exactly once
   }
@@ -191,111 +201,96 @@ class StreamingSpec extends SparkSpec {
 
   test("transformWithState running GPA matches the mapGroupsWithState leg") {
     import graft.streaming.StatefulGpa
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
     // transformWithState requires the RocksDB provider (the scale backend)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(String, String, Double, Double, Int)]
-    val df = input.toDF().toDF("F_MASV", "F_TENMHVN", "F_DIEM2", "F_DVHT", "NHHK")
-    val out = StatefulGpa.runningGpaV2(
-      StatefulGpa.eligiblePartials(df, excludedSemester = 20251))
-    val q = out.toDF().writeStream.format("memory").queryName("gpa2_out")
-      .outputMode("update").start()
-    try {
-      input.addData(("S1", "Math", 9.5, 3.0, 20231), ("S1", "Lit", 6.0, 2.0, 20231))
-      q.processAllAvailable()
-      input.addData(("S1", "PE*", 9.0, 1.0, 20232), ("S1", "Chem", 3.0, 4.0, 20232),
-        ("S1", "Phys", 8.0, 5.0, 20232))
-      q.processAllAvailable()
-      val rows = spark.table("gpa2_out").collect()
-        .map(r => (r.getAs[String]("masv"), r.getAs[Double]("dtbctl"),
-          r.getAs[Double]("credits"))).toSet
-      // identical numbers to the mapGroupsWithState spec above
-      assert(rows == Set(("S1", 3.2, 5.0), ("S1", 3.35, 10.0)))
-    } finally {
-      q.stop()
-      saved.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+    withRocksDb {
+      val input = MemoryStream[(String, String, Double, Double, Int)]
+      val df = input.toDF().toDF("F_MASV", "F_TENMHVN", "F_DIEM2", "F_DVHT", "NHHK")
+      val out = StatefulGpa.runningGpaV2(
+        StatefulGpa.eligiblePartials(df, excludedSemester = 20251))
+      val q = out.toDF().writeStream.format("memory").queryName("gpa2_out")
+        .outputMode("update").start()
+      try {
+        input.addData(("S1", "Math", 9.5, 3.0, 20231), ("S1", "Lit", 6.0, 2.0, 20231))
+        q.processAllAvailable()
+        input.addData(("S1", "PE*", 9.0, 1.0, 20232), ("S1", "Chem", 3.0, 4.0, 20232),
+          ("S1", "Phys", 8.0, 5.0, 20232))
+        q.processAllAvailable()
+        val rows = spark.table("gpa2_out").collect()
+          .map(r => (r.getAs[String]("masv"), r.getAs[Double]("dtbctl"),
+            r.getAs[Double]("credits"))).toSet
+        // identical numbers to the mapGroupsWithState spec above
+        assert(rows == Set(("S1", 3.2, 5.0), ("S1", 3.35, 10.0)))
+      } finally q.stop()
     }
   }
 
   test("event-time timers close sessions on inactivity and reopen on new data") {
     import graft.streaming.SessionTimeout
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    val out = SessionTimeout.summaries(
-      input.toDF().toDF("ts", "user_id", "value"),
-      gapMs = 5 * 60 * 1000, watermark = "0 seconds")
-    val q = out.toDF().writeStream.format("memory").queryName("sess_out")
-      .outputMode("append").start()
-    try {
-      // user 1: two events 2 min apart (one session); user 2: one event
-      input.addData((ts("2024-01-01 10:00:00"), 1L, 1.0),
-                    (ts("2024-01-01 10:02:00"), 1L, 2.0),
-                    (ts("2024-01-01 10:00:00"), 2L, 5.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_out").isEmpty) // nothing proven over yet
-      // advance the watermark past both users' gap -> both sessions close
-      input.addData((ts("2024-01-01 10:30:00"), 9L, 0.0))
-      q.processAllAvailable()
-      val closed = spark.table("sess_out")
-        .select("user_id", "n_events", "total").as[(Long, Long, Double)]
-        .collect().toSet
-      assert(closed == Set((1L, 2L, 3.0), (2L, 1L, 5.0)), s"got $closed")
-      // user 1 returns: a FRESH session, closed by a later watermark push
-      input.addData((ts("2024-01-01 11:00:00"), 1L, 7.0))
-      q.processAllAvailable()
-      input.addData((ts("2024-01-01 12:00:00"), 9L, 0.0))
-      q.processAllAvailable()
-      val all = spark.table("sess_out")
-        .select("user_id", "n_events", "total").as[(Long, Long, Double)]
-        .collect().toSet
-      assert(all.contains((1L, 1L, 7.0)), s"no fresh session: $all")
-    } finally {
-      q.stop()
-      saved.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+    withRocksDb {
+      val input = MemoryStream[(Timestamp, Long, Double)]
+      val out = SessionTimeout.summaries(
+        input.toDF().toDF("ts", "user_id", "value"),
+        gapMs = 5 * 60 * 1000, watermark = "0 seconds")
+      val q = out.toDF().writeStream.format("memory").queryName("sess_out")
+        .outputMode("append").start()
+      try {
+        // user 1: two events 2 min apart (one session); user 2: one event
+        input.addData((ts("2024-01-01 10:00:00"), 1L, 1.0),
+                      (ts("2024-01-01 10:02:00"), 1L, 2.0),
+                      (ts("2024-01-01 10:00:00"), 2L, 5.0))
+        q.processAllAvailable()
+        assert(spark.table("sess_out").isEmpty) // nothing proven over yet
+        // advance the watermark past both users' gap -> both sessions close
+        input.addData((ts("2024-01-01 10:30:00"), 9L, 0.0))
+        q.processAllAvailable()
+        val closed = spark.table("sess_out")
+          .select("user_id", "n_events", "total").as[(Long, Long, Double)]
+          .collect().toSet
+        assert(closed == Set((1L, 2L, 3.0), (2L, 1L, 5.0)), s"got $closed")
+        // user 1 returns: a FRESH session, closed by a later watermark push
+        input.addData((ts("2024-01-01 11:00:00"), 1L, 7.0))
+        q.processAllAvailable()
+        input.addData((ts("2024-01-01 12:00:00"), 9L, 0.0))
+        q.processAllAvailable()
+        val all = spark.table("sess_out")
+          .select("user_id", "n_events", "total").as[(Long, Long, Double)]
+          .collect().toSet
+        assert(all.contains((1L, 1L, 7.0)), s"no fresh session: $all")
+      } finally q.stop()
     }
   }
 
   test("two sessions whose events share one micro-batch emit as two summaries") {
     import graft.streaming.SessionTimeout
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    val out = SessionTimeout.summaries(
-      input.toDF().toDF("ts", "user_id", "value"),
-      gapMs = 5 * 60 * 1000, watermark = "0 seconds")
-    val q = out.toDF().writeStream.format("memory").queryName("sess_split_out")
-      .outputMode("append").start()
-    try {
-      // ONE batch, user 1: 10:00+10:01 then a 19-minute silence then 10:20 —
-      // two logical sessions; out-of-order delivery inside the batch must
-      // not matter. The first closes inline (gap split), the second by timer.
-      input.addData((ts("2024-01-01 10:20:00"), 1L, 7.0),
-                    (ts("2024-01-01 10:00:00"), 1L, 1.0),
-                    (ts("2024-01-01 10:01:00"), 1L, 2.0))
-      q.processAllAvailable()
-      val inline = spark.table("sess_split_out")
-        .select("user_id", "n_events", "total", "start_ms", "end_ms")
-        .as[(Long, Long, Double, Long, Long)].collect().toSet
-      assert(inline == Set((1L, 2L, 3.0,
-        ts("2024-01-01 10:00:00").getTime, ts("2024-01-01 10:01:00").getTime)),
-        s"in-batch gap split missing: $inline")
-      // watermark push closes the second session via its timer
-      input.addData((ts("2024-01-01 11:00:00"), 9L, 0.0))
-      q.processAllAvailable()
-      val all = spark.table("sess_split_out")
-        .select("user_id", "n_events", "total").as[(Long, Long, Double)]
-        .collect().toSet
-      assert(all.contains((1L, 1L, 7.0)), s"timer leg missing: $all")
-    } finally {
-      q.stop()
-      saved.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+    withRocksDb {
+      val input = MemoryStream[(Timestamp, Long, Double)]
+      val out = SessionTimeout.summaries(
+        input.toDF().toDF("ts", "user_id", "value"),
+        gapMs = 5 * 60 * 1000, watermark = "0 seconds")
+      val q = out.toDF().writeStream.format("memory").queryName("sess_split_out")
+        .outputMode("append").start()
+      try {
+        // ONE batch, user 1: 10:00+10:01 then a 19-minute silence then 10:20 —
+        // two logical sessions; out-of-order delivery inside the batch must
+        // not matter. The first closes inline (gap split), the second by timer.
+        input.addData((ts("2024-01-01 10:20:00"), 1L, 7.0),
+                      (ts("2024-01-01 10:00:00"), 1L, 1.0),
+                      (ts("2024-01-01 10:01:00"), 1L, 2.0))
+        q.processAllAvailable()
+        val inline = spark.table("sess_split_out")
+          .select("user_id", "n_events", "total", "start_ms", "end_ms")
+          .as[(Long, Long, Double, Long, Long)].collect().toSet
+        assert(inline == Set((1L, 2L, 3.0,
+          ts("2024-01-01 10:00:00").getTime, ts("2024-01-01 10:01:00").getTime)),
+          s"in-batch gap split missing: $inline")
+        // watermark push closes the second session via its timer
+        input.addData((ts("2024-01-01 11:00:00"), 9L, 0.0))
+        q.processAllAvailable()
+        val all = spark.table("sess_split_out")
+          .select("user_id", "n_events", "total").as[(Long, Long, Double)]
+          .collect().toSet
+        assert(all.contains((1L, 1L, 7.0)), s"timer leg missing: $all")
+      } finally q.stop()
     }
   }
 
@@ -305,41 +300,36 @@ class StreamingSpec extends SparkSpec {
     // the session is open but unproven, restart from the checkpoint, then
     // advance the watermark — the recovered timer must fire and emit.
     import graft.streaming.SessionTimeout
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(provider)
-    spark.conf.set(provider,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val ckpt = java.nio.file.Files.createTempDirectory("sess-restart").toString
-    val input = MemoryStream[(Timestamp, Long, Double)]
-    // foreachBatch sink: the memory sink refuses checkpoint recovery; this
-    // buffer lives on the driver, exactly where foreachBatch runs.
-    val emitted = java.util.concurrent.ConcurrentHashMap
-      .newKeySet[(Long, Long, Double)]()
-    def startQuery() = SessionTimeout.summaries(
-        input.toDF().toDF("ts", "user_id", "value"),
-        gapMs = 5 * 60 * 1000, watermark = "0 seconds")
-      .toDF().writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.select("user_id", "n_events", "total").collect()
-          .foreach(r => emitted.add((r.getLong(0), r.getLong(1), r.getDouble(2))))
-      }
-      .option("checkpointLocation", ckpt).outputMode("append").start()
-    val q1 = startQuery()
-    try {
-      input.addData((ts("2024-01-01 10:00:00"), 1L, 1.0),
-                    (ts("2024-01-01 10:02:00"), 1L, 2.0))
-      q1.processAllAvailable()
-      assert(emitted.isEmpty) // open, unproven
-    } finally q1.stop()
-    val q2 = startQuery()
-    try {
-      input.addData((ts("2024-01-01 10:30:00"), 9L, 0.0)) // watermark push
-      q2.processAllAvailable()
-      assert(emitted.contains((1L, 2L, 3.0)),
-        s"recovered timer did not fire after restart: $emitted")
-    } finally {
-      q2.stop()
-      saved.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+    withRocksDb {
+      val ckpt = java.nio.file.Files.createTempDirectory("sess-restart").toString
+      val input = MemoryStream[(Timestamp, Long, Double)]
+      // foreachBatch sink: the memory sink refuses checkpoint recovery; this
+      // buffer lives on the driver, exactly where foreachBatch runs.
+      val emitted = java.util.concurrent.ConcurrentHashMap
+        .newKeySet[(Long, Long, Double)]()
+      def startQuery() = SessionTimeout.summaries(
+          input.toDF().toDF("ts", "user_id", "value"),
+          gapMs = 5 * 60 * 1000, watermark = "0 seconds")
+        .toDF().writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          batch.select("user_id", "n_events", "total").collect()
+            .foreach(r => emitted.add((r.getLong(0), r.getLong(1), r.getDouble(2))))
+        }
+        .option("checkpointLocation", ckpt).outputMode("append").start()
+      val q1 = startQuery()
+      try {
+        input.addData((ts("2024-01-01 10:00:00"), 1L, 1.0),
+                      (ts("2024-01-01 10:02:00"), 1L, 2.0))
+        q1.processAllAvailable()
+        assert(emitted.isEmpty) // open, unproven
+      } finally q1.stop()
+      val q2 = startQuery()
+      try {
+        input.addData((ts("2024-01-01 10:30:00"), 9L, 0.0)) // watermark push
+        q2.processAllAvailable()
+        assert(emitted.contains((1L, 2L, 3.0)),
+          s"recovered timer did not fire after restart: $emitted")
+      } finally q2.stop()
     }
   }
 
@@ -413,7 +403,7 @@ class StreamingSpec extends SparkSpec {
       (6L, 30L, "a", 6.0, ts("2024-01-01 10:30:00")),
       (7L, 20L, "c", 7.0, ts("2024-01-01 09:00:00"))  // older than event 3
     ).toDF("event_id", "user_id", "event_type", "value", "ts")
-    val out = Pipeline.replayUpsertRestart(spark, events, nFiles = 4,
+    val out = Pipeline.replayUpsertDaily(spark, events, nFiles = 4,
         killAfterBatches = 2)
       .select($"user_id", $"event_id")
       .as[(Long, Long)].collect().toSet
@@ -429,13 +419,15 @@ class StreamingSpec extends SparkSpec {
     // and the settled (dtbctl, credits, n) triples would diverge from the
     // steady-state replay's. Runs on the real sf0.001 events table so the
     // staging straddle guard (keys spread across micro-batches) bites.
-    val events = graft.model.Tables(spark, "/root/testdata/sf0.001", "events")
+    val events = graft.model.Tables(spark, sf, "events")
     val excl = graft.query.EventsAdapter.ExcludedSemester
     def settle(df: org.apache.spark.sql.DataFrame) =
       df.select($"masv", $"dtbctl", $"credits", $"n")
         .as[(String, Double, Double, Long)].collect().toSet
-    val steady = settle(Pipeline.replayStatefulGpa(spark, events, excl))
-    val restarted = settle(Pipeline.replayStatefulGpaRestart(spark, events, excl))
+    val steady = settle(Pipeline.replayStatefulGpa(spark, events, excl,
+      stageKey = sfKey))
+    val restarted = settle(Pipeline.replayStatefulGpa(spark, events, excl,
+      killAfterBatches = 2, stageKey = sfKey))
     assert(steady.nonEmpty && restarted == steady,
       s"restart diverged: ${restarted.diff(steady)} vs ${steady.diff(restarted)}")
   }
@@ -448,12 +440,14 @@ class StreamingSpec extends SparkSpec {
     // sentinel's watermark no-data batch fires, producing missing rows
     // rather than wrong ones. Real sf0.001 events so sessions straddle the
     // time-ordered micro-batch cuts.
-    val events = graft.model.Tables(spark, "/root/testdata/sf0.001", "events")
+    val events = graft.model.Tables(spark, sf, "events")
     def settle(df: org.apache.spark.sql.DataFrame) =
       df.select($"user_id", $"n_events", $"total_cents", $"start_ms", $"end_ms")
         .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val steady = settle(Pipeline.replaySessionSummaries(spark, events))
-    val restarted = settle(Pipeline.replaySessionSummariesRestart(spark, events))
+    val steady = settle(Pipeline.replaySessionSummaries(spark, events,
+      stageKey = sfKey))
+    val restarted = settle(Pipeline.replaySessionSummaries(spark, events,
+      killAfterBatches = 2, stageKey = sfKey))
     assert(steady.nonEmpty && restarted == steady,
       s"restart diverged: ${restarted.diff(steady)} vs ${steady.diff(restarted)}")
   }
@@ -466,12 +460,14 @@ class StreamingSpec extends SparkSpec {
     // buffers drop pairs whose sides straddle the crash; a post-batch
     // resume double-inserts the replayed rows. Real sf0.001 events so
     // pairs form across the interleaved per-side micro-batches.
-    val events = graft.model.Tables(spark, "/root/testdata/sf0.001", "events")
+    val events = graft.model.Tables(spark, sf, "events")
     def settle(df: org.apache.spark.sql.DataFrame) =
       df.select($"l_id", $"r_id", $"user_id")
         .as[(Long, Long, Long)].collect().toSet
-    val steady = settle(Pipeline.replayIntervalJoin(spark, events))
-    val restarted = settle(Pipeline.replayIntervalJoinRestart(spark, events))
+    val steady = settle(Pipeline.replayIntervalJoin(spark, events,
+      stageKey = sfKey))
+    val restarted = settle(Pipeline.replayIntervalJoin(spark, events,
+      killAfterBatches = 1, stageKey = sfKey))
     assert(steady.nonEmpty && restarted == steady,
       s"restart diverged: ${restarted.diff(steady)} vs ${steady.diff(restarted)}")
   }
@@ -484,20 +480,22 @@ class StreamingSpec extends SparkSpec {
     // A recovery bug that only bites when the crash lands on the first or
     // last-but-one batch (empty state / nearly-drained source) would slip
     // past a single-point test.
-    val events = graft.model.Tables(spark, "/root/testdata/sf0.001", "events")
+    val events = graft.model.Tables(spark, sf, "events")
     val excl = graft.query.EventsAdapter.ExcludedSemester
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).toSet
-    val s2Steady = rows(Pipeline.replayUpsertDaily(spark, events))
-    val gpaSteady = rows(Pipeline.replayStatefulGpa(spark, events, excl))
-    val sessSteady = rows(Pipeline.replaySessionSummaries(spark, events))
-    for (k <- Seq(1, 3)) { // k=2 is each leg's default, covered elsewhere
-      assert(rows(Pipeline.replayUpsertRestart(spark, events,
-        killAfterBatches = k)) == s2Steady, s"s2 diverged at k=$k")
-      assert(rows(Pipeline.replayStatefulGpaRestart(spark, events, excl,
-        killAfterBatches = k)) == gpaSteady, s"gpa diverged at k=$k")
-      assert(rows(Pipeline.replaySessionSummariesRestart(spark, events,
-        killAfterBatches = k)) == sessSteady, s"sess diverged at k=$k")
+    val s2Steady = rows(Pipeline.replayUpsertDaily(spark, events, stageKey = sfKey))
+    val gpaSteady = rows(Pipeline.replayStatefulGpa(spark, events, excl,
+      stageKey = sfKey))
+    val sessSteady = rows(Pipeline.replaySessionSummaries(spark, events,
+      stageKey = sfKey))
+    for (k <- Seq(1, 3)) { // k=2 is each entry's kill point, covered elsewhere
+      assert(rows(Pipeline.replayUpsertDaily(spark, events,
+        killAfterBatches = k, stageKey = sfKey)) == s2Steady, s"s2 diverged at k=$k")
+      assert(rows(Pipeline.replayStatefulGpa(spark, events, excl,
+        killAfterBatches = k, stageKey = sfKey)) == gpaSteady, s"gpa diverged at k=$k")
+      assert(rows(Pipeline.replaySessionSummaries(spark, events,
+        killAfterBatches = k, stageKey = sfKey)) == sessSteady, s"sess diverged at k=$k")
     }
   }
 
@@ -507,19 +505,22 @@ class StreamingSpec extends SparkSpec {
     // Dedup: a post-batch resume would DROP the replayed batch's first
     // occurrences as already-seen. Outer join: nulls must fire from
     // buffers recovered across the crash — lost pending lefts never emit.
-    val docs = graft.model.Tables(spark, "/root/testdata/sf0.001", "documents")
-    val t1Steady = Pipeline.replayStreamDedup(spark, docs)
+    val docs = graft.model.Tables(spark, sf, "documents")
+    val t1Steady = Pipeline.replayStreamDedup(spark, docs, stageKey = sfKey)
       .as[(String, Int)].collect().toSet
-    val t1Restart = Pipeline.replayStreamDedupRestart(spark, docs)
+    val t1Restart = Pipeline.replayStreamDedup(spark, docs, killAfterBatches = 2,
+        stageKey = sfKey)
       .as[(String, Int)].collect().toSet
     assert(t1Steady.nonEmpty && t1Restart == t1Steady,
       s"t1 restart diverged: ${t1Restart.diff(t1Steady)} vs ${t1Steady.diff(t1Restart)}")
-    val events = graft.model.Tables(spark, "/root/testdata/sf0.001", "events")
+    val events = graft.model.Tables(spark, sf, "events")
     def settle(df: org.apache.spark.sql.DataFrame) =
       df.select($"l_id", $"r_id", $"user_id")
         .as[(Long, Option[Long], Long)].collect().toSet
-    val oSteady = settle(Pipeline.replayIntervalJoinOuter(spark, events))
-    val oRestart = settle(Pipeline.replayIntervalJoinOuterRestart(spark, events))
+    val oSteady = settle(Pipeline.replayIntervalJoinOuter(spark, events,
+      stageKey = sfKey))
+    val oRestart = settle(Pipeline.replayIntervalJoinOuter(spark, events,
+      killAfterBatches = 1, stageKey = sfKey))
     assert(oSteady.exists(_._2.isEmpty) && oRestart == oSteady,
       s"outer restart diverged: ${oRestart.diff(oSteady)} vs ${oSteady.diff(oRestart)}")
   }
@@ -533,35 +534,32 @@ class StreamingSpec extends SparkSpec {
     // RocksDB-relevant state shapes (timers+sessions; join buffers, forced
     // onto the RocksDB provider here) through a full crash+recover
     // lifecycle with the flag on: recovery must still settle exactly.
-    val events = graft.model.Tables(spark, "/root/testdata/sf0.001", "events")
+    val events = graft.model.Tables(spark, sf, "events")
     val changelog =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val provider = "spark.sql.streaming.stateStore.providerClass"
-    val savedC = spark.conf.getOption(changelog)
-    val savedP = spark.conf.getOption(provider)
-    spark.conf.set(changelog, "true")
-    try {
+    Replay.withConfs(spark, Map(changelog -> "true")) {
       def sess(df: org.apache.spark.sql.DataFrame) =
         df.select($"user_id", $"n_events", $"total_cents", $"start_ms", $"end_ms")
           .as[(Long, Long, Long, Long, Long)].collect().toSet
-      val sSteady = sess(Pipeline.replaySessionSummaries(spark, events))
-      val sRestart = sess(Pipeline.replaySessionSummariesRestart(spark, events))
+      val sSteady = sess(Pipeline.replaySessionSummaries(spark, events,
+        stageKey = sfKey))
+      val sRestart = sess(Pipeline.replaySessionSummaries(spark, events,
+        killAfterBatches = 2, stageKey = sfKey))
       assert(sSteady.nonEmpty && sRestart == sSteady,
         s"sess diverged under changelog checkpointing: " +
           s"${sRestart.diff(sSteady)} vs ${sSteady.diff(sRestart)}")
-      spark.conf.set(provider,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      def join(df: org.apache.spark.sql.DataFrame) =
-        df.select($"l_id", $"r_id", $"user_id")
-          .as[(Long, Long, Long)].collect().toSet
-      val jSteady = join(Pipeline.replayIntervalJoin(spark, events))
-      val jRestart = join(Pipeline.replayIntervalJoinRestart(spark, events))
-      assert(jSteady.nonEmpty && jRestart == jSteady,
-        s"ssjoin diverged under changelog checkpointing: " +
-          s"${jRestart.diff(jSteady)} vs ${jSteady.diff(jRestart)}")
-    } finally {
-      savedC.fold(spark.conf.unset(changelog))(spark.conf.set(changelog, _))
-      savedP.fold(spark.conf.unset(provider))(spark.conf.set(provider, _))
+      withRocksDb {
+        def join(df: org.apache.spark.sql.DataFrame) =
+          df.select($"l_id", $"r_id", $"user_id")
+            .as[(Long, Long, Long)].collect().toSet
+        val jSteady = join(Pipeline.replayIntervalJoin(spark, events,
+          stageKey = sfKey))
+        val jRestart = join(Pipeline.replayIntervalJoin(spark, events,
+          killAfterBatches = 1, stageKey = sfKey))
+        assert(jSteady.nonEmpty && jRestart == jSteady,
+          s"ssjoin diverged under changelog checkpointing: " +
+            s"${jRestart.diff(jSteady)} vs ${jSteady.diff(jRestart)}")
+      }
     }
   }
 
@@ -789,7 +787,7 @@ class StreamingSpec extends SparkSpec {
     // enough distinct rows that every one of the 4 staged files is
     // non-empty; ids 3,13,23,33 are junk (%10==3)
     val docs = (1L to 40L).map(i => (i, i * 10L)).toDF("doc_id", "n_chars")
-    val out = Pipeline.replayDeadLetterRestart(spark, docs, nFiles = 4,
+    val out = Pipeline.replayDeadLetter(spark, docs, nFiles = 4,
       killAfterBatches = 2)
       .as[(Option[Long], Option[Long], Option[String])].collect()
     // the crash-replayed batch must NOT duplicate: exactly one output line
@@ -870,5 +868,87 @@ class StreamingSpec extends SparkSpec {
       .start()
     q.awaitTermination()
     assert(got.toSeq == Seq("B2000001"), s"phantom header row? got $got")
+  }
+
+  /** Every merged replay at the two kill points just outside its range. */
+  private def outOfRangeReplays: Seq[(String, () => Any)] = {
+    val events = graft.model.Tables(spark, sf, "events")
+    val docs = graft.model.Tables(spark, sf, "documents")
+    val customer = graft.model.Tables(spark, sf, "customer")
+    val excl = graft.query.EventsAdapter.ExcludedSemester
+    Seq(-1, 4).flatMap(k => Seq[(String, () => Any)](
+      s"s2 k=$k" -> (() => Pipeline.replayUpsertDaily(spark, events, nFiles = 4,
+        killAfterBatches = k)),
+      s"xlsx k=$k" -> (() => Pipeline.replayXlsxStream(spark, customer, nFiles = 4,
+        killAfterBatches = k)),
+      s"dlq k=$k" -> (() => Pipeline.replayDeadLetter(spark, docs, nFiles = 4,
+        killAfterBatches = k)),
+      s"t1 k=$k" -> (() => Pipeline.replayStreamDedup(spark, docs, nFiles = 4,
+        killAfterBatches = k)),
+      s"gpa k=$k" -> (() => Pipeline.replayStatefulGpa(spark, events, excl,
+        nFiles = 4, killAfterBatches = k)),
+      s"sess k=$k" -> (() => Pipeline.replaySessionSummaries(spark, events,
+        nFiles = 4, killAfterBatches = k)))) ++
+    Seq(-1, 2).flatMap(k => Seq[(String, () => Any)](
+      s"ssjoin k=$k" -> (() => Pipeline.replayIntervalJoin(spark, events,
+        nFiles = 2, killAfterBatches = k)),
+      s"outer k=$k" -> (() => Pipeline.replayIntervalJoinOuter(spark, events,
+        nFiles = 2, killAfterBatches = k))))
+  }
+
+  test("replay harness: every replay refuses kill points outside 0 <= k < nFiles") {
+    for ((what, call) <- outOfRangeReplays)
+      withClue(what)(intercept[IllegalArgumentException](call()))
+  }
+
+  test("replay harness: a sink failure propagates, and no query or conf outlives a run") {
+    val width = "spark.sql.shuffle.partitions"
+    val src = java.nio.file.Files.createTempDirectory("harness-src").toString + "/src"
+    Seq(1L, 2L, 3L, 4L).toDF("id").repartitionByRange(2, $"id")
+      .write.parquet(src)
+    // a width above the harness clamp, so the run must narrow it and restore it
+    Replay.withConfs(spark, Map(width -> "16")) {
+      val before = (spark.conf.getOption(width), spark.conf.getOption(Replay.StateProvider))
+      outOfRangeReplays.foreach { case (what, call) =>
+        withClue(what)(intercept[IllegalArgumentException](call()))
+      }
+      val widthInSink = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      for (k <- Seq(0, 1)) {
+        val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          Replay.run(spark, "boom", nFiles = 2, killAfterBatches = k) { _ =>
+            Replay.Rung(
+              stream = () => spark.readStream.schema("id BIGINT")
+                .option("maxFilesPerTrigger", 1).parquet(src),
+              sink = (_: org.apache.spark.sql.DataFrame, _: Long) => {
+                widthInSink.add(spark.conf.get(width))
+                throw new IllegalStateException("sink-boom")
+              },
+              settle = () => spark.emptyDataFrame,
+              realBatches = () => 2,
+              confs = Map(Replay.StateProvider -> Replay.RocksDbProvider))
+          }
+        }
+        val msgs = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).toSeq
+        assert(msgs.exists(_.contains("sink-boom")), s"k=$k lost the sink error: $msgs")
+      }
+      assert(widthInSink.asScala.toSet == Set("8"), s"state width not clamped: $widthInSink")
+      // a normal crash+recover run on the session replay's hand corpus
+      val events = Seq(
+        (ts("2024-01-01 10:00:00"), 1L, 1.25),
+        (ts("2024-01-01 10:10:00"), 1L, 2.50),
+        (ts("2024-01-01 11:00:00"), 1L, 7.00),
+        (ts("2024-01-01 10:05:00"), 2L, 5.10)
+      ).toDF("ts", "user_id", "value")
+      val out = Pipeline.replaySessionSummaries(spark, events, nFiles = 2,
+          killAfterBatches = 1)
+        .select("user_id", "n_events", "total_cents").as[(Long, Long, Long)]
+        .collect().toSet
+      assert(out == Set((1L, 2L, 375L), (1L, 1L, 700L), (2L, 1L, 510L)), s"got $out")
+      assert(spark.streams.active.isEmpty,
+        s"queries outlived their run: ${spark.streams.active.map(_.name).toSeq}")
+      assert((spark.conf.getOption(width),
+        spark.conf.getOption(Replay.StateProvider)) == before)
+    }
   }
 }
