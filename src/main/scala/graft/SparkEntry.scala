@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.{Compact, Enrich, IncrementalAgg, Ingest, Layout, Upsert}
 import graft.functions.GradeScale
-import graft.model.{Dims, Tables}
+import graft.model.Tables
 import graft.ops.{Dedup, Multimodal, Retrieval, Similarity, TextAnalysis}
 import graft.query.{Dashboards, EventsAdapter, Progress}
 

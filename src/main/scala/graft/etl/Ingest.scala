@@ -47,15 +47,13 @@ object Ingest {
 
   /** T1: emit only rows whose hash is not in `seenHashes(row_hash)` —
     * the MD5 anti-join diff of `pro.py:46-55`. Only the hash column crosses
-    * the shuffle; with AQE the small seen-side broadcasts. */
+    * the shuffle; with AQE the small seen-side broadcasts. Duplicate hashes
+    * on the seen side cannot change an anti join's result, so the growing
+    * seen table is joined as it is, with no `distinct` pass over it. */
   def deltaDedup(incoming: DataFrame, seenHashes: DataFrame): DataFrame = {
     val hashed = incoming.withColumn("row_hash", rowHash(incoming))
-    hashed.join(seenHashes.select("row_hash").distinct(), Seq("row_hash"), "left_anti")
+    hashed.join(seenHashes.select("row_hash"), Seq("row_hash"), "left_anti")
   }
-
-  /** T1 (intra-batch form): keep one row per distinct content hash. */
-  def dedupByContent(df: DataFrame): DataFrame =
-    df.withColumn("row_hash", rowHash(df)).dropDuplicates("row_hash")
 
   /** T3: the producer deletes None/'' values (`pro.py:76`) so downstream
     * `'k' in doc` guards treat '' as absent. Columnar twin: '' -> null. */

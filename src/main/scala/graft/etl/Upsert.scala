@@ -9,11 +9,15 @@ import org.apache.spark.sql.functions._
   * The reference gets upsert semantics from Elasticsearch's deterministic
   * document id (`es.index(index, doc, id)`): re-delivery of the same key
   * overwrites, so at-least-once delivery becomes effectively exactly-once.
-  * Spark-first equivalent: arbitrate duplicates with a window over the key
-  * ordered by event time (latest wins), then merge into a date-partitioned
-  * parquet table with dynamic partition overwrite — only partitions touched
-  * by the batch are rewritten, which at 100 TB means a day's partitions, not
-  * the table.
+  * Spark-first equivalent: one window over the key ordered by event time
+  * (latest wins) arbitrates the batch together with the store rows it
+  * competes with, and the result is written into a date-partitioned parquet
+  * table with dynamic partition overwrite — only partitions touched by the
+  * batch are rewritten, which at 100 TB means a day's partitions, not the
+  * table. The write goes straight into the store: dynamic overwrite stages
+  * task output under `.spark-staging-<job>` and swaps the touched partitions
+  * in only at job commit, after every task has read its input, so no second
+  * copy of the merge is needed.
   */
 object Upsert {
 
@@ -46,11 +50,11 @@ object Upsert {
       .drop("__rn")
   }
 
-  /** Merge a (deduplicated) batch into the keyed table at `path`:
-    * new version of a key replaces the old, unseen keys append.
-    * Implemented as partition-local merge: rows are routed by
-    * `partitionCol`, and dynamic partition overwrite rewrites only the
-    * partitions present in the batch.
+  /** Merge a batch into the keyed table at `path`: new version of a key
+    * replaces the old, unseen keys append, and duplicates inside the batch
+    * are arbitrated by the same window. Implemented as partition-local
+    * merge: rows are routed by `partitionCol`, and dynamic partition
+    * overwrite rewrites only the partitions present in the batch.
     *
     * Schema drift between the batch and the store is REFUSED loudly by
     * default: the merge rewrites whole partitions, so a silently narrower
@@ -82,7 +86,6 @@ object Upsert {
                  allowSchemaEvolution: Boolean = false,
                  knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : org.apache.spark.sql.types.StructType = {
-    val incoming = latestByKey(batch, keyCols, tsCol, tieCol)
     val existing = knownSchema match {
       case Some(sc) => spark.read.schema(sc).parquet(path)
       case None =>
@@ -107,8 +110,8 @@ object Upsert {
         else spark.read.option("mergeSchema", "true").parquet(path)
     }
 
-    val merged =
-      if (existing == null) incoming
+    val candidates =
+      if (existing == null) batch
       else {
         // nullability-erased comparison: parquet read-back forces nested
         // fields nullable (ArrayType.containsNull, struct members), so a
@@ -116,24 +119,24 @@ object Upsert {
         // built from non-null values as type drift
         val existingTypes =
           existing.schema.map(f => f.name -> erasedNullability(f.dataType)).toMap
-        val incomingTypes =
-          incoming.schema.map(f => f.name -> erasedNullability(f.dataType)).toMap
-        val typeDrift = (existingTypes.keySet & incomingTypes.keySet)
-          .filter(n => existingTypes(n) != incomingTypes(n))
+        val batchTypes =
+          batch.schema.map(f => f.name -> erasedNullability(f.dataType)).toMap
+        val typeDrift = (existingTypes.keySet & batchTypes.keySet)
+          .filter(n => existingTypes(n) != batchTypes(n))
         if (typeDrift.nonEmpty)
           throw new IllegalStateException(
             s"mergeBatch: same-name TYPE drift between batch and store at $path — " +
               typeDrift.toSeq.sorted.map(n =>
                 s"$n: store ${existingTypes(n).simpleString} vs batch " +
-                  s"${incomingTypes(n).simpleString}").mkString("[", ", ", "]") +
+                  s"${batchTypes(n).simpleString}").mkString("[", ", ", "]") +
               ". Refused even under allowSchemaEvolution: a union would " +
               "silently coerce, and a partition rewrite would leave mixed " +
               "parquet physical types that wedge later schema-merging reads. " +
               "Cast the batch to the store's types before merging.")
         if (!allowSchemaEvolution &&
-            existing.columns.toSet != incoming.columns.toSet) {
-          val batchOnly = incoming.columns.toSet -- existing.columns.toSet
-          val storeOnly = existing.columns.toSet -- incoming.columns.toSet
+            existing.columns.toSet != batch.columns.toSet) {
+          val batchOnly = batch.columns.toSet -- existing.columns.toSet
+          val storeOnly = existing.columns.toSet -- batch.columns.toSet
           throw new IllegalStateException(
             s"mergeBatch: batch schema drifted from the store at $path — " +
               s"batch-only columns: ${batchOnly.toSeq.sorted.mkString("[", ", ", "]")}, " +
@@ -144,39 +147,33 @@ object Upsert {
               "allowSchemaEvolution=true to widen by name (missing side " +
               "gets nulls).")
         }
-        // Restrict the existing side to partitions the batch touches, union,
-        // re-arbitrate. Keys outside touched partitions are untouched on disk.
-        val touched = incoming.select(partitionCol).distinct()
-        val relevant = existing.join(broadcast(touched), Seq(partitionCol), "left_semi")
-        latestByKey(
-          relevant.unionByName(incoming, allowMissingColumns = allowSchemaEvolution),
-          keyCols, tsCol, tieCol)
+        // Restrict the existing side to partitions the batch touches. Keys
+        // outside touched partitions are untouched on disk.
+        val touched = batch.select(partitionCol).distinct()
+        existing.join(broadcast(touched), Seq(partitionCol), "left_semi")
+          .unionByName(batch, allowMissingColumns = allowSchemaEvolution)
       }
 
-    // Materialize the merge to a staging dir BEFORE touching `path`: the
-    // merged plan reads `path` lazily, so overwriting it in the same job
-    // would race the delete of its own input. Staging first closes that
-    // window; the final overwrite commits from already-durable data. (The
-    // partition swap itself is still not atomic on a plain file listing —
-    // a transactional table format is the long-term answer.)
-    val staging = s"$path.__staging"
-    merged.write.mode("overwrite").parquet(staging)
-    try {
-      // schema-pinned: an EMPTY merged frame (empty batch against an
-      // existing store — e.g. an evolution replay whose evolved half
-      // matched no rows) writes zero part files, and an unpinned read-back
-      // would die on parquet schema inference instead of no-op'ing the
-      // dynamic overwrite (review finding)
-      spark.read.schema(merged.schema).parquet(staging).write
-        .mode("overwrite")
-        .partitionBy(partitionCol)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    } finally {
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(staging), spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    }
+    // One arbitration over (touched store rows ∪ raw batch), hash-partitioned
+    // on `partitionCol` first: that partitioning satisfies the window's
+    // clustering on the keys whenever `partitionCol` is one of them, so the
+    // merge shuffles once, and each touched partition leaves exactly one
+    // writer task — one part file.
+    val merged = latestByKey(candidates.repartition(col(partitionCol)),
+      keyCols, tsCol, tieCol)
+    // Written straight into `path`, although the plan reads `path`: with
+    // dynamic partition overwrite every task writes under
+    // `path/.spark-staging-<job>`, and the touched partitions are swapped in
+    // only at job commit, after every task has read its input. A failed job
+    // aborts and deletes that staging dir, leaving the store as it was. (The
+    // swap itself is not atomic on a plain file listing — a transactional
+    // table format is the long-term answer.) An empty merge touches no
+    // partition, so it is a no-op.
+    merged.write
+      .mode("overwrite")
+      .partitionBy(partitionCol)
+      .option("partitionOverwriteMode", "dynamic")
+      .parquet(path)
     merged.schema
   }
 

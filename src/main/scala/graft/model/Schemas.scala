@@ -41,43 +41,6 @@ object Schemas {
   ))
 }
 
-/** Static lookup tables compiled into the reference app (`app.py:15-36`).
-  * Tiny — always broadcast-joined (SURVEY.md §1.2, T18). At 100 TB these stay
-  * dimension-table-sized; broadcast is the permanently correct plan.
-  */
-object Dims {
-  import org.apache.spark.sql.functions.broadcast
-
-  /** student-id prefix -> cohort number (app.py:15-21). */
-  def cohort(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    broadcast(Seq(("B20", 46), ("B21", 47), ("B22", 48), ("B23", 49), ("B24", 50))
-      .toDF("masv_prefix", "khoa"))
-  }
-
-  /** (major, cohort) -> total credits required (app.py:24-27). */
-  def creditReq(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val mmt = Seq(46 -> 156, 47 -> 156, 48 -> 161, 49 -> 161, 50 -> 161).map { case (k, c) => ("MMT", k, c) }
-    val nna = (46 to 50).map(k => ("NNA", k, 141))
-    broadcast((mmt ++ nna).toDF("major", "khoa", "total_credits"))
-  }
-
-  /** (major, cohort) -> program duration in semesters (app.py:33-36). */
-  def duration(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val mmt = (46 to 50).map(k => ("MMT", k, 13))
-    val nna = (46 to 50).map(k => ("NNA", k, 12))
-    broadcast((mmt ++ nna).toDF("major", "khoa", "total_semesters"))
-  }
-
-  /** semester-type -> max credits (app.py:30). */
-  def semCredits(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    broadcast(Seq(1 -> 20, 2 -> 20, 3 -> 8).toDF("semester_type", "max_credits"))
-  }
-}
-
 /** Loader for the driver's parquet tables (TESTDATA.md).
   *
   * Timestamp storage has changed under us twice, so this loader is the single

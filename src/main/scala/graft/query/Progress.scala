@@ -3,7 +3,6 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GradeScale
-import graft.model.Dims
 
 /** The flagship analytical query: per-student degree progress + cumulative
   * GPA (ĐTBCTL) on the 4.0 scale — reference `app.py:58-191` (SURVEY.md §3.3,
@@ -23,6 +22,25 @@ object Progress {
   case class Params(currentYear: Int = 2024, excludedSemester: Int = 20251,
                     maxCreditsPerSemester: Int = 20)
 
+  // T18: the static lookup tables compiled into the reference app
+  // (app.py:15-36), as literal maps read per row (SURVEY.md §1.3): a lookup
+  // is an expression inside the aggregate's own stages, so an answer runs
+  // no join and no broadcast job for them.
+
+  /** student-id prefix -> cohort number (app.py:15-21). */
+  private val cohort = typedLit(Map("B20" -> 46, "B21" -> 47, "B22" -> 48,
+    "B23" -> 49, "B24" -> 50))
+
+  /** major -> cohort -> total credits required (app.py:24-27). */
+  private val creditReq = typedLit(Map(
+    "MMT" -> Map(46 -> 156, 47 -> 156, 48 -> 161, 49 -> 161, 50 -> 161),
+    "NNA" -> (46 to 50).map(_ -> 141).toMap))
+
+  /** major -> cohort -> program duration in semesters (app.py:33-36). */
+  private val duration = typedLit(Map(
+    "MMT" -> (46 to 50).map(_ -> 13).toMap,
+    "NNA" -> (46 to 50).map(_ -> 12).toMap))
+
   /** All-students progress report over an enriched enrollment table.
     *
     * Input columns: F_MASV, F_MAMH, F_TENMHVN, F_TENLOP, F_KHOAHOC, NHHK,
@@ -32,10 +50,13 @@ object Progress {
              params: Params = Params()): DataFrame = {
     val p = params
 
-    // T18: cohort from student-id prefix, via broadcast dim (app.py:86).
+    // T18: cohort from student-id prefix (app.py:86); app.py drops
+    // unknown prefixes, and so does the not-null filter. The coalesce never
+    // fires after it: it only types khoa non-null in the output schema.
     val withKhoa = enrollment
-      .withColumn("masv_prefix", substring(col("F_MASV"), 1, 3))
-      .join(Dims.cohort(spark), Seq("masv_prefix"), "inner") // app.py drops unknown prefixes
+      .withColumn("khoa", cohort(substring(col("F_MASV"), 1, 3)))
+      .filter(col("khoa").isNotNull)
+      .withColumn("khoa", coalesce(col("khoa"), lit(0)))
 
     // T13: query-side coercing casts (app.py:124-125).
     val typed = withKhoa
@@ -69,13 +90,15 @@ object Progress {
         .when(col("any_fl") === 1, "NNA")
         .otherwise("Chưa xác định"))
 
-    // T18: (major, cohort) dims — broadcast joins.
-    val withDims = withMajor
-      .join(Dims.creditReq(spark), Seq("major", "khoa"), "left")
-      .join(Dims.duration(spark), Seq("major", "khoa"), "left")
+    // T18: (major, cohort) requirements; the unknown major has none (null).
+    val withReqs = withMajor.select(col("major"), col("khoa"), col("F_MASV"),
+      col("total_points"), col("credits_earned"), col("completed_credits"),
+      col("n_records"),
+      creditReq(col("major"))(col("khoa")).as("total_credits"),
+      duration(col("major"))(col("khoa")).as("total_semesters"))
 
     // T19: progress arithmetic (app.py:102-121).
-    val arith = withDims
+    val arith = withReqs
       .withColumn("start_year", lit(2020) + (col("khoa") - 46))
       .withColumn("years_elapsed", lit(p.currentYear) - col("start_year"))
       .withColumn("semesters_elapsed", col("years_elapsed") * 3)
@@ -89,19 +112,18 @@ object Progress {
         when(col("credits_earned") > 0, col("total_points") / col("credits_earned"))
           .otherwise(0.0))
 
-    // T20: tri-state status (app.py:154-178). A student whose requirement
-    // dims are UNKNOWN (major 'Chưa xác định' — no creditReq/duration row)
+    // T20: tri-state status (app.py:154-178). A student whose requirements
+    // are UNKNOWN (major 'Chưa xác định' — no creditReq/duration entry)
     // gets a NULL status, not a verdict: the null remaining_credits made
     // both when() arms null-false and the otherwise asserted a definite
     // 'Chậm tiến độ' over unknown requirements (review finding). The
     // reference raises KeyError here; a null verdict is the documented
-    // sane deviation (same class as the left-join deviation itself).
+    // sane deviation (same class as the null lookup itself).
     arith.withColumn("status",
       when(col("remaining_credits").isNull, lit(null).cast("string"))
         .when(col("remaining_credits") <= 0, "Hoàn thành")
         .when(col("remaining_credits") <= col("max_credits_remaining_in_time"), "Đúng tiến độ")
         .otherwise("Chậm tiến độ"))
-      .drop("any_di", "any_fl")
   }
 
   /** Registrar cross-check (SURVEY.md §5, the reference's one implicit

@@ -147,15 +147,91 @@ class EtlSpec extends SparkSpec {
   }
 
   test("S5: an empty batch against an existing store is a no-op, not a crash") {
-    // An empty merged frame writes zero staging part files; the read-back
-    // is schema-pinned so the dynamic overwrite no-ops instead of dying on
-    // parquet inference (review finding).
+    // An empty merged frame touches no partition, so the dynamic overwrite
+    // writes nothing and the store keeps every row.
     val dir = java.nio.file.Files.createTempDirectory("upsert_empty").toString
     val b1 = Seq(("k1", ts("2024-01-01 10:00:00"), 1L, 1.0))
       .toDF("k", "t", "seq", "v").withColumn("day", to_date(col("t")))
     Upsert.mergeBatch(spark, b1, dir, Seq("k"), "t", "seq", "day")
     Upsert.mergeBatch(spark, b1.limit(0), dir, Seq("k"), "t", "seq", "day")
     assert(spark.read.parquet(dir).count() == 1, "store must survive the no-op")
+  }
+
+  /** Every file under `dir`, relative to it, with its size. */
+  private def storeFiles(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .map(f => root.relativize(f).toString -> java.nio.file.Files.size(f)).toMap
+    finally walk.close()
+  }
+
+  private def partFiles(dir: String, day: String): Set[String] =
+    storeFiles(dir).keySet.filter(f => f.startsWith(s"day=$day/") && f.endsWith(".parquet"))
+
+  test("S5: a merge that fails inside its job leaves the store as it was") {
+    // The merge writes straight into the store: its output is staged under
+    // `.spark-staging-<job>` and swapped in only at commit, so a task
+    // failure must leave the old rows and files, and no staging dir behind.
+    val root = java.nio.file.Files.createTempDirectory("upsert_fail").toString
+    val dir = s"$root/store"
+    val b1 = Seq(("k1", ts("2024-01-01 10:00:00"), 1L, 1.0),
+                 ("k2", ts("2024-01-02 10:00:00"), 2L, 2.0))
+      .toDF("k", "t", "seq", "v").withColumn("day", to_date(col("t")))
+    Upsert.mergeBatch(spark, b1, dir, Seq("k", "day"), "t", "seq", "day")
+    val before = storeFiles(dir)
+    val rowsBefore = spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq
+    // read from parquet so the failing expression runs in a task, not in
+    // the optimizer's folding of a local relation
+    Seq(("k1", ts("2024-01-01 12:00:00"), 3L, 9.0),
+        ("k2", ts("2024-01-02 12:00:00"), 4L, 8.0))
+      .toDF("k", "t", "seq", "v").write.parquet(s"$root/raw")
+    val b2 = spark.read.parquet(s"$root/raw")
+      .withColumn("v", when(col("k") === "k2", raise_error(lit("injected merge failure")))
+        .otherwise(col("v")))
+      .withColumn("day", to_date(col("t")))
+    val ex = intercept[Exception] {
+      Upsert.mergeBatch(spark, b2, dir, Seq("k", "day"), "t", "seq", "day")
+    }
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("injected merge failure")), ex)
+    assert(storeFiles(dir) == before, "a failed merge changed the store's files")
+    assert(spark.read.parquet(dir).collect().map(_.toString).sorted.toSeq == rowsBefore)
+    val left = java.nio.file.Files.list(java.nio.file.Paths.get(root))
+    try assert(left.toArray.toSeq.map(_.toString).forall(n => !n.contains("__staging")))
+    finally left.close()
+    assert(!new java.io.File(dir).list().exists(_.startsWith(".spark-staging")),
+      s"staging dir left in ${new java.io.File(dir).list().toSeq}")
+  }
+
+  test("S5: a merge rewrites each touched partition as one file; others keep theirs") {
+    // Guards the store's bytes per row: the merge's one shuffle is on the
+    // partition column, so each touched partition is written by one task.
+    // Partition coalescing is off, or these few rows would land in one task
+    // whatever the merge's partitioning.
+    graft.streaming.Replay.withConfs(spark,
+        Map("spark.sql.adaptive.coalescePartitions.enabled" -> "false")) {
+      val dir = java.nio.file.Files.createTempDirectory("upsert_files").toString
+      val days = Seq("2024-01-01", "2024-01-02", "2024-01-03")
+      val b1 = (for ((d, i) <- days.zipWithIndex; k <- 1 to 20)
+        yield (s"k$k", ts(s"$d 10:00:00"), (i * 100 + k).toLong, k.toDouble))
+        .toDF("k", "t", "seq", "v").withColumn("day", to_date(col("t")))
+        .repartition(4)
+      Upsert.mergeBatch(spark, b1, dir, Seq("k", "day"), "t", "seq", "day")
+      days.foreach(d => assert(partFiles(dir, d).size == 1, s"$d: ${partFiles(dir, d)}"))
+      val untouched = Seq(days(0), days(2)).map(d => d -> partFiles(dir, d)).toMap
+      // a new version of k1 and a new key, both in the middle day
+      val b2 = Seq(("k1", ts("2024-01-02 12:00:00"), 1000L, 99.0),
+                   ("k21", ts("2024-01-02 12:00:00"), 1001L, 21.0))
+        .toDF("k", "t", "seq", "v").withColumn("day", to_date(col("t")))
+      Upsert.mergeBatch(spark, b2, dir, Seq("k", "day"), "t", "seq", "day")
+      assert(partFiles(dir, days(1)).size == 1, s"touched: ${partFiles(dir, days(1))}")
+      untouched.foreach { case (d, files) => assert(partFiles(dir, d) == files, d) }
+      val mid = spark.read.parquet(dir).filter(col("day") === days(1))
+        .select("k", "v").as[(String, Double)].collect().toMap
+      assert(mid.size == 21 && mid("k1") == 99.0 && mid("k21") == 21.0 && mid("k2") == 2.0)
+    }
   }
 
   test("S5: mergeBatch upsert is idempotent under re-delivery") {

@@ -60,6 +60,31 @@ class ProgressSpec extends SparkSpec {
       s"unknown requirements must not yield a verdict: ${r.getAs[String]("status")}")
   }
 
+  test("cohort, credit-requirement and duration lookups match app.py:15-36") {
+    // The reference tables (SURVEY.md §1.2): prefix B20..B24 -> khoa 46..50;
+    // total credits MMT 156/156/161/161/161, NNA 141; duration MMT 13, NNA 12
+    // semesters. One student per cohort x class prefix, plus a B19 student,
+    // whose unknown prefix app.py drops.
+    val cohorts = Seq("B20" -> 46, "B21" -> 47, "B22" -> 48, "B23" -> 49, "B24" -> 50)
+    val credits = Map("MMT" -> Map(46 -> 156, 47 -> 156, 48 -> 161, 49 -> 161, 50 -> 161),
+      "NNA" -> Map(46 -> 141, 47 -> 141, 48 -> 141, 49 -> 141, 50 -> 141))
+    val semesters = Map("MMT" -> 13, "NNA" -> 12)
+    val students = for ((prefix, _) <- cohorts; cls <- Seq("DI", "FL"))
+      yield s"${prefix}00$cls"
+    val input = (students :+ "B1900DI").map { id =>
+      (t0, id, "C1", "Toán", s"${id.takeRight(2)}01", "47", Some(20231), "8.0", 3.0, 30.0)
+    }.toDF("@timestamp", "F_MASV", "F_MAMH", "F_TENMHVN", "F_TENLOP",
+      "F_KHOAHOC", "NHHK", "F_DIEM2", "F_DVHT", "F_TCDTTL")
+    val got = Progress.report(spark, input).collect()
+      .map(r => r.getAs[String]("F_MASV") -> (r.getAs[String]("major"),
+        r.getAs[Int]("khoa"), r.getAs[Int]("total_credits"),
+        r.getAs[Int]("remaining_semesters"))).toMap
+    val want = (for ((prefix, khoa) <- cohorts; (cls, major) <- Seq("DI" -> "MMT", "FL" -> "NNA"))
+      yield s"${prefix}00$cls" -> (major, khoa, credits(major)(khoa),
+        semesters(major) - (2024 - (2020 + khoa - 46)) * 3)).toMap
+    assert(got == want, s"got $got")
+  }
+
   test("credits audit: registrar figure vs computed passed-credit sum, with delta") {
     // Student A: registrar says 9, transcript sums 6 passed (one failed
     // course's 4 credits excluded) -> delta 3 (e.g. transfer credits).
