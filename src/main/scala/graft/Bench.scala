@@ -1,8 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Driver bench contract: run every registered query on SPARK_GRAFT_SF_DIR,
-  * print ONE JSON line {"metric":"total",...} on stdout.
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Semaphore}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Driver bench contract: run every registered query (or the named ones,
+  * `runMain graft.Bench [query ...]`) on SPARK_GRAFT_SF_DIR, print ONE JSON
+  * line {"metric":"total",...} on stdout. An unknown name exits 2 with
+  * [[Usage]].
   *
   * Queries run in sorted name order (deterministic attribution) after a
   * warmup pass that pays the one-time session costs (codegen compiler,
@@ -34,6 +45,16 @@ import org.apache.spark.sql.SparkSession
   * a hard ~1900-char budget; path on stderr, default
   * tools/bench_telemetry_<sfbase>.json — per-sf so runs don't clobber each
   * other and the file is gitignored — overridable via SPARK_GRAFT_TELEMETRY).
+  *
+  * LAYER SPLIT: beside each pass's [sec, stall_pct, load] the sidecar's
+  * "splits" holds what that same pass did, recorded by [[PassRecorder]]:
+  * Catalyst phase ms, jobs with their driver gaps, completed stages with
+  * task time, GC, spill and shuffle volumes, and for streaming replay rungs
+  * the engine's per-trigger progress sums and batch count. A surprising
+  * number is explained from the sidecar (`tools/diffbench.py` compares two),
+  * not by re-running the query by hand. The recorder is switched on before
+  * a pass's clock starts and drained after it stops: nothing is read or
+  * waited on inside the timed window.
   *
   * Pass structure (the interleave that makes min-of-passes meaningful):
   * pass 1 sweeps EVERY query, pass 2 re-sweeps the >1.0s queries in
@@ -72,10 +93,24 @@ object Bench {
     finally src.close()
   }.getOrElse(-1L)
 
-  /** One timed pass: wall seconds + the pass's own contention context. */
-  final case class Pass(sec: Double, load: Double, stallPct: Double)
+  /** One timed pass: wall seconds, the pass's own contention context and
+    * its layer split. */
+  final case class Pass(sec: Double, load: Double, stallPct: Double, split: PassRecorder.Split)
+
+  val Usage = "usage: graft.Bench [query ...]  (no names: every registered query)"
+
+  /** Pure command-line parse: the arguments are query names, none meaning
+    * the whole registry. Left carries the exit code and the message. */
+  def parse(args: Seq[String],
+            known: String => Boolean = SparkEntry.queries.contains): Either[(Int, String), Seq[String]] =
+    args.filterNot(known) match {
+      case Seq() => Right(args.distinct)
+      case unknown => Left(2 -> s"unknown query ${unknown.mkString(", ")}\n$Usage")
+    }
 
   def main(args: Array[String]): Unit = {
+    val names = parse(args.toSeq).fold({ case (code, msg) =>
+      System.err.println(msg); sys.exit(code) }, identity)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Session.cpus
     val load0 = loadavg1()
@@ -97,7 +132,8 @@ object Bench {
     // the host, not the query. Adaptive stabilization: re-run anything
     // slower than 1.0s and report the min; one extra run if both timings
     // stayed above 1.5s AND disagree by >2x (a stall hit one of them).
-    val named = SparkEntry.queries.toSeq.sortBy(_._1)
+    val all = SparkEntry.queries
+    val named = (if (names.isEmpty) all.toSeq else names.map(n => n -> all(n))).sortBy(_._1)
     // Loud failures (VERDICT r11 #3): a throwing query must NOT have its
     // exception's wall time reported as if it were the query's cost (r11
     // silently "improved" ssjoin 9s->0.6s by timing an analysis error).
@@ -105,21 +141,28 @@ object Bench {
     // "failed" list on the JSON line; failures here are deterministic
     // (analysis/plan errors), so no retry.
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Pass] = {
+    val rec = new PassRecorder(spark)
+    def once(name: String, fn: (SparkSession, String) => DataFrame): Option[Pass] = {
       val ld = loadavg1()
       val p0 = psiCpuSomeUs()
+      rec.start()
       val t0 = System.nanoTime()
-      try {
+      val timed = try {
         fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val p1 = psiCpuSomeUs()
-        val stall = if (p0 >= 0 && p1 >= 0 && dt > 0) (p1 - p0) / 1e6 / dt * 100.0 else -1.0
-        Some(Pass(dt, ld, stall))
-      } catch { case e: Throwable =>
-        failed += name
-        System.err.println(s"[bench] $name FAILED: " +
-          Option(e.getMessage).getOrElse(e.getClass.getName))
-        None
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(e) }
+      val p1 = psiCpuSomeUs()
+      // The clock has stopped: only now wait for the pass's events.
+      val split = rec.drain()
+      timed match {
+        case Right(dt) =>
+          val stall = if (p0 >= 0 && p1 >= 0 && dt > 0) (p1 - p0) / 1e6 / dt * 100.0 else -1.0
+          Some(Pass(dt, ld, stall, split))
+        case Left(e) =>
+          failed += name
+          System.err.println(s"[bench] $name FAILED: " +
+            Option(e.getMessage).getOrElse(e.getClass.getName))
+          None
       }
     }
     val pass1 = named.flatMap { case (name, fn) => once(name, fn).map(name -> _) }.toMap
@@ -137,6 +180,7 @@ object Bench {
         case _ => false
       }
     }.flatMap { case (name, fn) => once(name, fn).map(name -> _) }.toMap
+    rec.close()
     // Per-query pass arrays, in pass order (pass1, pass2, pass3 where run).
     val passArrays: Seq[(String, List[Pass])] = named.flatMap { case (n, _) =>
       val ts = List(pass1.get(n), pass2.get(n), pass3.get(n)).flatten
@@ -235,11 +279,12 @@ object Bench {
         ("\"_other_sum\":" + fmt(rest, dec))).mkString("{", ",", "}")
       s"""{"metric":"total",$totalJson,"unit":"sec",$teleJson,$failJson,${ctxJson(ctxU, ctxS)}"queries":$qs,"sf":"$sf"}"""
     }
-    // Sidecar: FULL per-pass [sec, stall, load] arrays + telemetry, no
-    // stdout budget. Written best-effort (a read-only cwd must not fail the
-    // bench); path announced on stderr so an adjudicator can find it from
-    // the driver log. Default is per-sf (concurrent runs at different sf
-    // must not clobber each other — ADVICE r18) and gitignored.
+    // Sidecar: FULL per-pass [sec, stall, load] arrays, each pass's layer
+    // split in the same order, and telemetry; no stdout budget. Written
+    // best-effort (a read-only cwd must not fail the bench); path announced
+    // on stderr so an adjudicator can find it from the driver log. Default
+    // is per-sf (concurrent runs at different sf must not clobber each
+    // other — ADVICE r18) and gitignored.
     val base = new java.io.File(sfDir).getName
     scala.util.Try {
       val path = sys.env.getOrElse("SPARK_GRAFT_TELEMETRY", s"tools/bench_telemetry_$base.json")
@@ -247,13 +292,17 @@ object Bench {
         "\"" + n + "\":[" + ps.map(p =>
           s"[${f"${p.sec}%.3f"},${f"${p.stallPct}%.2f"},${f"${p.load}%.2f"}]").mkString(",") + "]"
       }.mkString("{", ",", "}")
+      val splits = passArrays.map { case (n, ps) =>
+        "\"" + n + "\":" + ps.map(_.split.json).mkString("[", ",", "]")
+      }.mkString("{", ",\n", "}")
       val fj = failedFinal.map("\"" + _ + "\"").mkString("[", ",", "]")
       val json =
         s"""{"sf":"$base","cpus":$cpus,"wall_sec":${f"$wallSec%.1f"},""" +
         s""""load":[${f"$load0%.2f"},${f"$load1%.2f"}],"steal_pct":${f"$stealPct%.3f"},""" +
         s""""iowait_pct":${f"$iowaitPct%.3f"},"stall_pct":${f"$runStallPct%.3f"},""" +
         s""""throttled_ms":$thrMs,"unstable":${unstable.size},""" +
-        s""""failed":$fj,"passes":$passes}""" + "\n"
+        s""""failed":$fj,"passes":$passes,${PassRecorder.FieldsJson},""" +
+        s""""splits":$splits}""" + "\n"
       val p = java.nio.file.Paths.get(path)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, json.getBytes("UTF-8"))
@@ -276,5 +325,192 @@ object Bench {
     // between the JSON and process exit.
     println(out)
     System.out.flush()
+  }
+}
+
+/** Records one timed pass's layer split for [[Bench]]. Three listeners, all
+  * idle outside a pass, attached for the recorder's life and detached by
+  * [[close]]:
+  *   - job and stage events of the pass, from the SparkContext's bus;
+  *   - the Catalyst phase times (analysis, optimization, planning) of the
+  *     session's SQL executions in the pass, from a QueryExecutionListener;
+  *   - the streaming progress of every query the pass started: the
+  *     engine's per-trigger durationMs decomposition (triggerExecution;
+  *     latestOffset/getBatch, queryPlanning, walCommit, addBatch,
+  *     commitOffsets) and state-store commit time, summed over the batches.
+  *
+  * [[start]] goes before the pass's clock starts; [[drain]] after it stops.
+  * The bus delivers events asynchronously but in order, and a job's end
+  * and stage events (and an execution's end, whose listener sits on the
+  * same shared queue) are posted before its action returns; so the drain
+  * runs a marker job and waits for the marker's start event, by which
+  * point every event of the pass has been delivered. A query's progress
+  * events precede its QueryTerminated on the streams bus, and
+  * QueryStarted reaches the listener synchronously: once every started
+  * query's termination has arrived, so have its batches. */
+private[graft] final class PassRecorder(spark: SparkSession)
+    extends SparkListener with AutoCloseable {
+  import PassRecorder._
+
+  private val sc = spark.sparkContext
+  private val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+  private val jobEnds = new ConcurrentHashMap[Int, Long]()
+  private val stages = new ConcurrentLinkedQueue[StageInfo]()
+  @volatile private var on = false
+  @volatile private var t0Ms = 0L // listener event times are epoch ms
+  private val markerSeen = new Semaphore(0)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit =
+    if (Option(e.properties).exists(_.getProperty("spark.job.description") == Marker)) {
+      on = false // set on the bus thread: no later event is recorded
+      markerSeen.release()
+    } else if (on) jobs.add(e)
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = if (on) jobEnds.put(e.jobId, e.time)
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    if (on) stages.add(e.stageInfo)
+
+  private val planMs = new AtomicLong(0L)
+  private val catalyst = new QueryExecutionListener {
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      phases(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      phases(qe)
+    private def phases(qe: QueryExecution): Unit =
+      if (on) planMs.addAndGet(qe.tracker.phases.values.map(_.durationMs).sum)
+  }
+
+  private val sums = scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val batches = new AtomicInteger(0)
+  private val stateCommit = new AtomicLong(0L)
+  private val started = new AtomicInteger(0)
+  private val terminated = new AtomicInteger(0)
+  @volatile private var startedBefore = 0
+  private val progress = new StreamingQueryListener {
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      started.incrementAndGet()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      terminated.incrementAndGet()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+      batches.incrementAndGet()
+      val d = e.progress.durationMs
+      for (k <- ProgressKeys; v = d.get(k) if v != null)
+        sums.updateWith(k) { prev => Some(prev.getOrElse(0L) + v.longValue()) }
+      for (op <- e.progress.stateOperators)
+        stateCommit.addAndGet(op.commitTimeMs)
+    }
+  }
+
+  def start(): Unit = {
+    jobs.clear(); jobEnds.clear(); stages.clear(); planMs.set(0L)
+    sums.clear(); batches.set(0); stateCommit.set(0L); startedBefore = started.get()
+    on = true
+    t0Ms = System.currentTimeMillis()
+  }
+
+  /** Wait for the pass's events (never inside its timed window) and return
+    * its split. Both waits are bounded: a lost event costs the split its
+    * completeness, never the bench its run. */
+  def drain(): Split = {
+    sc.setJobDescription(Marker)
+    try sc.parallelize(Seq(0), 1).count() finally sc.setJobDescription(null)
+    if (!markerSeen.tryAcquire(DrainBoundSec, java.util.concurrent.TimeUnit.SECONDS))
+      System.err.println(s"[bench] job events not drained in ${DrainBoundSec}s")
+    val deadline = System.nanoTime() + DrainBoundSec * 1000L * 1000 * 1000
+    while (terminated.get() < started.get() && System.nanoTime() < deadline) Thread.sleep(10)
+    split()
+  }
+
+  private def split(): Split = {
+    var prevEnd = t0Ms
+    val jobRows = jobs.asScala.toSeq.map { j =>
+      val end: Long = jobEnds.getOrDefault(j.jobId, 0L)
+      val gap = math.max(j.time - prevEnd, 0L)
+      prevEnd = math.max(end, prevEnd)
+      JobRow(math.max(end - j.time, 0L), gap, j.stageInfos.size, j.stageInfos.map(_.numTasks).sum)
+    }
+    val stageRows = stages.asScala.toSeq.map { i =>
+      val m = i.taskMetrics
+      StageRow(i.numTasks, m.executorRunTime, m.jvmGCTime, m.memoryBytesSpilled,
+        m.shuffleReadMetrics.recordsRead, m.shuffleReadMetrics.totalBytesRead,
+        m.shuffleWriteMetrics.recordsWritten, m.shuffleWriteMetrics.bytesWritten)
+    }
+    val stream =
+      if (started.get() == startedBefore) Map.empty[String, Long]
+      else ProgressKeys.map(k => k -> sums.getOrElse(k, 0L)).toMap +
+        ("stateCommit" -> stateCommit.get()) + ("batches" -> batches.get().toLong)
+    Split(planMs.get(), jobRows, stageRows, stream)
+  }
+
+  override def close(): Unit = {
+    sc.removeSparkListener(this)
+    spark.listenerManager.unregister(catalyst)
+    spark.streams.removeListener(progress)
+  }
+
+  sc.addSparkListener(this)
+  spark.listenerManager.register(catalyst)
+  spark.streams.addListener(progress)
+  // Events of earlier actions may still be queued; drain them now, so the
+  // first pass records only its own.
+  drain(): Unit
+}
+
+private[graft] object PassRecorder {
+  private val Marker = "graft-bench-drain"
+  private val DrainBoundSec = 60L
+  private val ProgressKeys = Seq("triggerExecution", "latestOffset", "getBatch",
+    "queryPlanning", "walCommit", "addBatch", "commitOffsets")
+
+  /** One job: its wall and the driver gap since the previous job ended (or
+    * since the pass started): scheduling, planning, driver-side scalars. */
+  final case class JobRow(wallMs: Long, gapMs: Long, stages: Int, tasks: Int)
+
+  /** One completed stage. A stage whose task time is large but whose task
+    * count is 2-3 on a wide host is AQE coalescing fusing an expanding join
+    * onto too few cores (PLANS.md round 8). */
+  final case class StageRow(tasks: Int, taskMs: Long, gcMs: Long, spillBytes: Long,
+                            shuffleReadRecords: Long, shuffleReadBytes: Long,
+                            shuffleWriteRecords: Long, shuffleWriteBytes: Long)
+
+  /** Field order of the sidecar's row arrays. */
+  val FieldsJson: String =
+    """"job_row_fields":["wall_ms","gap_ms","stages","tasks"],""" +
+      """"stage_row_fields":["tasks","task_ms","gc_ms","spill_bytes",""" +
+      """"shuffle_read_records","shuffle_read_bytes","shuffle_write_records",""" +
+      """"shuffle_write_bytes"]"""
+
+  /** One pass's split: Catalyst ms, its jobs and completed stages, and for
+    * a pass that started streaming queries the progress sums (ms) and the
+    * batch count (empty otherwise). */
+  final case class Split(planMs: Long, jobs: Seq[JobRow], stages: Seq[StageRow],
+                         stream: Map[String, Long]) {
+    def totals: Seq[(String, Long)] = Seq(
+      "plan_ms" -> planMs,
+      "jobs" -> jobs.size.toLong,
+      "gap_ms" -> jobs.map(_.gapMs).sum,
+      "task_ms" -> stages.map(_.taskMs).sum,
+      "gc_ms" -> stages.map(_.gcMs).sum,
+      "spill_bytes" -> stages.map(_.spillBytes).sum,
+      "shuffle_read_bytes" -> stages.map(_.shuffleReadBytes).sum,
+      "shuffle_read_records" -> stages.map(_.shuffleReadRecords).sum,
+      "shuffle_write_bytes" -> stages.map(_.shuffleWriteBytes).sum,
+      "shuffle_write_records" -> stages.map(_.shuffleWriteRecords).sum,
+      "stages" -> stages.size.toLong,
+      "tasks" -> stages.map(_.tasks.toLong).sum)
+
+    def json: String = {
+      val tot = totals.map { case (k, v) => s""""$k":$v""" }
+      val jobRows = jobs.map(j => s"[${j.wallMs},${j.gapMs},${j.stages},${j.tasks}]")
+      val stageRows = stages.map(s =>
+        s"[${s.tasks},${s.taskMs},${s.gcMs},${s.spillBytes},${s.shuffleReadRecords}," +
+          s"${s.shuffleReadBytes},${s.shuffleWriteRecords},${s.shuffleWriteBytes}]")
+      val streamJson =
+        if (stream.isEmpty) Nil
+        else Seq(stream.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }
+          .mkString(""""stream":{""", ",", "}"))
+      (tot ++ Seq(jobRows.mkString(""""job_rows":[""", ",", "]"),
+        stageRows.mkString(""""stage_rows":[""", ",", "]")) ++ streamJson)
+        .mkString("{", ",", "}")
+    }
   }
 }

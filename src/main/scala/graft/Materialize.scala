@@ -11,13 +11,15 @@ import org.apache.spark.sql.DataFrame
   * environment decision, not an operator decision, so every operator calls
   * [[pin]] and the mode comes from session config:
   *
-  *   - `graft.materialize.mode = local` (default): `localCheckpoint(eager)`.
+  *   - `spark.graft.materialize.mode = local` (default):
+  *     `localCheckpoint(eager)`.
   *     Right for local[k] and for short-lived interactive clusters: blocks
   *     are executor-memory/disk resident, zero extra I/O, but NOT
   *     fault-tolerant — a lost executor kills the query.
-  *   - `graft.materialize.mode = reliable`: `checkpoint(eager)` to the
-  *     reliable checkpoint directory (`spark.sparkContext.setCheckpointDir`,
-  *     or set `graft.materialize.dir` and [[pin]] installs it on first use).
+  *   - `spark.graft.materialize.mode = reliable`: `checkpoint(eager)` to
+  *     the reliable checkpoint directory
+  *     (`spark.sparkContext.setCheckpointDir`, or set
+  *     `spark.graft.materialize.dir` and [[pin]] installs it on first use).
   *     The 100 TB posture: blocks live on the cluster FS and survive
   *     executor loss; costs one write+read of the pinned frame.
   *     RETENTION: Spark never deletes reliable checkpoint data on its own,
@@ -30,7 +32,7 @@ import org.apache.spark.sql.DataFrame
   *     once per JVM when a reliable-mode session lacks it. Cleanup is
   *     GC-driven (best-effort within a session); long-lived sessions should
   *     still TTL the checkpoint directory externally.
-  *   - `graft.materialize.mode = none`: pass-through (no pin). For plan
+  *   - `spark.graft.materialize.mode = none`: pass-through (no pin). For plan
   *     debugging only — iterative callers grow unbounded lineage.
   *
   * Streaming frames are returned untouched in every mode (micro-batch
@@ -41,8 +43,11 @@ import org.apache.spark.sql.DataFrame
   */
 object Materialize {
 
-  val ModeKey = "graft.materialize.mode"
-  val DirKey = "graft.materialize.dir"
+  // Under `spark.`, so `-Dspark.graft.materialize.mode=…` on any main's JVM
+  // reaches every session: SparkConf loads each `-Dspark.*` property, and a
+  // session built by `Session.build` merges SparkConf into its SQL conf.
+  val ModeKey = "spark.graft.materialize.mode"
+  val DirKey = "spark.graft.materialize.dir"
 
   private val retentionWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 

@@ -29,48 +29,35 @@ object SparkEntry {
 
   /** l3's staged-and-compacted lineitem store, memoized per sf dir: the
     * fragment-then-compact side effect runs once per JVM however many times
-    * the registered query is invoked (gate + bench + profiler), and the one
-    * cleanup hook covers every staged root. */
-  private val l3Stores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private lazy val l3Cleanup: Thread = {
-    val t = new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      l3Stores.values.forEach(p => rm(new java.io.File(p).getParentFile))
-    })
-    Runtime.getRuntime.addShutdownHook(t)
-    t
-  }
-  private def l3CompactedStore(s: SparkSession, d: String): String =
-    l3Stores.computeIfAbsent(d, _ => {
-      l3Cleanup // force the one-time hook registration
-      val root = java.nio.file.Files.createTempDirectory("graft_l3_")
-      val store = s"$root/store"
-      Tables(s, d, "lineitem").repartition(48).write.parquet(store)
+    * the registered query is invoked (gate + bench), and the staged root is
+    * deleted at exit. */
+  private def l3CompactedStore(s: SparkSession, d: String): String = {
+    val lineitem = Tables(s, d, "lineitem")
+    graft.util.StageMemo(Some(d), "l3", lineitem) {
+      val store = s"${graft.util.TempRoots.create("graft_l3_")}/store"
+      lineitem.repartition(48).write.parquet(store)
       val (before, after) = Compact.compact(s, store, targetBytes = 64L << 20)
       require(after < before, s"compaction did not shrink: $before -> $after")
       store
-    })
+    }
+  }
 
   /** l4's staged VERSIONED store (same memoization + cleanup contract as
     * l3): fragment a copy of orders, adopt it into the versioned layout,
     * compact it TWICE — the second pass exercises the pointer re-flip and
     * the retention vacuum, not just the happy path. */
-  private def l4VersionedStore(s: SparkSession, d: String): String =
-    l3Stores.computeIfAbsent(s"l4:$d", _ => {
-      l3Cleanup
-      val root = java.nio.file.Files.createTempDirectory("graft_l4_")
-      val store = s"$root/store"
-      Tables(s, d, "orders").repartition(48).write.parquet(store)
+  private def l4VersionedStore(s: SparkSession, d: String): String = {
+    val orders = Tables(s, d, "orders")
+    graft.util.StageMemo(Some(d), "l4", orders) {
+      val store = s"${graft.util.TempRoots.create("graft_l4_")}/store"
+      orders.repartition(48).write.parquet(store)
       Compact.adopt(s, store)
       val (before, after) = Compact.compactVersioned(s, store, targetBytes = 64L << 20)
       require(after < before, s"versioned compaction did not shrink: $before -> $after")
       Compact.compactVersioned(s, store, targetBytes = 64L << 20)
       store
-    })
+    }
+  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -1183,9 +1170,7 @@ object SparkEntry {
     ("flagship_gpa_trend",
       (s, d) => {
         val enr = EventsAdapter.enrollmentView(ev(s, d))
-        val eligible = col("F_DIEM2") >= 4.0 &&
-          !col("F_TENMHVN").contains("*") &&
-          col("NHHK") =!= EventsAdapter.ExcludedSemester
+        val eligible = Progress.gpaEligible(EventsAdapter.ExcludedSemester)
         val g4 = GradeScale.grade4(col("F_DIEM2"))
         val perSem = enr.groupBy(col("F_MASV").as("masv"), col("NHHK").as("nhhk")).agg(
           sum(when(eligible, g4 * col("F_DVHT")).otherwise(0.0)).as("pts"),
@@ -1194,9 +1179,8 @@ object SparkEntry {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         perSem.select(
           col("masv"), col("nhhk"),
-          when(col("cr") > 0, col("pts") / col("cr")).otherwise(0.0).as("sem_gpa"),
-          when(sum(col("cr")).over(w) > 0,
-            sum(col("pts")).over(w) / sum(col("cr")).over(w)).otherwise(0.0).as("cum_gpa"))
+          Progress.gpa(col("pts"), col("cr")).as("sem_gpa"),
+          Progress.gpa(sum(col("pts")).over(w), sum(col("cr")).over(w)).as("cum_gpa"))
       },
       Some(s"""WITH enroll AS (${EventsAdapter.sql}),
         |per AS (

@@ -296,24 +296,6 @@ object Dedup {
     df.join(exactDedupGroups(df, textCol)
         .select(col("rep_doc_id").as("doc_id")), Seq("doc_id"), "left_semi")
 
-  /** n-gram Jaccard similarity for given (a, b) doc-id pairs: |A∩B| / |A∪B|
-    * over distinct word n-gram sets. Pairs come from LSH candidates (or any
-    * bounded candidate source) — never all-pairs.
-    *
-    * Sets are compared as 31-bit shingle *hashes*, not strings: the per-pair
-    * intersection is integer comparisons instead of string comparisons, and
-    * the arrays shipped into the pair join are 8 bytes/element. Same shingle
-    * hash family as MinHash, so the oracle reproduces it. */
-  def jaccardPairs(docs: DataFrame, pairs: DataFrame, textCol: String, n: Int = 3): DataFrame = {
-    // Distinct shingle-hash set per doc, built from the skinny row form; the
-    // groupBy exchange is reused by both sides of the pair join. The join
-    // tail is [[jaccardFromSets]] — one definition (review finding).
-    val sh = shingleHashRows(docs, textCol, n)
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(col("h"))).as("sh"))
-    jaccardFromSets(pairs, sh)
-  }
-
   /** MinHash-LSH near-duplicate pipeline: signatures -> bands -> candidate
     * pairs -> exact Jaccard verify -> pairs above threshold.
     *
@@ -1121,7 +1103,7 @@ object Dedup {
     * width; AQE still cannot coalesce a numbered repartition) and above at
     * 32768 (a runaway-volume backstop: past that, waves of tasks amortize
     * fine): conf ≤ ceil(vol / budget) ≤ 32768. This removed the manual
-    * SPARK_GRAFT_SHUFFLE=256 override the sf1 runs needed. */
+    * 256-wide shuffle override the sf1 runs needed. */
   private[graft] def widthForVolume(conf: Int, vol: Long): Int =
     math.max(conf.toLong, math.min(32768L,
       (vol + PairRecordsPerTask - 1) / PairRecordsPerTask)).toInt

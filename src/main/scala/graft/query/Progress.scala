@@ -41,6 +41,19 @@ object Progress {
     "MMT" -> (46 to 50).map(_ -> 13).toMap,
     "NNA" -> (46 to 50).map(_ -> 12).toMap))
 
+  /** T14/T15: GPA-eligible rows: passed (>= 4.0), not '*'-marked, not the
+    * in-progress `excludedSemester`. A null course name or semester leaves a
+    * passed row eligible. The one definition behind the report, the
+    * `flagship_gpa_trend` query and the stateful GPA. */
+  def gpaEligible(excludedSemester: Int): Column =
+    col("F_DIEM2") >= 4.0 &&
+      !coalesce(col("F_TENMHVN").contains("*"), lit(false)) &&
+      (col("NHHK").isNull || col("NHHK") =!= excludedSemester)
+
+  /** A1: weighted GPA with zero-denominator guard (app.py:137-144). */
+  def gpa(points: Column, credits: Column): Column =
+    when(credits > 0, points / credits).otherwise(0.0)
+
   /** All-students progress report over an enriched enrollment table.
     *
     * Input columns: F_MASV, F_MAMH, F_TENMHVN, F_TENLOP, F_KHOAHOC, NHHK,
@@ -63,10 +76,7 @@ object Progress {
       .withColumn("F_DIEM2", col("F_DIEM2").try_cast("double"))
       .withColumn("F_DVHT", col("F_DVHT").try_cast("double"))
 
-    // T14/T15: GPA-eligible rows: passed, not '*'-marked, not current semester.
-    val gpaEligible = col("F_DIEM2") >= 4.0 &&
-      !coalesce(col("F_TENMHVN").contains("*"), lit(false)) &&
-      (col("NHHK").isNull || col("NHHK") =!= p.excludedSemester)
+    val eligible = gpaEligible(p.excludedSemester)
 
     // T16: banding; A1 numerator/denominator as conditional partial aggregates
     // (map-side combine — one shuffle on F_MASV for the whole report).
@@ -76,8 +86,8 @@ object Progress {
     val perStudent = typed.groupBy("F_MASV", "khoa").agg(
       max(when(col("F_TENLOP").startsWith("DI"), 1).otherwise(0)).as("any_di"),
       max(when(col("F_TENLOP").startsWith("FL"), 1).otherwise(0)).as("any_fl"),
-      sum(when(gpaEligible, grade4 * col("F_DVHT")).otherwise(0.0)).as("total_points"),
-      sum(when(gpaEligible, col("F_DVHT")).otherwise(0.0)).as("credits_earned"),
+      sum(when(eligible, grade4 * col("F_DVHT")).otherwise(0.0)).as("total_points"),
+      sum(when(eligible, col("F_DVHT")).otherwise(0.0)).as("credits_earned"),
       // A3: registrar cumulative credits — reference takes iloc[0] from
       // unstable ES order; we pin "value at the latest semester" (max_by with
       // a NHHK/tiebreak total order). Documented deviation, SURVEY.md §7.4.
@@ -107,10 +117,7 @@ object Progress {
       .withColumn("max_credits_remaining_in_time",
         col("remaining_semesters") * p.maxCreditsPerSemester)
       .withColumn("progress_pct", col("completed_credits") / col("total_credits") * 100)
-      // A1: weighted GPA with zero-denominator guard (app.py:137-144).
-      .withColumn("dtbctl",
-        when(col("credits_earned") > 0, col("total_points") / col("credits_earned"))
-          .otherwise(0.0))
+      .withColumn("dtbctl", gpa(col("total_points"), col("credits_earned")))
 
     // T20: tri-state status (app.py:154-178). A student whose requirements
     // are UNKNOWN (major 'Chưa xác định' — no creditReq/duration entry)

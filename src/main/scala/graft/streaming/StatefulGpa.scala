@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.functions.GradeScale
+import graft.query.Progress
 
 /** Per-student cumulative GPA as keyed streaming state — the flagship A1
   * aggregate (`app.py:137-144`) maintained continuously instead of
@@ -26,17 +27,18 @@ object StatefulGpa {
   /** Emitted once per student per micro-batch that touched the student. */
   case class GpaUpdate(masv: String, dtbctl: Double, credits: Double, n: Long)
 
+  /** A student's state after a batch, as the stateful operator emits it;
+    * [[withGpa]] turns it into a [[GpaUpdate]]. */
+  case class GpaTotals(masv: String, points: Double, credits: Double, n: Long)
+
   /** Rows already reduced to per-student per-batch partials. (Public: the
     * encoder's generated projections cannot access private members.) */
   case class Partial(masv: String, pts: Double, cr: Double, n: Long)
 
-  /** Eligible-course projection: passed (>= 4.0), GPA-counted (no '*' in the
-    * course name), not the excluded in-progress semester — identical
-    * predicate to the batch flagship query. */
+  /** Eligible-course projection: the batch flagship query's predicate,
+    * [[Progress.gpaEligible]]. */
   def eligiblePartials(enrollments: DataFrame, excludedSemester: Int): DataFrame = {
-    val eligible = col("F_DIEM2") >= 4.0 &&
-      !col("F_TENMHVN").contains("*") && col("NHHK") =!= excludedSemester
-    enrollments.filter(eligible && col("F_MASV").isNotNull)
+    enrollments.filter(Progress.gpaEligible(excludedSemester) && col("F_MASV").isNotNull)
       .select(col("F_MASV").as("masv"),
         (GradeScale.grade4(col("F_DIEM2")) * col("F_DVHT")).as("pts"),
         col("F_DVHT").as("cr"))
@@ -49,17 +51,27 @@ object StatefulGpa {
     partials.select(col("masv"), col("pts"), col("cr"), lit(1L).as("n"))
       .as[Partial]
       .groupByKey(_.masv)
-      .mapGroupsWithState[GpaState, GpaUpdate](GroupStateTimeout.NoTimeout) {
+      .mapGroupsWithState[GpaState, GpaTotals](GroupStateTimeout.NoTimeout) {
         (masv, rows, state: GroupState[GpaState]) =>
-          val prev = state.getOption.getOrElse(GpaState(0.0, 0.0, 0L))
-          val next = rows.foldLeft(prev) { (s, r) =>
-            GpaState(s.points + r.pts, s.credits + r.cr, s.n + r.n)
-          }
+          val next = step(state.getOption, rows)
           state.update(next)
-          GpaUpdate(masv,
-            if (next.credits > 0) next.points / next.credits else 0.0,
-            next.credits, next.n)
+          GpaTotals(masv, next.points, next.credits, next.n)
       }
+      .transform(withGpa)
+  }
+
+  /** The fold both stateful legs share: a batch's partials onto the state. */
+  private def step(prev: Option[GpaState], rows: Iterator[Partial]): GpaState =
+    rows.foldLeft(prev.getOrElse(GpaState(0.0, 0.0, 0L))) { (s, r) =>
+      GpaState(s.points + r.pts, s.credits + r.cr, s.n + r.n)
+    }
+
+  /** The cumulative GPA of each emitted state: the report's ratio,
+    * [[Progress.gpa]]. */
+  private def withGpa(totals: Dataset[GpaTotals]): Dataset[GpaUpdate] = {
+    import totals.sparkSession.implicits._
+    totals.select(col("masv"), Progress.gpa(col("points"), col("credits")).as("dtbctl"),
+      col("credits"), col("n")).as[GpaUpdate]
   }
 
   /** Convenience: full streaming leg from raw enrollments; `Update` output
@@ -78,7 +90,7 @@ object StatefulGpa {
     * the HDFS-backed default keeps every key on-heap). Values are
     * IDENTICAL to [[runningGpa]] — same partials, same fold. */
   class GpaProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, Partial, GpaUpdate] {
+      String, Partial, GpaTotals] {
     import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, ValueState}
     @transient private var st: ValueState[GpaState] = _
 
@@ -87,15 +99,10 @@ object StatefulGpa {
         org.apache.spark.sql.Encoders.product[GpaState], TTLConfig.NONE)
 
     override def handleInputRows(masv: String, rows: Iterator[Partial],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[GpaUpdate] = {
-      val prev = if (st.exists()) st.get() else GpaState(0.0, 0.0, 0L)
-      val next = rows.foldLeft(prev) { (s, r) =>
-        GpaState(s.points + r.pts, s.credits + r.cr, s.n + r.n)
-      }
+        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[GpaTotals] = {
+      val next = step(Option.when(st.exists())(st.get()), rows)
       st.update(next)
-      Iterator.single(GpaUpdate(masv,
-        if (next.credits > 0) next.points / next.credits else 0.0,
-        next.credits, next.n))
+      Iterator.single(GpaTotals(masv, next.points, next.credits, next.n))
     }
   }
 
@@ -108,5 +115,6 @@ object StatefulGpa {
       .as[Partial]
       .groupByKey(_.masv)
       .transformWithState(new GpaProcessor, TimeMode.None(), OutputMode.Update())
+      .transform(withGpa)
   }
 }

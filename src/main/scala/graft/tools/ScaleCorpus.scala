@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *   runMain graft.tools.ScaleCorpus <srcSfDir> <outDir> <factor> [exact]
   *
   * Writes `<outDir>/documents.parquet` and `<outDir>/embeddings.parquet`
-  * with ids offset per replica; point `Prof time` at <outDir> for any
-  * documents/embeddings-only query.
+  * with ids offset per replica; point `SPARK_GRAFT_SF_DIR` at <outDir> and
+  * run `graft.Bench` with the names of documents/embeddings-only queries.
   *
   * A 4th arg `exact` switches the documents replicas to EXACT duplicates
   * (no per-replica suffix) — the mirror/repost duplication regime, the

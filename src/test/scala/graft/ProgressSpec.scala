@@ -122,6 +122,28 @@ class ProgressSpec extends SparkSpec {
     assert(row.getAs[String]("major") == "MMT")
   }
 
+  test("report GPA equals the stateful GPA when a passed row has a null semester or course name") {
+    import graft.streaming.StatefulGpa
+    // B2100010 passes a 3-credit course (A, 4.0) with a null NHHK beside a
+    // 3-credit C (2.0); B2100011 passes a 2-credit course (B, 3.0) with a
+    // null course name beside a 2-credit D (1.0). Both rows are eligible:
+    // GPA 3.0 and 2.0; dropping them would read 2.0 and 1.0.
+    val nulls = Seq(
+      (t0, "B2100010", "C1", Some("Toán"), "DI01", "47", None, 9.0, 3.0, 6.0),
+      (t0, "B2100010", "C2", Some("Văn"), "DI01", "47", Some(20231), 5.5, 3.0, 6.0),
+      (t0, "B2100011", "C1", None, "FL01", "47", Some(20231), 7.0, 2.0, 4.0),
+      (t0, "B2100011", "C2", Some("Lý"), "FL01", "47", Some(20232), 4.0, 2.0, 4.0)
+    ).toDF("@timestamp", "F_MASV", "F_MAMH", "F_TENMHVN", "F_TENLOP",
+      "F_KHOAHOC", "NHHK", "F_DIEM2", "F_DVHT", "F_TCDTTL")
+    val report = Progress.report(spark, nulls).collect()
+      .map(r => r.getAs[String]("F_MASV") -> r.getAs[Double]("dtbctl")).toMap
+    // The stateful leg on a batch frame folds each student's rows once.
+    val stateful = StatefulGpa.stream(nulls, excludedSemester = 20251).collect()
+      .map(u => u.masv -> u.dtbctl).toMap
+    assert(report == Map("B2100010" -> 3.0, "B2100011" -> 2.0), s"report $report")
+    assert(stateful == report, s"stateful $stateful vs report $report")
+  }
+
   test("transcript is the app.py table: filtered, projected, sorted") {
     val t = Progress.transcript(rows, "B2100001").collect()
     assert(t.length == 5)

@@ -5,11 +5,10 @@
 # setup (JDK17 add-opens, UTC, UI off, 8g default heap).
 #   tools/run-class.sh graft.Bench
 #   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 tools/run-class.sh graft.Bench
+#   SPARK_GRAFT_SF_DIR=<sfDir> tools/run-class.sh graft.Bench d14_prefix_neardup sess_stream_replay
 #   tools/run-class.sh graft.Explain /root/testdata/sf0.001 d13_lexical_neardup
-#   tools/run-class.sh graft.tools.Prof time /root/testdata/sf0.1 d6_dup_clusters
-#   SPARK_GRAFT_CPUS=32 tools/run-class.sh graft.tools.Prof stages /root/testdata/sf0.1 d13_lexical_neardup
-#   tools/run-class.sh graft.tools.Prof jobs /root/testdata/sf0.1 d14_prefix_neardup
-#   tools/run-class.sh graft.tools.Prof replay /root/testdata/sf0.1 sess_stream_replay
+#   GRAFT_EXTRA_JAVA_OPTS="-Dspark.graft.materialize.mode=reliable -Dspark.graft.materialize.dir=/tmp/ckpt" \
+#     tools/run-class.sh graft.Bench d6_dup_clusters
 set -euo pipefail
 cd "$(dirname "$0")/.."
 # SPARK_EXTRA_JARS keeps parity with build.sbt's forked run (the opt-in
