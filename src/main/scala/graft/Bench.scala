@@ -432,7 +432,8 @@ private[graft] final class PassRecorder(spark: SparkSession)
       val m = i.taskMetrics
       StageRow(i.numTasks, m.executorRunTime, m.jvmGCTime, m.memoryBytesSpilled,
         m.shuffleReadMetrics.recordsRead, m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.recordsWritten, m.shuffleWriteMetrics.bytesWritten)
+        m.shuffleWriteMetrics.recordsWritten, m.shuffleWriteMetrics.bytesWritten,
+        m.executorDeserializeTime, m.executorDeserializeCpuTime / 1000000L)
     }
     val stream =
       if (started.get() == startedBefore) Map.empty[String, Long]
@@ -467,17 +468,20 @@ private[graft] object PassRecorder {
 
   /** One completed stage. A stage whose task time is large but whose task
     * count is 2-3 on a wide host is AQE coalescing fusing an expanding join
-    * onto too few cores (PLANS.md round 8). */
+    * onto too few cores (PLANS.md round 8). Task time (`executorRunTime`)
+    * leaves out the time each task spends deserializing its closure before
+    * it runs; `deserMs` and `deserCpuMs` are that time, wall and CPU. */
   final case class StageRow(tasks: Int, taskMs: Long, gcMs: Long, spillBytes: Long,
                             shuffleReadRecords: Long, shuffleReadBytes: Long,
-                            shuffleWriteRecords: Long, shuffleWriteBytes: Long)
+                            shuffleWriteRecords: Long, shuffleWriteBytes: Long,
+                            deserMs: Long, deserCpuMs: Long)
 
   /** Field order of the sidecar's row arrays. */
   val FieldsJson: String =
     """"job_row_fields":["wall_ms","gap_ms","stages","tasks"],""" +
       """"stage_row_fields":["tasks","task_ms","gc_ms","spill_bytes",""" +
       """"shuffle_read_records","shuffle_read_bytes","shuffle_write_records",""" +
-      """"shuffle_write_bytes"]"""
+      """"shuffle_write_bytes","deser_ms","deser_cpu_ms"]"""
 
   /** One pass's split: Catalyst ms, its jobs and completed stages, and for
     * a pass that started streaming queries the progress sums (ms) and the
@@ -489,6 +493,8 @@ private[graft] object PassRecorder {
       "jobs" -> jobs.size.toLong,
       "gap_ms" -> jobs.map(_.gapMs).sum,
       "task_ms" -> stages.map(_.taskMs).sum,
+      "deser_ms" -> stages.map(_.deserMs).sum,
+      "deser_cpu_ms" -> stages.map(_.deserCpuMs).sum,
       "gc_ms" -> stages.map(_.gcMs).sum,
       "spill_bytes" -> stages.map(_.spillBytes).sum,
       "shuffle_read_bytes" -> stages.map(_.shuffleReadBytes).sum,
@@ -503,7 +509,8 @@ private[graft] object PassRecorder {
       val jobRows = jobs.map(j => s"[${j.wallMs},${j.gapMs},${j.stages},${j.tasks}]")
       val stageRows = stages.map(s =>
         s"[${s.tasks},${s.taskMs},${s.gcMs},${s.spillBytes},${s.shuffleReadRecords}," +
-          s"${s.shuffleReadBytes},${s.shuffleWriteRecords},${s.shuffleWriteBytes}]")
+          s"${s.shuffleReadBytes},${s.shuffleWriteRecords},${s.shuffleWriteBytes}," +
+          s"${s.deserMs},${s.deserCpuMs}]")
       val streamJson =
         if (stream.isEmpty) Nil
         else Seq(stream.toSeq.sorted.map { case (k, v) => s""""$k":$v""" }

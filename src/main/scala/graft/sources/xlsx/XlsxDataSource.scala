@@ -4,16 +4,20 @@ import java.util.zip.ZipInputStream
 
 import scala.collection.mutable
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** Excel (`.xlsx`) batch source as a DataSourceV2 (reference `pro.py:34-44`:
   * openpyxl reads the sheet, first row is the header, every value is
@@ -25,12 +29,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * are parsed with the built-in StAX reader — no external library, which is
   * what lets this run in a hermetic executor image.
   *
-  * Scale shape: one InputPartition per FILE. A single workbook is not
-  * splittable (one zip central directory, one XML stream) and is small by
-  * construction — Excel caps at ~1M rows — so the 100 TB story is *many*
-  * files fanning out across executors, the same layout the directory-watcher
-  * ingest (S2) produces. All columns are strings (`pro.py` stringifies too);
-  * downstream casts are `try_cast`-based lenient casts (T6).
+  * Scale shape: workbooks packed into read partitions by Spark's own
+  * file-source rule (`spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
+  * `minPartitionNum`; see [[XlsxIO.pack]]), in sorted path order. A single
+  * workbook is not splittable (one zip central directory, one XML stream)
+  * and is small by construction — Excel caps at ~1M rows — so the 100 TB
+  * story is *many* files fanning out across executors, the same layout the
+  * directory-watcher ingest (S2) produces. The FILE stays the unit that is
+  * opened, fails or is skipped: a partition's reader opens each workbook
+  * when it reaches it. Executors read the session's Hadoop conf through one
+  * broadcast per scan (per stream instance for the stream), so a task
+  * carries no conf of its own. All columns are strings (`pro.py`
+  * stringifies too); downstream casts are `try_cast`-based lenient casts
+  * (T6).
   *
   * Options: `header` (default true), `sheet` (1-based index, default 1),
   * `ignoreCorruptFiles` (default: the session's
@@ -60,8 +71,8 @@ class XlsxDataSource extends TableProvider with DataSourceRegister {
     // (review finding). `maxRows = 1` stops each probe after one row —
     // inference never pays a full-sheet parse.
     val first = files.iterator
-      .map(f => XlsxIO.readSheet(f, sheet, maxRows = 1)
-        .take(1).toSeq.headOption.getOrElse(Seq.empty))
+      .map { case (f, _) => XlsxIO.readSheet(f, sheet, maxRows = 1)
+        .take(1).toSeq.headOption.getOrElse(Seq.empty) }
       .find(_.nonEmpty)
       .getOrElse(throw new IllegalArgumentException(
         s"cannot infer schema at ${options.get("path")}: sheet $sheet of " +
@@ -120,32 +131,38 @@ class XlsxScan(schema0: StructType, options: CaseInsensitiveStringMap) extends S
     val header = XlsxIO.boolOpt(options, "header", default = true)
     val ignoreCorrupt = XlsxIO.ignoreCorrupt(options)
     val ignoreMissing = XlsxIO.ignoreMissing(options)
-    XlsxIO.listFiles(options).map(p =>
-      XlsxFilePartition(p, sheet, header, ignoreCorrupt,
-        ignoreMissing): InputPartition).toArray
+    XlsxIO.pack(SparkSession.active, XlsxIO.listFiles(options))(
+      XlsxFilePartition(_, sheet, header, ignoreCorrupt, ignoreMissing))
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  override def createReaderFactory(): PartitionReaderFactory = {
     // Ship the SESSION Hadoop conf (spark.hadoop.* keys: credentials, HA
     // nameservices) to executors — a bare `new Configuration()` works on
-    // local paths but breaks on any real cluster store.
-    XlsxReaderFactory(schema0.length,
-      new org.apache.spark.util.SerializableConfiguration(
-        SparkSession.active.sessionState.newHadoopConf()))
+    // local paths but breaks on any real cluster store. Broadcast, as
+    // Spark's own FileScans do: a conf embedded in the factory is
+    // deserialized again by every task (tens of ms of CPU each).
+    val session = SparkSession.active
+    XlsxReaderFactory(schema0.length, session.sparkContext.broadcast(
+      new SerializableConfiguration(session.sessionState.newHadoopConf())))
+  }
 }
 
 /** ONE reader factory for the batch scan and the micro-batch stream (they
-  * read identical per-file partitions; two copies of this block would have
-  * to be edited in lockstep — review finding). */
-case class XlsxReaderFactory(
-    width: Int, conf: org.apache.spark.util.SerializableConfiguration)
+  * read identical partitions; two copies of this block would have to be
+  * edited in lockstep — review finding). The conf is a broadcast, so the
+  * factory every task carries stays small (XlsxSpec bounds it at 4 KB).
+  * Nothing destroys the broadcast: Spark's ContextCleaner drops it once no
+  * plan or batch holds the factory. */
+case class XlsxReaderFactory(width: Int, conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new XlsxPartitionReader(partition.asInstanceOf[XlsxFilePartition], width, conf)
 }
 
-/** One workbook file = one partition (a zip stream is not splittable). */
-case class XlsxFilePartition(path: String, sheet: Int, header: Boolean,
+/** One read task's workbooks, in sorted path order, as [[XlsxIO.pack]]
+  * grouped them (a zip stream is not splittable, so a file is never
+  * divided). */
+case class XlsxFilePartition(paths: Seq[String], sheet: Int, header: Boolean,
                              ignoreCorrupt: Boolean = false,
                              ignoreMissing: Boolean = false) extends InputPartition
 
@@ -199,14 +216,15 @@ object XlsxOffset {
   def entry(path: String, mtime: Long, len: Long): String = s"$path#$mtime#$len"
   def pathOf(entry: String): String =
     entry.substring(0, entry.lastIndexOf('#', entry.lastIndexOf('#') - 1))
+  def lengthOf(entry: String): Long = entry.substring(entry.lastIndexOf('#') + 1).toLong
 }
 
 /** S2-over-xlsx: the reference's directory watcher fires per created
   * workbook (`pro.py:96-108` watchdog → `process_excel_file`); the Spark
   * twin is a MicroBatchStream that lists the watched directory each
-  * trigger, diffs against the seen-file offset, and plans one
-  * [[XlsxFilePartition]] per NEW workbook — the same discovery contract as
-  * Spark's file source, over the same per-file reader as the batch scan.
+  * trigger, diffs against the seen-file offset, and packs the NEW
+  * workbooks into [[XlsxFilePartition]]s — the same discovery contract as
+  * Spark's file source, over the same reader as the batch scan.
   *
   * Admission control: `maxFilesPerTrigger` (default: all available) bounds
   * each micro-batch; [[SupportsTriggerAvailableNow]] snapshots the listing
@@ -220,9 +238,11 @@ class XlsxMicroBatchStream(schema0: StructType, options: CaseInsensitiveStringMa
 
   private val maxFilesPerTrigger: Option[Int] =
     Option(options.get("maxFilesPerTrigger")).map(_.toInt)
-  // Driver-side conf capture (same rationale as the batch scan's factory).
-  private val conf = new org.apache.spark.util.SerializableConfiguration(
-    SparkSession.active.sessionState.newHadoopConf())
+  private val session = SparkSession.active
+  // Driver-side conf capture (same rationale as the batch scan's factory):
+  // listing reads it directly, executors through one broadcast per stream.
+  private val conf = session.sessionState.newHadoopConf()
+  private val confBc = session.sparkContext.broadcast(new SerializableConfiguration(conf))
   private val sheet = XlsxIO.intOpt(options, "sheet", 1)
   private val header = XlsxIO.boolOpt(options, "header", default = true)
   private val ignoreCorrupt = XlsxIO.ignoreCorrupt(options)
@@ -234,10 +254,10 @@ class XlsxMicroBatchStream(schema0: StructType, options: CaseInsensitiveStringMa
   @volatile private var snapshot: Option[Seq[String]] = None
 
   private def listNow(): Seq[String] =
-    snapshot.getOrElse(XlsxIO.listEntriesIn(options, conf.value))
+    snapshot.getOrElse(XlsxIO.listEntriesIn(options, conf))
 
   override def prepareForTriggerAvailableNow(): Unit =
-    snapshot = Some(XlsxIO.listEntriesIn(options, conf.value))
+    snapshot = Some(XlsxIO.listEntriesIn(options, conf))
 
   override def getDefaultReadLimit: ReadLimit =
     maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
@@ -277,32 +297,34 @@ class XlsxMicroBatchStream(schema0: StructType, options: CaseInsensitiveStringMa
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[XlsxOffset].entries.toSet
-    end.asInstanceOf[XlsxOffset].entries.filterNot(seen).sorted
-      .map(e => XlsxFilePartition(XlsxOffset.pathOf(e), sheet, header,
-        ignoreCorrupt, ignoreMissing): InputPartition)
-      .toArray
+    val fresh = end.asInstanceOf[XlsxOffset].entries.filterNot(seen).sorted
+      .map(e => (XlsxOffset.pathOf(e), XlsxOffset.lengthOf(e)))
+    XlsxIO.pack(session, fresh)(
+      XlsxFilePartition(_, sheet, header, ignoreCorrupt, ignoreMissing))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    XlsxReaderFactory(schema0.length, conf)
+    XlsxReaderFactory(schema0.length, confBc)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 class XlsxPartitionReader(part: XlsxFilePartition, width: Int,
-                          conf: org.apache.spark.util.SerializableConfiguration)
+                          conf: Broadcast[SerializableConfiguration])
   extends PartitionReader[InternalRow] with org.apache.spark.internal.Logging {
   // `ignoreCorrupt` mirrors Spark's own file sources (the
   // spark.sql.files.ignoreCorruptFiles contract, FileScanRDD's
   // IOException|RuntimeException catch): an unreadable workbook logs and
-  // reads as EMPTY instead of failing the task. The case that makes this
-  // matter is the STREAM: a poison file in a watched directory would
-  // otherwise crash every restart forever — with the flag, the bad
-  // version still enters the seen-file offset, so the query moves on and
-  // a FIXED overwrite of the file stats as a new version and is
-  // re-admitted (the modify path doubling as the repair path).
-  private def corrupt(stage: String): PartialFunction[Throwable, Iterator[Seq[(Int, String)]]] = {
+  // reads as EMPTY instead of failing the task, and the reader goes on to
+  // the partition's next workbook — the FILE is the unit that is skipped,
+  // as in FileScanRDD. The case that makes this matter is the STREAM: a
+  // poison file in a watched directory would otherwise crash every restart
+  // forever — with the flag, the bad version still enters the seen-file
+  // offset, so the query moves on and a FIXED overwrite of the file stats
+  // as a new version and is re-admitted (the modify path doubling as the
+  // repair path).
+  private def corrupt(path: String): PartialFunction[Throwable, Iterator[Seq[(Int, String)]]] = {
     // Clause order mirrors Spark's FileScanRDD: a FileNotFoundException is
     // exclusively `ignoreMissingFiles` territory — a file DELETED between
     // admission and the batch run is not corruption, and without its own
@@ -313,24 +335,26 @@ class XlsxPartitionReader(part: XlsxFilePartition, width: Int,
     // questions (junk content vs. racing deletes) and conflating them
     // masks real corruption when only deletes were meant to be tolerated.
     case e: java.io.FileNotFoundException if part.ignoreMissing =>
-      logWarning(s"skipping missing xlsx ${part.path} ($stage): $e")
+      logWarning(s"skipping missing xlsx $path: $e")
       Iterator.empty
     case e @ (_: java.io.IOException | _: RuntimeException |
               _: javax.xml.stream.XMLStreamException)
         if part.ignoreCorrupt && !e.isInstanceOf[XlsxMissingSheetException] &&
           !e.isInstanceOf[java.io.FileNotFoundException] =>
-      logWarning(s"skipping corrupt xlsx ${part.path} ($stage): $e")
+      logWarning(s"skipping corrupt xlsx $path: $e")
       Iterator.empty
   }
-  private val rows: Iterator[Seq[(Int, String)]] =
-    // One catch covers the WHOLE file: readSheet reads the zip and parses
-    // the complete sheet XML eagerly (the iterator it returns is over an
-    // already-built buffer), so truncated zips, garbled XML, and missing
-    // sheets all surface here — there is no mid-iteration failure mode.
+  /** One workbook's rows, read when the reader reaches the file. One catch
+    * covers the WHOLE file: readSheet reads the zip and parses the complete
+    * sheet XML eagerly (the iterator it returns is over an already-built
+    * buffer), so truncated zips, garbled XML, and missing sheets all
+    * surface here — there is no mid-iteration failure mode. */
+  private def open(path: String): Iterator[Seq[(Int, String)]] =
     try {
-      val it = XlsxIO.readSheet(part.path, part.sheet, conf.value)
+      val it = XlsxIO.readSheet(path, part.sheet, conf.value.value)
       if (part.header && it.hasNext) { it.next(); it } else it
-    } catch corrupt("open")
+    } catch corrupt(path)
+  private val rows: Iterator[Seq[(Int, String)]] = part.paths.iterator.flatMap(open)
   private var current: InternalRow = _
 
   override def next(): Boolean =
@@ -381,11 +405,11 @@ object XlsxIO {
     Option(o.get("ignoreMissingFiles")).map(_.toBoolean).getOrElse(
       SparkSession.active.sessionState.conf.ignoreMissingFiles)
 
-  /** Resolve the `path` option to concrete workbook files (a file, or every
-    * `.xlsx` directly inside a directory, sorted for determinism). Uses the
-    * Hadoop FileSystem API so the same code reads local paths in tests and
-    * distributed stores on a cluster. */
-  def listFiles(options: CaseInsensitiveStringMap): Seq[String] =
+  /** Resolve the `path` option to concrete workbook files with their byte
+    * lengths (a file, or every `.xlsx` directly inside a directory, sorted
+    * by path for determinism). Uses the Hadoop FileSystem API so the same
+    * code reads local paths in tests and distributed stores on a cluster. */
+  def listFiles(options: CaseInsensitiveStringMap): Seq[(String, Long)] =
     // driver side: the active session's Hadoop conf carries spark.hadoop.*
     listFilesIn(options, SparkSession.active.sessionState.newHadoopConf())
 
@@ -398,18 +422,39 @@ object XlsxIO {
     * differs: a watched directory legitimately starts before its first
     * workbook arrives. */
   def listFilesIn(options: CaseInsensitiveStringMap,
-                  conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
+                  conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
     val raw = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("xlsx source requires a path"))
     val p = new org.apache.hadoop.fs.Path(raw)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p))
       throw new java.io.FileNotFoundException(s"xlsx path does not exist: $raw")
-    else if (fs.getFileStatus(p).isDirectory)
-      fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".xlsx"))
-        .map(_.getPath.toString).sorted
-    else Seq(p.toString)
+    else {
+      val st = fs.getFileStatus(p)
+      if (st.isDirectory)
+        fs.listStatus(p).toSeq
+          .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".xlsx"))
+          .map(s => (s.getPath.toString, s.getLen)).sorted
+      else Seq((p.toString, st.getLen))
+    }
+  }
+
+  /** Pack workbooks, in the given order, into read partitions by the rule
+    * Spark's built-in file sources use: the split size comes from
+    * `spark.sql.files.maxPartitionBytes`, `openCostInBytes` and
+    * `minPartitionNum` (default: the leaf-node parallelism), each file
+    * costs its length plus the open cost, and a partition closes when the
+    * next file would pass the split size. Keeping the order keeps the row
+    * order of a per-file read. */
+  def pack(session: SparkSession, files: Seq[(String, Long)])(
+      part: Seq[String] => XlsxFilePartition): Array[InputPartition] = {
+    val openCost = session.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(session, files.map(_._2 + openCost).sum)
+    val pfs = files.map { case (p, len) =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p), 0L, len) }
+    FilePartition.getFilePartitions(session, pfs, maxSplit)
+      .map(fp => part(fp.files.toSeq.map(_.filePath.toPath.toString)): InputPartition)
+      .toArray
   }
 
   /** Streaming listing: one [[XlsxOffset.entry]] per workbook VERSION
@@ -594,12 +639,18 @@ object XlsxIO {
     }
   }
 
-  private def xmlReader(bytes: Array[Byte]): javax.xml.stream.XMLStreamReader = {
+  /** One configured StAX factory per thread: `newInstance()` walks the
+    * service lookup on every call (hundreds of µs, four calls a workbook),
+    * and StAX does not promise that a factory is thread-safe. */
+  private val xmlFactory = ThreadLocal.withInitial[javax.xml.stream.XMLInputFactory] { () =>
     val f = javax.xml.stream.XMLInputFactory.newInstance()
     f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, false)
     f.setProperty(javax.xml.stream.XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-    f.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
+    f
   }
+
+  private def xmlReader(bytes: Array[Byte]): javax.xml.stream.XMLStreamReader =
+    xmlFactory.get.createXMLStreamReader(new java.io.ByteArrayInputStream(bytes))
 
   /** sharedStrings.xml: <sst><si><t>text</t></si>...</sst> (rich-text runs
     * <si><r><t>a</t></r><r><t>b</t></r></si> concatenate). Phonetic runs

@@ -35,6 +35,9 @@ class BenchSpec extends SparkSpec {
     assert(tot("stages") >= 2, split.json)
     assert(tot("shuffle_write_records") > 0, split.json)
     assert(tot("plan_ms") > 0, split.json)
+    assert(tot("deser_ms") >= 0 && tot("deser_cpu_ms") >= 0, split.json)
+    assert(split.stages.forall(s => s.deserMs >= 0 && s.deserCpuMs >= 0), split.json)
+    assert(split.json.contains("\"deser_cpu_ms\":"), split.json)
     assert(split.jobs.size == tot("jobs") && split.stages.size == tot("stages"))
     assert(split.stream.isEmpty, "a batch pass has no streaming progress")
     assert(recorderListeners().isEmpty)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 /** Test alias for the main-side OOXML writer (promoted to
@@ -107,6 +109,113 @@ class XlsxSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions == 2)
     assert(df.orderBy("k").as[(String, String)].collect().toSeq ==
       Seq(("a", "1"), ("b", "2")))
+  }
+
+  private val kvSchema = org.apache.spark.sql.types.StructType(Seq("k", "v").map(n =>
+    org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))
+
+  /** `n` two-row workbooks `wb00.xlsx`… in `d`, named so that path order is
+    * index order. */
+  private def writeBooks(d: java.io.File, n: Int): Unit =
+    for (i <- 0 until n)
+      XlsxTestFixture.write(new java.io.File(d, f"wb$i%02d.xlsx").getAbsolutePath,
+        Seq(Seq("k", "v"), Seq(s"a$i", i), Seq(s"b$i", i * 10)))
+
+  test("many workbooks pack into fewer partitions, rows in per-file order") {
+    val d = tmpDir()
+    writeBooks(d, 40)
+    val df = spark.read.format("xlsx").schema(kvSchema).load(d.getAbsolutePath)
+    val parts = df.rdd.getNumPartitions
+    assert(parts > 1 && parts < 40, s"40 tiny workbooks planned $parts partitions")
+    val perFile = d.listFiles().map(_.getAbsolutePath).filter(_.endsWith(".xlsx")).sorted
+      .toSeq.flatMap(f => spark.read.format("xlsx").schema(kvSchema).load(f)
+        .as[(String, String)].collect().toSeq)
+    assert(perFile.size == 80)
+    assert(df.as[(String, String)].collect().toSeq == perFile)
+  }
+
+  test("a corrupt or deleted workbook inside a packed partition skips alone, under its flag") {
+    // The file, not the partition, is the unit that fails or is skipped:
+    // a bad workbook between two good ones in ONE read task costs only
+    // its own rows under the flag, and fails the read without it.
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val d = tmpDir()
+    def book(name: String, v: String) = XlsxTestFixture.write(
+      new java.io.File(d, name).getAbsolutePath, Seq(Seq("k", "v"), Seq(v, "1")))
+    book("a.xlsx", "va"); book("b.xlsx", "vb"); book("c.xlsx", "vc")
+    val b = new java.io.File(d, "b.xlsx")
+    // Plans the directory (one partition once minPartitionNum is 1), runs
+    // `between` after planning, then reads the partition's rows.
+    def read(flag: Option[String])(between: => Unit): Seq[String] = {
+      val opts = Map("path" -> d.getAbsolutePath) ++ flag.map(_ -> "true")
+      val batch = new graft.sources.xlsx.XlsxTable(kvSchema,
+          new CaseInsensitiveStringMap(opts.asJava))
+        .newScanBuilder(CaseInsensitiveStringMap.empty()).build().toBatch
+      val parts = graft.streaming.Replay.withConfs(spark,
+        Map("spark.sql.files.minPartitionNum" -> "1"))(batch.planInputPartitions())
+      assert(parts.length == 1 &&
+        parts.head.asInstanceOf[graft.sources.xlsx.XlsxFilePartition].paths.size == 3)
+      between
+      val r = batch.createReaderFactory().createReader(parts.head)
+      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+      while (r.next()) out += r.get().getUTF8String(0).toString
+      out.toSeq
+    }
+    java.nio.file.Files.write(b.toPath, "not a zip".getBytes("UTF-8"))
+    intercept[Exception](read(None)(()))
+    assert(read(Some("ignoreCorruptFiles"))(()) == Seq("va", "vc"))
+    book("b.xlsx", "vb")
+    intercept[java.io.FileNotFoundException](read(None)(assert(b.delete())))
+    book("b.xlsx", "vb")
+    assert(read(Some("ignoreMissingFiles"))(assert(b.delete())) == Seq("va", "vc"))
+  }
+
+  test("streaming: one landing of many workbooks is one micro-batch over packed partitions") {
+    val d = tmpDir()
+    val src = new java.io.File(d, "src")
+    assert(src.mkdir())
+    val k = 12
+    writeBooks(src, k)
+    val batchRows = spark.read.format("xlsx").schema(kvSchema).load(src.getAbsolutePath)
+      .as[(String, String)].collect().toSeq
+    val parts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val rows = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    val q = spark.readStream.format("xlsx").schema(kvSchema).load(src.getAbsolutePath)
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        parts.synchronized {
+          parts += b.rdd.getNumPartitions
+          rows ++= b.as[(String, String)].collect()
+        }: Unit
+      }
+      .option("checkpointLocation", new java.io.File(d, "ckpt").getAbsolutePath)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(parts.size == 1 && parts.head < k, s"micro-batch partitions: $parts")
+    assert(batchRows.size == 2 * k)
+    assert(rows.toSeq == batchRows)
+  }
+
+  test("the reader factory a task carries is small: the Hadoop conf is broadcast") {
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    def javaBytes(o: AnyRef): Int = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(bos)
+      out.writeObject(o); out.close()
+      bos.size()
+    }
+    val d = tmpDir()
+    writeBooks(d, 1)
+    val opts = new CaseInsensitiveStringMap(Map("path" -> d.getAbsolutePath).asJava)
+    val batch = new graft.sources.xlsx.XlsxTable(kvSchema, opts)
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build().toBatch
+    val stream = new graft.sources.xlsx.XlsxMicroBatchStream(kvSchema, opts)
+    for ((name, f) <- Seq("batch" -> batch.createReaderFactory(),
+                          "stream" -> stream.createReaderFactory())) {
+      val n = javaBytes(f)
+      assert(n < 4096, s"$name reader factory serializes to $n bytes")
+    }
   }
 
   test("xlsx scan equals the csv scan of the same table") {
@@ -332,12 +441,12 @@ class XlsxSpec extends SparkSpec {
     // conflating them would mask real corruption when only deletes were
     // meant to be tolerated. Exercised at the reader level, where the race
     // is deterministic.
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
     val gone = "/nonexistent/graft_xlsx_gone.xlsx"
     def readerFor(ignoreCorrupt: Boolean, ignoreMissing: Boolean) =
       new graft.sources.xlsx.XlsxPartitionReader(
-        graft.sources.xlsx.XlsxFilePartition(gone, 1, header = true,
+        graft.sources.xlsx.XlsxFilePartition(Seq(gone), 1, header = true,
           ignoreCorrupt = ignoreCorrupt, ignoreMissing = ignoreMissing),
         width = 1, conf)
     intercept[java.io.FileNotFoundException] {
@@ -564,7 +673,7 @@ class XlsxSpec extends SparkSpec {
     val parts = scan.toBatch.planInputPartitions()
     val part = parts.head.asInstanceOf[graft.sources.xlsx.XlsxFilePartition]
     assert(part.sheet == 2, s"scan-time sheet=2 ignored: $part")
-    assert(part.path == f, "path must fall back to the construction options")
+    assert(part.paths == Seq(f), "path must fall back to the construction options")
   }
 
   test("xlsx replay of an empty corpus settles to an empty frame, not a crash") {

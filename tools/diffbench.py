@@ -5,8 +5,9 @@
 Each argument is a Bench telemetry sidecar (tools/bench_telemetry_<sf>.json,
 or the path SPARK_GRAFT_TELEMETRY named). For every query in both runs (or
 only the named ones) it takes each run's fastest pass and prints its seconds
-and that pass's layer split: Catalyst ms, jobs, driver gaps, task time, GC,
-spill, shuffle, completed stages and tasks, and for streaming replay rungs
+and that pass's layer split: Catalyst ms, jobs, driver gaps, task time, task
+deserialization (deser_ms wall, deser_cpu_ms CPU; task time leaves it out),
+GC, spill, shuffle, completed stages and tasks, and for streaming replay rungs
 the progress sums and batch count. Columns are A, B and B - A. A query one
 run failed or never ran is listed as missing.
 """
