@@ -105,7 +105,10 @@ object Similarity {
     * form generated a 768-term codegen class whose one-time compilation
     * dominated the query), and the loop itself is codegen'd. */
   def srpBucket(df: DataFrame, planes: Int = 12, dims: Int = 64): DataFrame = {
-    val bucket = srpBucketExpr(planes, dims)
+    val bucket = (0 until planes).map { p =>
+      val w = typedLit((0 until dims).map(d => planeSign(p, d).toDouble))
+      when(dot(col("embedding"), w) > 0, 1L << p).otherwise(0L)
+    }.reduce(_ + _)
     // Guard: a vector of the wrong length would null-pad in zip_with, null
     // the fold, and silently collapse every row into bucket 0 (turning the
     // LSH join quadratic). Wrong-length vectors are excluded instead —
@@ -113,18 +116,6 @@ object Similarity {
     df.filter(size(col("embedding")) === dims)
       .select(col("vec_id"), col("embedding"), bucket.as("bucket"))
   }
-
-  /** The SRP bucket id as a bare Column over `embedding` — the shared
-    * definition [[srpBucket]] projects and the composed blockers
-    * ([[embeddingNearDupBucketed]]) fold alongside their own columns.
-    * Callers must apply the same `size(embedding) === dims` guard
-    * [[srpBucket]] applies: a wrong-length vector null-pads the fold and
-    * lands every such row in bucket 0 (quadratic-join hazard). */
-  def srpBucketExpr(planes: Int = 12, dims: Int = 64): Column =
-    (0 until planes).map { p =>
-      val w = typedLit((0 until dims).map(d => planeSign(p, d).toDouble))
-      when(dot(col("embedding"), w) > 0, 1L << p).otherwise(0L)
-    }.reduce(_ + _)
 
   /** LSH-accelerated ANN with multi-probe: each query searches its own SRP
     * bucket plus every bucket within Hamming radius `multiProbe` of it —
@@ -621,7 +612,7 @@ object Similarity {
     * candidate pairs / 92.6 s at ×100), so the registered production
     * shape is [[embeddingNearDupCelled]], which composes the label with a
     * corpus-grown k-means cell. This form remains the recall ground truth
-    * the blocked variants are measured against (OpsSpec pins the numbers).
+    * the Celled blocking is measured against (OpsSpec pins the numbers).
     *
     * Norms are computed once per vector before the pair join (norm(v) is
     * pair-invariant); only the dot product runs per pair — 3x less array
@@ -631,44 +622,6 @@ object Similarity {
       asDouble(col("embedding")).as("emb"), l2norm(col("embedding")).as("nrm"))
       .filter(col("nrm") > 0)
     pairCosine(normed, "label").filter(col("cos") >= threshold)
-  }
-
-  /** [[embeddingNearDup]]'s scale shape: block on (label ∧ SRP bucket), so
-    * the pair space inside each label shrinks by ~2^planes while pairs
-    * still never cross a label. The equi-join shuffles on the composite
-    * key; per-bucket population — and with it the quadratic term — falls
-    * as planes grow, the same lever as [[srpNearDup]]. The default 8 is
-    * one-and-a-half octaves looser than srpNearDup's 12 BECAUSE of the
-    * composition: the label key already divides the corpus (~10×), so the
-    * composed blocking factor ~10·2^8 ≈ 2560 lands within ~1.6× of e5's
-    * standalone 2^12 candidate volume at any corpus size.
-    *
-    * The trade is SRP's usual one, and it is LOUD here, not hidden: a pair
-    * straddling a bucket boundary (any one sign bit disagreeing) is
-    * missed; at cosine `c` both vectors agree on one plane with
-    * p = 1 − arccos(c)/π, on all planes with p^planes. At the loose
-    * registered threshold 0.3 (p ≈ 0.60) that keeps only ~p^8 ≈ 2–3% of
-    * at-threshold pairs (measured against the label-only ground truth at
-    * sf0.01: 3 of 111; the full measured curve is 2 planes → 40%,
-    * 4 → 20%, 8 → 2.7%, 12 → 0%) — single-signature SRP is a
-    * TIGHT-threshold tool (at cos 0.9, p ≈ 0.86, the same 8 planes keep
-    * ~29%). For loose-threshold semantic grouping at scale, use the
-    * distribution-aware ops instead: [[embeddingNearDupCelled]] (e2's
-    * registered shape since round 18 — label ∧ corpus-grown k-means cell,
-    * 5–10× this form's at-threshold recall at the same pair-space bound),
-    * [[semDedup]] (k-means cells grown with the corpus) or [[ivfTopK]]. */
-  def embeddingNearDupBucketed(df: DataFrame, threshold: Double,
-                               planes: Int = 8, dims: Int = 64): DataFrame = {
-    val keyed0 = df.filter(size(col("embedding")) === dims)
-      .select(col("label"), srpBucketExpr(planes, dims).as("bucket"),
-        col("vec_id"), asDouble(col("embedding")).as("emb"),
-        l2norm(col("embedding")).as("nrm"))
-      .filter(col("nrm") > 0)
-    // consumed by both sides of the self-join
-    val keyed = Materialize.pin(keyed0)
-    pairCosine(keyed, "label", "bucket")
-      .filter(col("cos") >= threshold)
-      .select(col("label"), col("a"), col("b"), col("cos"))
   }
 
   /** Embedding near-dup at the loose-threshold production blocking:

@@ -92,47 +92,15 @@ object TextAnalysis {
     * occurrences as conditional sums in ONE doc_id aggregation, then take the
     * argmax in a projection. One shuffle total; the round-2 form's lexicon
     * join, ranking window, and join back to the doc list are gone — at 100 TB
-    * those were two extra shuffles and a per-doc sort. */
+    * those were two extra shuffles and a per-doc sort. A shuffle-free
+    * higher-order `aggregate()` fold over the token array measured 2×
+    * slower here (BASELINE.md r18, x3 fold arm). */
   def languageId(spark: SparkSession, df: DataFrame, textCol: String): DataFrame = {
     val tok = graft.model.Tables.spread(df.select(col("doc_id"), col(textCol)), col("doc_id"))
       .select(col("doc_id"), explode_outer(tokens(col(textCol))).as("token"))
     val aggs = langHitAggs
     val voted = tok.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
     bestLang(voted).select("doc_id", "pred_lang", "hits")
-  }
-
-  /** [[languageId]] with the per-language hit counts folded map-side via
-    * one higher-order `aggregate()` over the token array — no explode, no
-    * doc_id aggregation, fully shuffle-free (the [[cleanCorpusFold]]
-    * shape restricted to the language counters; same single-consumer
-    * contract, so the tokenizer regexp runs once per doc). Row-identical
-    * to [[languageId]] (VietnameseTextSpec pins it).
-    *
-    * MEASURED AND NOT REGISTERED (BASELINE.md r18 (ProbeX5 x3 arm), ×1000/5M docs,
-    * hash-forced): the explode form wins here — 6.7 s vs 13.0 s warm —
-    * the OPPOSITE of x5's 7.2× fold win. The crossover rule: the
-    * higher-order fold is interpreted per element, so it pays a fixed
-    * per-token expression-eval tax; it wins only when the explode
-    * alternative's HashAggregate is HEAVY (x5: nine aggregates behind a
-    * string content-hash grouping key). When the aggregation is a narrow
-    * codegen'd conditional-sum over a long key (this op), the explode
-    * stream is cheaper than the interpreted fold. Kept as the library's
-    * shuffle-free alternative for pipelines that need langid inside a
-    * map-only stage (e.g. fused with other folds, where the tax is
-    * already paid). */
-  def languageIdFold(df: DataFrame, textCol: String): DataFrame = {
-    def hit(s: Column, ws: Seq[String]): Column =
-      when(s.isInCollection(ws), 1L).otherwise(0L)
-    val zero = struct(langsSorted.indices.map(i => lit(0L).as(s"h$i")): _*)
-    def step(acc: Column, x: Column): Column =
-      struct(langsSorted.zipWithIndex.map { case ((_, ws), i) =>
-        (acc.getField(s"h$i") + hit(x, ws)).as(s"h$i") }: _*)
-    val base = graft.model.Tables.spread(df.select(col("doc_id"), col(textCol)), col("doc_id"))
-      .select(col("doc_id"), aggregate(tokens(col(textCol)), zero, step).as("__f"))
-      .withColumns(langsSorted.indices.map(i =>
-        s"__h$i" -> coalesce(col(s"__f.h$i"), lit(0L))).toMap)
-      .drop("__f")
-    bestLang(base).select("doc_id", "pred_lang", "hits")
   }
 
   /** Quality scoring: length, punctuation ratio, stopword ratio, mean word

@@ -9,12 +9,12 @@ import graft.etl.Ingest
   * StructType), data rows streamed, all-blank rows dropped, '' treated as
   * absent.
   *
-  * The reference's openpyxl dependency is replaced by Spark's native
-  * DataSourceV2 file formats — an .xlsx reader would be a thin V2 wrapper
-  * with identical downstream semantics; fixtures here are csv/json/parquet
-  * (TESTDATA.md). File listing, split planning, predicate pushdown, and
-  * column pruning all come from the format, so the same call scales from one
-  * gradebook to a 100 TB lake.
+  * This object serves Spark's native file formats (csv/json/parquet, the
+  * fixtures of TESTDATA.md). The reference's `.xlsx` workbooks are read by
+  * [[graft.sources.xlsx.XlsxDataSource]] (`format("xlsx")`), the paper
+  * path's S1/S2 source, with the same downstream semantics. File listing,
+  * split planning, predicate pushdown, and column pruning all come from the
+  * format, so the same call scales from one gradebook to a 100 TB lake.
   */
 object Tabular {
 

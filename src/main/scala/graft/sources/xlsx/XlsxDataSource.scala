@@ -236,8 +236,14 @@ class XlsxMicroBatchStream(schema0: StructType, options: CaseInsensitiveStringMa
   with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
+  // Refused unless positive, as Spark's file source does: 0 would admit
+  // nothing on every trigger, and the query would idle with no error.
   private val maxFilesPerTrigger: Option[Int] =
-    Option(options.get("maxFilesPerTrigger")).map(_.toInt)
+    Option(options.get("maxFilesPerTrigger")).map { v =>
+      scala.util.Try(v.toInt).toOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"Invalid value '$v' for option 'maxFilesPerTrigger', must be a positive integer"))
+    }
   private val session = SparkSession.active
   // Driver-side conf capture (same rationale as the batch scan's factory):
   // listing reads it directly, executors through one broadcast per stream.
@@ -405,39 +411,36 @@ object XlsxIO {
     Option(o.get("ignoreMissingFiles")).map(_.toBoolean).getOrElse(
       SparkSession.active.sessionState.conf.ignoreMissingFiles)
 
-  /** Resolve the `path` option to concrete workbook files with their byte
-    * lengths (a file, or every `.xlsx` directly inside a directory, sorted
-    * by path for determinism). Uses the Hadoop FileSystem API so the same
-    * code reads local paths in tests and distributed stores on a cluster. */
-  def listFiles(options: CaseInsensitiveStringMap): Seq[(String, Long)] =
-    // driver side: the active session's Hadoop conf carries spark.hadoop.*
-    listFilesIn(options, SparkSession.active.sessionState.newHadoopConf())
-
-  /** Listing against an explicit conf (the streaming source captures the
-    * session conf once at query start). A missing path is an ERROR here:
-    * this is the BATCH listing, and a batch read with an explicit schema
-    * never passes through `inferSchema`'s nonEmpty require — without this
-    * check a mistyped path would silently read as zero rows (review
-    * finding). The STREAMING listing ([[listEntriesIn]]) deliberately
-    * differs: a watched directory legitimately starts before its first
-    * workbook arrives. */
-  def listFilesIn(options: CaseInsensitiveStringMap,
-                  conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long)] = {
+  /** The workbooks the `path` option names, each with the path a batch
+    * read opens it by: the file itself (by the path as given), or every
+    * `.xlsx` directly inside a directory (by its listed path), sorted by
+    * path for determinism. Uses the Hadoop FileSystem API so the same code
+    * reads local paths in tests and distributed stores on a cluster. A
+    * missing path throws `FileNotFoundException`; each caller decides what
+    * that means. */
+  private def workbooks(options: CaseInsensitiveStringMap,
+                        conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(String, org.apache.hadoop.fs.FileStatus)] = {
     val raw = Option(options.get("path")).getOrElse(
       throw new IllegalArgumentException("xlsx source requires a path"))
     val p = new org.apache.hadoop.fs.Path(raw)
     val fs = p.getFileSystem(conf)
-    if (!fs.exists(p))
-      throw new java.io.FileNotFoundException(s"xlsx path does not exist: $raw")
-    else {
-      val st = fs.getFileStatus(p)
-      if (st.isDirectory)
-        fs.listStatus(p).toSeq
-          .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".xlsx"))
-          .map(s => (s.getPath.toString, s.getLen)).sorted
-      else Seq((p.toString, st.getLen))
-    }
+    val st = fs.getFileStatus(p)
+    if (!st.isDirectory) Seq(p.toString -> st)
+    else fs.listStatus(p).toSeq
+      .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".xlsx"))
+      .map(s => s.getPath.toString -> s).sortBy(_._1)
   }
+
+  /** Batch listing: (path, byte length) per workbook, against the active
+    * session's Hadoop conf (it carries spark.hadoop.*). A missing path is
+    * an ERROR here: a batch read with an explicit schema never passes
+    * through `inferSchema`'s nonEmpty require, so without it a mistyped
+    * path would silently read as zero rows (review finding). The
+    * STREAMING listing ([[listEntriesIn]]) deliberately differs. */
+  def listFiles(options: CaseInsensitiveStringMap): Seq[(String, Long)] =
+    workbooks(options, SparkSession.active.sessionState.newHadoopConf())
+      .map { case (path, s) => (path, s.getLen) }
 
   /** Pack workbooks, in the given order, into read partitions by the rule
     * Spark's built-in file sources use: the split size comes from
@@ -459,33 +462,22 @@ object XlsxIO {
 
   /** Streaming listing: one [[XlsxOffset.entry]] per workbook VERSION
     * (path, mtime, length) — an overwritten file stats as a new entry and
-    * re-enters discovery, the watch-modify half of `pro.py:96-108`. */
+    * re-enters discovery, the watch-modify half of `pro.py:96-108`. An
+    * entry names the workbook by its status path (qualified, also for a
+    * single-file `path`). The stream captures `conf` once at query start.
+    * A missing path lists as empty: a watched directory legitimately starts
+    * before its first workbook arrives. */
   def listEntriesIn(options: CaseInsensitiveStringMap,
-                    conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
-    val raw = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException("xlsx source requires a path"))
-    val p = new org.apache.hadoop.fs.Path(raw)
-    val fs = p.getFileSystem(conf)
-    try {
-      if (!fs.exists(p)) Nil
-      else {
-        val sts =
-          if (fs.getFileStatus(p).isDirectory)
-            fs.listStatus(p).toSeq
-              .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".xlsx"))
-          else Seq(fs.getFileStatus(p))
-        sts.map(s => XlsxOffset.entry(
-          s.getPath.toString, s.getModificationTime, s.getLen)).sorted
-      }
-    } catch {
-      // exists()→getFileStatus()/listStatus() TOCTOU: a path deleted
-      // mid-listing serializes to "absent at this trigger" — the same Nil
-      // the exists() check returns — instead of crashing discovery every
+                    conf: org.apache.hadoop.conf.Configuration): Seq[String] =
+    try workbooks(options, conf).map { case (_, s) =>
+      XlsxOffset.entry(s.getPath.toString, s.getModificationTime, s.getLen) }
+    catch {
+      // Also covers a path deleted mid-listing (getFileStatus → listStatus):
+      // "absent at this trigger" instead of crashing discovery every
       // trigger (review finding: reader-side ignoreMissingFiles cannot
       // cover the DRIVER-side listing). The next trigger re-lists.
       case _: java.io.FileNotFoundException => Nil
     }
-  }
 
   /** Parse one sheet of one workbook into rows of (0-based column index,
     * string value). Streams the zip entries once, keeping only the shared

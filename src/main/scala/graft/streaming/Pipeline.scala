@@ -22,23 +22,6 @@ import graft.util.{StageMemo, TempRoots}
   */
 object Pipeline {
 
-  /** S2: streaming file source over a watched directory. Spark's file source
-    * discovers *new* files; the reference's modified-file re-processing is
-    * recovered by the T1 content-hash dedup downstream (the actual semantic
-    * contract — each distinct row version flows through exactly once). */
-  def watchedDirSource(spark: SparkSession, dir: String, format: String = "parquet"): DataFrame = {
-    var reader = spark.readStream
-      .schema(Schemas.enrollment)
-      .option("maxFilesPerTrigger", 16)
-      .format(format)
-    // Same header posture as Tabular.scanStream: without it the csv reader
-    // parses each watched file's HEADER LINE as a data row — one phantom
-    // record per file, with the key column literally "F_MASV" (review
-    // finding).
-    if (format == "csv") reader = reader.option("header", "true")
-    reader.load(dir)
-  }
-
   /** T1 (streaming): content-hash dedup with watermark-bounded state. The
     * hash is [[Ingest.rowHash]] — the ONE canonical content-hash
     * definition; an inline copy here would let the batch and streaming

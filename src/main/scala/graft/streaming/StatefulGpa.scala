@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.functions.GradeScale
 import graft.query.Progress
@@ -28,7 +28,7 @@ object StatefulGpa {
   case class GpaUpdate(masv: String, dtbctl: Double, credits: Double, n: Long)
 
   /** A student's state after a batch, as the stateful operator emits it;
-    * [[withGpa]] turns it into a [[GpaUpdate]]. */
+    * [[runningGpa]] turns it into a [[GpaUpdate]]. */
   case class GpaTotals(masv: String, points: Double, credits: Double, n: Long)
 
   /** Rows already reduced to per-student per-batch partials. (Public: the
@@ -44,7 +44,9 @@ object StatefulGpa {
         col("F_DVHT").as("cr"))
   }
 
-  /** The stateful leg. Input: any (streaming) frame with masv/pts/cr. */
+  /** The stateful leg. Input: any (streaming) frame with masv/pts/cr.
+    * Each emitted state's cumulative GPA is the report's ratio,
+    * [[Progress.gpa]]. */
   def runningGpa(partials: DataFrame): Dataset[GpaUpdate] = {
     val spark = partials.sparkSession
     import spark.implicits._
@@ -53,68 +55,18 @@ object StatefulGpa {
       .groupByKey(_.masv)
       .mapGroupsWithState[GpaState, GpaTotals](GroupStateTimeout.NoTimeout) {
         (masv, rows, state: GroupState[GpaState]) =>
-          val next = step(state.getOption, rows)
+          val next = rows.foldLeft(state.getOption.getOrElse(GpaState(0.0, 0.0, 0L))) {
+            (s, r) => GpaState(s.points + r.pts, s.credits + r.cr, s.n + r.n)
+          }
           state.update(next)
           GpaTotals(masv, next.points, next.credits, next.n)
       }
-      .transform(withGpa)
-  }
-
-  /** The fold both stateful legs share: a batch's partials onto the state. */
-  private def step(prev: Option[GpaState], rows: Iterator[Partial]): GpaState =
-    rows.foldLeft(prev.getOrElse(GpaState(0.0, 0.0, 0L))) { (s, r) =>
-      GpaState(s.points + r.pts, s.credits + r.cr, s.n + r.n)
-    }
-
-  /** The cumulative GPA of each emitted state: the report's ratio,
-    * [[Progress.gpa]]. */
-  private def withGpa(totals: Dataset[GpaTotals]): Dataset[GpaUpdate] = {
-    import totals.sparkSession.implicits._
-    totals.select(col("masv"), Progress.gpa(col("points"), col("credits")).as("dtbctl"),
-      col("credits"), col("n")).as[GpaUpdate]
+      .select(col("masv"), Progress.gpa(col("points"), col("credits")).as("dtbctl"),
+        col("credits"), col("n")).as[GpaUpdate]
   }
 
   /** Convenience: full streaming leg from raw enrollments; `Update` output
     * mode (one row per touched student per batch). */
   def stream(enrollments: DataFrame, excludedSemester: Int = 20251): Dataset[GpaUpdate] =
     runningGpa(eligiblePartials(enrollments, excludedSemester))
-
-  val outputMode: OutputMode = OutputMode.Update()
-
-  /** The same accumulator on the `transformWithState` arbitrary-state API
-    * (Spark 4's successor to mapGroupsWithState): typed named state via a
-    * [[org.apache.spark.sql.streaming.StatefulProcessor]], per-state TTL,
-    * timers, and composable multi-state — the operator the old API grows
-    * into on a shared cluster. Requires the RocksDB state store provider
-    * (changelog-checkpointed, memory-bounded — the 100 TB state backend;
-    * the HDFS-backed default keeps every key on-heap). Values are
-    * IDENTICAL to [[runningGpa]] — same partials, same fold. */
-  class GpaProcessor extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, Partial, GpaTotals] {
-    import org.apache.spark.sql.streaming.{TTLConfig, TimeMode, ValueState}
-    @transient private var st: ValueState[GpaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[GpaState]("gpa",
-        org.apache.spark.sql.Encoders.product[GpaState], TTLConfig.NONE)
-
-    override def handleInputRows(masv: String, rows: Iterator[Partial],
-        tv: org.apache.spark.sql.streaming.TimerValues): Iterator[GpaTotals] = {
-      val next = step(Option.when(st.exists())(st.get()), rows)
-      st.update(next)
-      Iterator.single(GpaTotals(masv, next.points, next.credits, next.n))
-    }
-  }
-
-  /** [[runningGpa]] on transformWithState. */
-  def runningGpaV2(partials: DataFrame): Dataset[GpaUpdate] = {
-    import org.apache.spark.sql.streaming.TimeMode
-    val spark = partials.sparkSession
-    import spark.implicits._
-    partials.select(col("masv"), col("pts"), col("cr"), lit(1L).as("n"))
-      .as[Partial]
-      .groupByKey(_.masv)
-      .transformWithState(new GpaProcessor, TimeMode.None(), OutputMode.Update())
-      .transform(withGpa)
-  }
 }

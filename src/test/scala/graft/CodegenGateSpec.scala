@@ -23,19 +23,10 @@ class CodegenGateSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def withStrictCodegen[A](body: => A): A = {
-    val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
-    val prevFactory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try body
-    finally {
-      prevFallback.fold(spark.conf.unset("spark.sql.codegen.fallback"))(
-        spark.conf.set("spark.sql.codegen.fallback", _))
-      prevFactory.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
-        spark.conf.set("spark.sql.codegen.factoryMode", _))
-    }
-  }
+  private def withStrictCodegen[A](body: => A): A =
+    graft.streaming.Replay.withConfs(spark, Map(
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))(body)
 
   test("WordShingles compiles under strict codegen and matches interpreted eval") {
     withStrictCodegen {

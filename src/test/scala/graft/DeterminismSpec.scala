@@ -46,16 +46,6 @@ class DeterminismSpec extends SparkSpec {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  private def withConfs(confs: (String, String)*)(body: => String): String = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   // The streaming replays run fixed micro-batch machinery (file staging +
   // checkpoint dirs) whose cross-batch cuts are pinned by StreamingSpec;
   // re-running each twice here would double multi-second fixtures for no
@@ -87,10 +77,10 @@ class DeterminismSpec extends SparkSpec {
       // regime B: different shuffle fan-out AND tiny scan splits — float
       // sums meet their operands in a different order in both the map
       // and the reduce side
-      val b = withConfs(
+      val b = graft.streaming.Replay.withConfs(spark, Map(
         "spark.sql.shuffle.partitions" -> "13",
         "spark.sql.files.maxPartitionBytes" -> (256 * 1024).toString,
-        "spark.sql.files.openCostInBytes" -> "0") {
+        "spark.sql.files.openCostInBytes" -> "0")) {
         canonicalHash(q(spark, sf))
       }
       if (a == b) None else Some(name)

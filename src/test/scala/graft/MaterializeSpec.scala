@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Replay
+
 /** The materialization seam: identical results in every mode, lineage
   * actually truncated, reliable mode really writes to the checkpoint dir,
   * and a representative iterative operator (connected components) works
@@ -9,11 +11,8 @@ import org.apache.spark.sql.functions._
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withMode[A](mode: String)(body: => A): A = {
-    val prev = spark.conf.get(Materialize.ModeKey, "local")
-    spark.conf.set(Materialize.ModeKey, mode)
-    try body finally spark.conf.set(Materialize.ModeKey, prev)
-  }
+  private def withMode[A](mode: String)(body: => A): A =
+    Replay.withConfs(spark, Map(Materialize.ModeKey -> mode))(body)
 
   test("pin returns identical rows in local, reliable, and none modes") {
     val df = (1L to 1000L).map(i => (i, s"v$i", i % 7)).toDF("id", "s", "k")
@@ -21,10 +20,11 @@ class MaterializeSpec extends SparkSpec {
     val expect = df.orderBy("k").collect().toSeq
 
     val ckpt = java.nio.file.Files.createTempDirectory("mat_ckpt").toString
-    spark.conf.set(Materialize.DirKey, ckpt)
-    for (mode <- Seq("local", "reliable", "none")) withMode(mode) {
-      val got = Materialize.pin(df).orderBy("k").collect().toSeq
-      assert(got == expect, s"mode=$mode")
+    Replay.withConfs(spark, Map(Materialize.DirKey -> ckpt)) {
+      for (mode <- Seq("local", "reliable", "none")) withMode(mode) {
+        val got = Materialize.pin(df).orderBy("k").collect().toSeq
+        assert(got == expect, s"mode=$mode")
+      }
     }
     // reliable mode left real checkpoint data on disk
     def depth(f: java.io.File): Iterator[java.io.File] =

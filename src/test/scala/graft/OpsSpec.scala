@@ -462,39 +462,11 @@ class OpsSpec extends SparkSpec {
       .select("a", "b").as[(Long, Long)].collect().toSet
     assert(pairs.forall(p => p._1 != 9L && p._2 != 9L),
       s"zero vector paired as near-dup: $pairs")
-    // the bucketed production shape excludes the zero vector the same way
-    val bucketed = Similarity.embeddingNearDupBucketed(all, threshold = 0.5)
-      .select("a", "b").as[(Long, Long)].collect().toSet
-    assert(bucketed.forall(p => p._1 != 9L && p._2 != 9L))
-  }
-
-  test("bucketed embedding near-dup ⊆ label-only ground truth, same cosines") {
-    // 40 vectors over 4 labels; identical-vector pairs (cos = 1, same SRP
-    // bucket by construction) MUST survive the bucket blocking — the
-    // bucketed shape may only lose pairs at bucket boundaries, never
-    // invent pairs or change a surfaced pair's cosine.
-    val vecs = (0 until 40).map { i =>
-      val base = i % 20 // i and i+20 are identical twins
-      (i.toLong, Array.tabulate(64)(d => math.sin(base * 131 + d * 7).toFloat), i % 4)
-    }.toDF("vec_id", "embedding", "label")
-    val truth = Similarity.embeddingNearDup(vecs, threshold = 0.4)
-      .select("a", "b", "cos").as[(Long, Long, Double)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    val got = Similarity.embeddingNearDupBucketed(vecs, threshold = 0.4)
-      .select("a", "b", "cos").as[(Long, Long, Double)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    assert(got.keySet.subsetOf(truth.keySet),
-      s"bucketed invented pairs: ${got.keySet -- truth.keySet}")
-    got.foreach { case (k, c) => assert(c == truth(k), s"cos drifted at $k") }
-    // twins share every plane sign (identical projections) and, since
-    // 20 % 4 = 0, the label
-    val twins = (0 until 20).map(i => (i.toLong, (i + 20).toLong)).toSet
-    assert(twins.subsetOf(got.keySet), s"missing twins: ${twins -- got.keySet}")
   }
 
   test("celled embedding near-dup ⊆ label-only ground truth, twins survive") {
     // the r18 registered blocking (label ∧ derived-k k-means cell) obeys
-    // the same containment contract as the SRP form: it may only lose
+    // the containment contract: it may only lose
     // pairs at cell boundaries, never invent pairs or change a surfaced
     // pair's cosine; identical twins (cos = 1) assign to the same cell by
     // construction (identical cosine to every centroid, same tie-break)

@@ -1540,6 +1540,7 @@ class PropertySpec extends SparkSpec {
 
   test("sessionize settles to the batch gap-fold under any ordered batch split") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import graft.streaming.{Replay, SessionTimeout}
     val base = java.sql.Timestamp.valueOf("2024-01-01 10:00:00").getTime
     def t(minutes: Long) = new java.sql.Timestamp(base + minutes * 60000L)
     val ev = for { u <- Gen.choose(0L, 2L); m <- Gen.choose(0, 40) } yield (u, m)
@@ -1550,26 +1551,30 @@ class PropertySpec extends SparkSpec {
     } yield (events, cuts, gapMin)
     check("sess-split", 4)(Prop.forAll(gen) { case (events, cuts, gapMin) =>
       val name = s"psess${qn.incrementAndGet()}"
-      val in = MemoryStream[(java.sql.Timestamp, Long)]
-      val q = graft.streaming.Sessionize.sessions(
-          in.toDF().toDF("ts", "user_id"), gapMs = gapMin * 60000L,
-          watermark = "10 minutes")
-        .toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-      // globally ts-ordered delivery, random contiguous boundaries (the
-      // in-order file-source contract); two escalating far-future sentinel
-      // events push the watermark past every real session's end + gap so
-      // the event-time timers all fire before we read.
-      val ordered = events.sortBy(_._2).map { case (u, m) => (t(m.toLong), u) }
-      batched(ordered, cuts).foreach { b => in.addData(b); q.processAllAvailable() }
-      in.addData((t(40L + gapMin + 30), 99L)); q.processAllAvailable()
-      in.addData((t(40L + gapMin + 60), 99L)); q.processAllAvailable()
-      // the two sentinels close a session for user 99 themselves (the
-      // second exceeds the gap) — exclude the flush user from the read
-      val got = settle(q, name)(spark.table(name)
-        .filter(col("user_id") =!= 99L)
-        .as[(Long, java.sql.Timestamp, java.sql.Timestamp, Long)]
-        .collect().toSet)
+      val in = MemoryStream[(java.sql.Timestamp, Long, Double)]
+      // transformWithState needs the RocksDB state store
+      val got = Replay.withConfs(spark, Map(Replay.StateProvider -> Replay.RocksDbProvider)) {
+        val q = SessionTimeout.summaries(
+            in.toDF().toDF("ts", "user_id", "value"), gapMs = gapMin * 60000L,
+            watermark = "10 minutes")
+          .toDF().writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        // globally ts-ordered delivery, random contiguous boundaries (the
+        // in-order file-source contract); two escalating far-future sentinel
+        // events push the watermark past every real session's end + gap so
+        // the event-time timers all fire before we read.
+        val ordered = events.sortBy(_._2).map { case (u, m) => (t(m.toLong), u, 1.0) }
+        batched(ordered, cuts).foreach { b => in.addData(b); q.processAllAvailable() }
+        in.addData((t(40L + gapMin + 30), 99L, 1.0)); q.processAllAvailable()
+        in.addData((t(40L + gapMin + 60), 99L, 1.0)); q.processAllAvailable()
+        // the two sentinels close a session for user 99 themselves (the
+        // second exceeds the gap) — exclude the flush user from the read
+        settle(q, name)(spark.table(name)
+          .filter(col("user_id") =!= 99L)
+          .select("user_id", "start_ms", "end_ms", "n_events")
+          .as[(Long, Long, Long, Long)]
+          .collect().toSet)
+      }
       val want = events.groupBy(_._1).flatMap { case (u, es) =>
         val ts = es.map(_._2.toLong).sorted
         ts.tail.foldLeft(List((ts.head, ts.head, 1L))) {
@@ -1577,7 +1582,7 @@ class PropertySpec extends SparkSpec {
             if (x - e <= gapMin) (s, math.max(e, x), n + 1) :: done
             else (x, x, 1L) :: (s, e, n) :: done
           case (Nil, _) => Nil // unreachable: seed is nonempty
-        }.map { case (s, e, n) => (u, t(s), t(e), n) }
+        }.map { case (s, e, n) => (u, t(s).getTime, t(e).getTime, n) }
       }.toSet
       got == want
     })

@@ -199,31 +199,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("transformWithState running GPA matches the mapGroupsWithState leg") {
-    import graft.streaming.StatefulGpa
-    // transformWithState requires the RocksDB provider (the scale backend)
-    withRocksDb {
-      val input = MemoryStream[(String, String, Double, Double, Int)]
-      val df = input.toDF().toDF("F_MASV", "F_TENMHVN", "F_DIEM2", "F_DVHT", "NHHK")
-      val out = StatefulGpa.runningGpaV2(
-        StatefulGpa.eligiblePartials(df, excludedSemester = 20251))
-      val q = out.toDF().writeStream.format("memory").queryName("gpa2_out")
-        .outputMode("update").start()
-      try {
-        input.addData(("S1", "Math", 9.5, 3.0, 20231), ("S1", "Lit", 6.0, 2.0, 20231))
-        q.processAllAvailable()
-        input.addData(("S1", "PE*", 9.0, 1.0, 20232), ("S1", "Chem", 3.0, 4.0, 20232),
-          ("S1", "Phys", 8.0, 5.0, 20232))
-        q.processAllAvailable()
-        val rows = spark.table("gpa2_out").collect()
-          .map(r => (r.getAs[String]("masv"), r.getAs[Double]("dtbctl"),
-            r.getAs[Double]("credits"))).toSet
-        // identical numbers to the mapGroupsWithState spec above
-        assert(rows == Set(("S1", 3.2, 5.0), ("S1", 3.35, 10.0)))
-      } finally q.stop()
-    }
-  }
-
   test("event-time timers close sessions on inactivity and reopen on new data") {
     import graft.streaming.SessionTimeout
     withRocksDb {
@@ -674,58 +649,35 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("flatMapGroupsWithState sessions close on in-batch gap and on event-time timeout") {
-    import graft.streaming.Sessionize
-    val input = MemoryStream[(Long, Timestamp)]
-    val out = Sessionize.sessions(
-      input.toDF().toDF("user_id", "ts"), gapMs = 10L * 60 * 1000, watermark = "5 minutes")
-    val q = out.toDF().writeStream.format("memory").queryName("sess_state_out")
-      .outputMode("append").start()
-    try {
-      // session 1: two events 5 min apart
-      input.addData((1L, ts("2024-01-01 10:00:00")), (1L, ts("2024-01-01 10:05:00")))
-      q.processAllAvailable()
-      // 11:00 event: watermark -> 10:55 > 10:15 timeout; session 1 emitted by
-      // timeout, 11:00 starts session 2
-      input.addData((1L, ts("2024-01-01 11:00:00")))
-      q.processAllAvailable()
-      // same batch contains a >gap jump: session 2 closes in-batch, 12:00 opens s3
-      input.addData((1L, ts("2024-01-01 11:02:00")), (1L, ts("2024-01-01 12:00:00")))
-      q.processAllAvailable()
-      val rows = spark.table("sess_state_out")
-        .select("session_start", "n_events").as[(Timestamp, Long)].collect().toMap
-      assert(rows(ts("2024-01-01 10:00:00")) == 2L, s"got $rows") // timeout-closed
-      assert(rows(ts("2024-01-01 11:00:00")) == 2L, s"got $rows") // in-batch closed
-    } finally q.stop()
-  }
-
   test("sessionize: a late cross-batch event extends the open session BACKWARD") {
-    import graft.streaming.Sessionize
-    val input = MemoryStream[(Long, Timestamp)]
-    val out = Sessionize.sessions(
-      input.toDF().toDF("user_id", "ts"), gapMs = 10L * 60 * 1000, watermark = "30 minutes")
-    val q = out.toDF().writeStream.format("memory").queryName("sess_late_out")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, ts("2024-01-01 10:05:00")))
-      q.processAllAvailable()
-      // LATE but above the watermark: merges into the open session and must
-      // extend session_start backward — the old code counted it in n_events
-      // while excluding it from the span (review finding)
-      input.addData((1L, ts("2024-01-01 10:00:00")))
-      q.processAllAvailable()
-      // close by in-batch gap so the session emits deterministically
-      input.addData((1L, ts("2024-01-01 11:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("sess_late_out")
-        .select("session_start", "session_end", "n_events")
-        .as[(Timestamp, Timestamp, Long)].collect()
-        .filter(_._3 == 2L)
-      assert(got.nonEmpty, "merged session never emitted")
-      assert(got.head._1 == ts("2024-01-01 10:00:00"),
-        s"late event missing from the span: ${got.toSeq}")
-      assert(got.head._2 == ts("2024-01-01 10:05:00"))
-    } finally q.stop()
+    import graft.streaming.SessionTimeout
+    withRocksDb {
+      val input = MemoryStream[(Timestamp, Long, Double)]
+      val out = SessionTimeout.summaries(
+        input.toDF().toDF("ts", "user_id", "value"),
+        gapMs = 10L * 60 * 1000, watermark = "30 minutes")
+      val q = out.toDF().writeStream.format("memory").queryName("sess_late_out")
+        .outputMode("append").start()
+      try {
+        input.addData((ts("2024-01-01 10:05:00"), 1L, 1.0))
+        q.processAllAvailable()
+        // LATE but above the watermark: merges into the open session and must
+        // extend its start backward, not only its count
+        input.addData((ts("2024-01-01 10:00:00"), 1L, 1.0))
+        q.processAllAvailable()
+        // close by in-batch gap so the session emits deterministically
+        input.addData((ts("2024-01-01 11:00:00"), 1L, 1.0))
+        q.processAllAvailable()
+        val got = spark.table("sess_late_out")
+          .select("start_ms", "end_ms", "n_events")
+          .as[(Long, Long, Long)].collect()
+          .filter(_._3 == 2L)
+        assert(got.nonEmpty, "merged session never emitted")
+        assert(got.head._1 == ts("2024-01-01 10:00:00").getTime,
+          s"late event missing from the span: ${got.toSeq}")
+        assert(got.head._2 == ts("2024-01-01 10:05:00").getTime)
+      } finally q.stop()
+    }
   }
 
   test("consumer transform chain runs on a stream (enrich + key + route)") {
@@ -845,29 +797,6 @@ class StreamingSpec extends SparkSpec {
     assert(rows.head._2 == """{"doc_id":7,"payload":"a"}""")
     val unkeyed = Pipeline.kafkaSinkProjection(df, None)
     assert(unkeyed.columns.toSeq == Seq("value"))
-  }
-
-  test("watchedDirSource csv does not ingest header lines as data rows") {
-    // Without the header option the csv file source parses each watched
-    // file's header line as a data row — one phantom record per file with
-    // F_MASV literally "F_MASV" (review finding).
-    val dir = java.nio.file.Files.createTempDirectory("watchcsv").toString
-    val cols = graft.model.Schemas.enrollment.fieldNames
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/a.csv"),
-      cols.mkString(",") + "\n" +
-        cols.map(c => if (c == "F_MASV") "B2000001" else "x").mkString(",") + "\n")
-    val got = scala.collection.mutable.ArrayBuffer.empty[String]
-    val q = Pipeline.watchedDirSource(spark, dir, format = "csv")
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        got.synchronized { got ++= b.select("F_MASV").as[String].collect() }: Unit
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("watchcsv_ckpt").toString)
-      .start()
-    q.awaitTermination()
-    assert(got.toSeq == Seq("B2000001"), s"phantom header row? got $got")
   }
 
   /** Every merged replay at the two kill points just outside its range. */

@@ -699,4 +699,26 @@ class XlsxSpec extends SparkSpec {
       assert(e.getMessage.contains("OOXML number"), e.getMessage)
     }
   }
+
+  test("streaming: a non-positive maxFilesPerTrigger fails the query, naming the option") {
+    // As Spark's file source: a limit of 0 would admit no workbook on any
+    // trigger, and the query would idle forever with no error.
+    val d = tmpDir()
+    XlsxTestFixture.write(new java.io.File(d, "wb.xlsx").getAbsolutePath,
+      Seq(Seq("k"), Seq("v")))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.StringType)))
+    val e = intercept[Exception] {
+      val q = spark.readStream.format("xlsx").schema(schema)
+        .option("maxFilesPerTrigger", "0")
+        .load(d.getAbsolutePath)
+        .writeStream.format("noop")
+        .option("checkpointLocation", new java.io.File(d, "ckpt").getAbsolutePath)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    def chain = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => t.isInstanceOf[IllegalArgumentException] &&
+      t.getMessage.contains("maxFilesPerTrigger")), s"got $e")
+  }
 }
