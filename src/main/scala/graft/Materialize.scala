@@ -32,8 +32,9 @@ import org.apache.spark.sql.DataFrame
   *     once per JVM when a reliable-mode session lacks it. Cleanup is
   *     GC-driven (best-effort within a session); long-lived sessions should
   *     still TTL the checkpoint directory externally.
-  *   - `spark.graft.materialize.mode = none`: pass-through (no pin). For plan
-  *     debugging only — iterative callers grow unbounded lineage.
+  *
+  * Any other value fails fast. Every mode pins: callers rely on a pinned
+  * frame executing its upstream plan exactly once.
   *
   * Streaming frames are returned untouched in every mode (micro-batch
   * re-execution is governed by the streaming checkpoint, not this seam).
@@ -78,12 +79,11 @@ object Materialize {
               "lifetime — enable the cleaner flag or TTL the checkpoint dir")
         }
         df.checkpoint(eager = true)
-      case "none" => df
       case "local" => df.localCheckpoint(eager = true)
       // A typo ('relaible') on a 100 TB cluster must not silently drop the
       // fault-tolerance posture the mode was set for.
       case other => throw new IllegalArgumentException(
-        s"unknown $ModeKey: '$other' (expected local | reliable | none)")
+        s"unknown $ModeKey: '$other' (expected local | reliable)")
     }
   }
 

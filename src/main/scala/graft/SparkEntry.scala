@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.etl.{Compact, Enrich, IncrementalAgg, Ingest, Layout, Upsert}
-import graft.functions.GradeScale
+import graft.functions.{GradeScale, GradeScale4}
 import graft.model.Tables
 import graft.ops.{Dedup, Multimodal, Retrieval, Similarity, TextAnalysis}
 import graft.query.{Dashboards, EventsAdapter, Progress}
@@ -269,11 +270,9 @@ object SparkEntry {
     // ---- T16 via the native codegen Expression (same ladder; certifies the
     // custom-Expression surface in the gate)
     ("t16_grade_band_native",
-      (s, d) => {
-        graft.functions.GradeScale4.register(s)
-        ev(s, d).select(col("event_id"),
-          expr(t16NativeExprSql).as("grade4"))
-      },
+      (s, d) => ev(s, d).select(col("event_id"),
+        Bridge.column(GradeScale4(Bridge.expression(col("value") / 50.0)))
+          .as("grade4")),
       Some(s"""SELECT event_id, ${GradeScale.grade4Sql("(value/50.0)")} AS grade4
         |FROM events""".stripMargin)),
 
@@ -2554,10 +2553,9 @@ object SparkEntry {
       |FROM __li
       |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""".stripMargin
 
-  /** T16 texts that go through Spark's SQL parser. `value` is DOUBLE, so
-    * `value / 5e1` stays DOUBLE; the divisor is exponent notation per the
+  /** The T16 text that goes through Spark's SQL parser. `value` is DOUBLE,
+    * so `value / 5e1` stays DOUBLE; the divisor is exponent notation per the
     * Spark-parsed-literal rule (see [[sparkParsedSql]]). */
-  private lazy val t16NativeExprSql: String = "grade4(value / 5e1)"
   private lazy val t16ExtSql: String =
     "SELECT event_id, grade_scale(value / 5e1) AS grade4 FROM events_v"
 
@@ -2575,7 +2573,6 @@ object SparkEntry {
   private[graft] lazy val sparkParsedSql: Map[String, String] = Map(
     "sql_pricing_summary" -> pricingSummarySql,
     "gsets_agg" -> gsetsSparkSql,
-    "t16_grade_band_native" -> t16NativeExprSql,
     "t16_grade_band_ext" -> t16ExtSql)
 
   private lazy val rareTokenSql: String =

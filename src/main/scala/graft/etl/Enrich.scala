@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Consumer-side enrichment semantics (reference `con.py`, SURVEY.md §2.2
@@ -14,14 +14,21 @@ object Enrich {
   def timestampFromEpochMs(df: DataFrame, epochMsCol: String): DataFrame =
     df.withColumn("@timestamp", timestamp_millis(col(epochMsCol)))
 
+  /** The lenient numeric cast: junk -> null, and NaN -> null too.
+    * `try_cast` accepts "NaN", and Spark orders NaN above every double, so a
+    * NaN grade would pass every `>=` bar; the reference's pandas comparisons
+    * are false on NaN and its sums skip it, i.e. NaN reads as missing. */
+  private[graft] def lenientDouble(c: Column): Column =
+    nanvl(c.try_cast("double"), lit(null).cast("double"))
+
   /** T6: lenient numeric cast (`con.py:39-43`): junk -> null (the columnar
     * twin of catch-ValueError-keep-going). `auditInvalid` surfaces the rows
     * the reference merely warns about. */
   def castGrade(df: DataFrame, c: String = "F_DIEM2"): DataFrame =
-    df.withColumn(c, col(c).try_cast("double"))
+    df.withColumn(c, lenientDouble(col(c)))
 
   def auditInvalid(df: DataFrame, c: String = "F_DIEM2"): DataFrame =
-    df.filter(col(c).isNotNull && col(c).try_cast("double").isNull)
+    df.filter(col(c).isNotNull && lenientDouble(col(c)).isNull)
 
   /** T7: conditional major-specific columns (`con.py:46-52`): class prefix
     * FL -> (NNA, DIEM_NNA), DI -> (MMT, DIEM_MMT); guarded on both source

@@ -50,6 +50,20 @@ object Upsert {
       .drop("__rn")
   }
 
+  /** Existence probe for a parquet store or index: `path` exists and holds
+    * a `.parquet` file somewhere below it. */
+  private[graft] def holdsParquet(spark: SparkSession, path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.exists(p) && {
+      val it = fs.listFiles(p, true)
+      var found = false
+      while (!found && it.hasNext)
+        found = it.next().getPath.getName.endsWith(".parquet")
+      found
+    }
+  }
+
   /** Merge a batch into the keyed table at `path`: new version of a key
     * replaces the old, unseen keys append, and duplicates inside the batch
     * are arbitrated by the same window. Implemented as partition-local
@@ -97,16 +111,7 @@ object Upsert {
         // silent partition data loss the schema-drift refusal below exists
         // to prevent (review finding). A present-but-dataless dir (a
         // pre-created store root) still counts as absent.
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        val hasData = fs.exists(p) && {
-          val it = fs.listFiles(p, true)
-          var found = false
-          while (!found && it.hasNext)
-            found = it.next().getPath.getName.endsWith(".parquet")
-          found
-        }
-        if (!hasData) null
+        if (!holdsParquet(spark, path)) null
         else spark.read.option("mergeSchema", "true").parquet(path)
     }
 

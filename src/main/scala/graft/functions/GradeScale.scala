@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** 10-point-scale -> 4.0-scale grade banding (reference `app.py:39-55`, T16).
@@ -59,20 +60,16 @@ case class GradeScale4(child: Expression) extends UnaryExpression {
 }
 
 object GradeScale4 {
-  /** Branchless-ish ladder shared by interpreted + codegen paths. */
-  def eval(d: Double): Double =
-    if (d >= 9.0) 4.0
-    else if (d >= 8.0) 3.5
-    else if (d >= 7.0) 3.0
-    else if (d >= 6.5) 2.5
-    else if (d >= 5.5) 2.0
-    else if (d >= 5.0) 1.5
-    else if (d >= 4.0) 1.0
-    else 0.0
+  private val lows: Array[Double] = GradeScale.bands.map(_._1).toArray
+  private val grades: Array[Double] = GradeScale.bands.map(_._2).toArray
 
-  /** Register as a SQL function so `expr("grade4(x)")` works without relying
-    * on non-public Column constructors. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "grade4", exprs => GradeScale4(exprs.head), "scala_udf")
+  /** The [[GradeScale.bands]] ladder, shared by the interpreted and codegen
+    * paths. Compares in Spark's SQL double ordering (NaN above every
+    * double), as the when-chain's `>=` does, so both forms band every
+    * input alike. */
+  def eval(d: Double): Double = {
+    var i = 0
+    while (i < lows.length && SQLOrderingUtil.compareDoubles(d, lows(i)) < 0) i += 1
+    if (i < lows.length) grades(i) else 0.0
+  }
 }

@@ -58,9 +58,7 @@ object IntervalJoin {
     // source (sampling, unpinned limit) cannot make the clamp bounds
     // disagree with the rows actually joined — without the pin, bounds from
     // run #1 could silently drop run #2's range-edge matches. Cost: one
-    // materialization of the points frame (write+read in reliable mode);
-    // under spark.graft.materialize.mode=none the pin is a pass-through and
-    // the deterministic-source assumption is the caller's to uphold.
+    // materialization of the points frame (write+read in reliable mode).
     val p0 = graft.Materialize.pin(
       points.select((Seq(col(keyCol).as("__k"), col(tCol).as("__t")) ++
         points.columns.map(c => col(c).as(s"p_$c"))): _*))

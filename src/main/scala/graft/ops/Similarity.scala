@@ -296,8 +296,7 @@ object Similarity {
       l2norm(col("cemb")).as("cnrm")))
     // Pinned: both the candidate join and the fold-back join consume base —
     // unpinned, the source scan + norm fold would run twice per call (and
-    // per Lloyd iteration in kmeansCentroids). Same Materialize.mode=none
-    // pass-through caveat as every pin site.
+    // per Lloyd iteration in kmeansCentroids).
     val b = graft.Materialize.pin(base)
     // The argmax runs as [[graft.functions.LexArgExtreme]] — max_by with the
     // (cos, -cell) tie rule carried in PRIMITIVE buffer slots. The previous

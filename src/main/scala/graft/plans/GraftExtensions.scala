@@ -16,9 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
   * (the [[graft.Verify]] / [[graft.Bench]] entry points set it by default).
   * This is the supported extension seam for a shared cluster: injected
   * builders are part of every session derived from the config, survive
-  * `newSession()`, and need no per-session imperative registration (the
-  * [[graft.functions.GradeScale4.register]] temp-function path remains for
-  * ad-hoc single-session use).
+  * `newSession()`, and need no per-session imperative registration.
   *
   * All injected functions resolve to the SAME codegen'd expressions the
   * DataFrame operators use — one implementation, two surfaces.

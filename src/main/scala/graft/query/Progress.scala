@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.etl.Enrich.lenientDouble
 import graft.functions.GradeScale
 
 /** The flagship analytical query: per-student degree progress + cumulative
@@ -71,10 +72,10 @@ object Progress {
       .filter(col("khoa").isNotNull)
       .withColumn("khoa", coalesce(col("khoa"), lit(0)))
 
-    // T13: query-side coercing casts (app.py:124-125).
+    // T13: query-side coercing casts (app.py:124-125), NaN read as missing.
     val typed = withKhoa
-      .withColumn("F_DIEM2", col("F_DIEM2").try_cast("double"))
-      .withColumn("F_DVHT", col("F_DVHT").try_cast("double"))
+      .withColumn("F_DIEM2", lenientDouble(col("F_DIEM2")))
+      .withColumn("F_DVHT", lenientDouble(col("F_DVHT")))
 
     val eligible = gpaEligible(p.excludedSemester)
 
@@ -145,14 +146,14 @@ object Progress {
     * One shuffle on the student key; metrics-sized output. */
   def creditsAudit(enrollment: DataFrame): DataFrame = {
     val typed = enrollment
-      .withColumn("F_DIEM2", col("F_DIEM2").try_cast("double"))
-      .withColumn("F_DVHT", col("F_DVHT").try_cast("double"))
+      .withColumn("F_DIEM2", lenientDouble(col("F_DIEM2")))
+      .withColumn("F_DVHT", lenientDouble(col("F_DVHT")))
       // F_TCDTTL typed like the others BEFORE the max_by pick: delta below
       // is then double − double — a junk registrar value audits as a null
       // delta under the same lenient-cast posture, instead of relying on
       // implicit string−double coercion (silent null in legacy mode, a
       // throw under ANSI) (review finding).
-      .withColumn("F_TCDTTL", col("F_TCDTTL").try_cast("double"))
+      .withColumn("F_TCDTTL", lenientDouble(col("F_TCDTTL")))
     typed.groupBy("F_MASV").agg(
       max_by(col("F_TCDTTL"), struct(col("NHHK"), col("F_MAMH")))
         .as("registrar_credits"),

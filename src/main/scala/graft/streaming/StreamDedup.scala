@@ -73,17 +73,11 @@ object StreamDedup {
     // Existence by explicit probe, not by swallowing AnalysisException: an
     // index that EXISTS but fails to read must stay loud — mapping it to
     // "no index yet" would admit the whole batch with zero dedup and
-    // append on top of the broken index (review finding; the same fix as
+    // append on top of the broken index (review finding; the same probe as
     // Upsert.mergeBatch's bootstrap).
+    val hasIndex = graft.etl.Upsert.holdsParquet(spark, indexPath)
     val p = new org.apache.hadoop.fs.Path(indexPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val hasIndex = fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(".parquet")
-      found
-    }
     // Index layout migration (review finding): an index written by the
     // pre-idempotence flat-append code has bare .parquet files at the top
     // level — no batch=<id> partition dirs — and a mixed tree (legacy files

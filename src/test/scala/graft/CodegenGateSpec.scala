@@ -49,30 +49,17 @@ class CodegenGateSpec extends SparkSpec {
 
   test("GradeScale4 compiles under strict codegen and matches the when-chain") {
     withStrictCodegen {
-      val grades = Seq(9.5, 9.0, 8.9, 8.0, 7.0, 6.5, 5.5, 5.0, 4.0, 3.9, 0.0)
+      // NaN sorts above every double in Spark SQL, so the chain bands it
+      // 4.0; the native ladder must compare the same way
+      val grades = Seq(9.5, 9.0, 8.9, 8.0, 7.0, 6.5, 5.5, 5.0, 4.0, 3.9, 0.0,
+        Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity).map(Option(_)) :+ None
       val df = grades.toDF("g")
       val out = df.select(
         Bridge.column(graft.functions.GradeScale4(Bridge.expression(col("g")))).as("native"),
         graft.functions.GradeScale.grade4(col("g")).as("chain")
       ).collect()
-      out.foreach(r => assert(r.getDouble(0) == r.getDouble(1), s"mismatch: $r"))
-    }
-  }
-
-  test("LexTopK stays on HashAggregate (not Object/Sort) under strict codegen") {
-    withStrictCodegen {
-      // the operator's whole reason to exist is the flat-primitive buffer:
-      // a struct/array buffer slot would demote the plan to
-      // ObjectHashAggregate/SortAggregate exactly like the max_by cliff
-      val df = (0 until 100).map(i => ((i % 5).toLong, i.toLong, (i * 37 % 11).toDouble))
-        .toDF("g", "id", "v").repartition(4)
-      val agg = df.groupBy("g").agg(
-        graft.functions.LexTopK.topKByLex(col("id"), col("v"), -col("id"), 3).as("t"))
-      val plan = agg.queryExecution.executedPlan.toString
-      assert(plan.contains("HashAggregate"), plan)
-      assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"), plan)
-      val rows = agg.collect()
-      assert(rows.length == 5 && rows.forall(_.getSeq[Any](1).size == 3))
+      assert(out.length == grades.length)
+      out.foreach(r => assert(r.get(0) == r.get(1), s"mismatch: $r"))
     }
   }
 

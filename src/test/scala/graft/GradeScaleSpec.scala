@@ -36,10 +36,4 @@ class GradeScaleSpec extends SparkSpec {
       if (a <= b) assert(ga <= gb) else assert(ga >= gb)
     }
   }
-
-  test("registered SQL function grade4 works via codegen path") {
-    GradeScale4.register(spark)
-    val got = spark.sql("SELECT grade4(CAST(8.5 AS DOUBLE))").collect().head.getDouble(0)
-    assert(got == 3.5)
-  }
 }

@@ -144,6 +144,37 @@ class ProgressSpec extends SparkSpec {
     assert(stateful == report, s"stateful $stateful vs report $report")
   }
 
+  test("a NaN grade or credit cell reads as missing: no credits, no points, flagged by the audit") {
+    import graft.etl.Enrich
+    import graft.model.Schemas
+    // Workbook cells arrive as text and are typed to the enrollment schema
+    // (a "NaN" credit cell becomes a NaN double). app.py's comparisons are
+    // false on NaN and its sums skip NaN credits, so B2100020 earns nothing:
+    // two NaN grades, a passing grade with a NaN credit, and a failed course.
+    val cells = Seq(
+      Seq("2024-11-01 00:00:00", "B2100020", "C1", "Toán", "DI01", "47", "20231", "NaN", "3", "12"),
+      Seq("2024-11-01 00:00:00", "B2100020", "C2", "Văn", "DI01", "47", "20231", "nan", "3", "12"),
+      Seq("2024-11-01 00:00:00", "B2100020", "C3", "Lý", "DI01", "47", "20232", "8.5", "NaN", "12"),
+      Seq("2024-11-01 00:00:00", "B2100020", "C4", "Hóa", "DI01", "47", "20232", "3.0", "3", "12"))
+    val raw = spark.createDataFrame(
+      spark.sparkContext.parallelize(cells.map(org.apache.spark.sql.Row.fromSeq)),
+      org.apache.spark.sql.types.StructType(Schemas.enrollment.fields.map(f =>
+        f.copy(dataType = org.apache.spark.sql.types.StringType))))
+      .select(Schemas.enrollment.fields.toIndexedSeq.map(f =>
+        col(s"`${f.name}`").cast(f.dataType).as(f.name)): _*)
+    val flagged = Enrich.auditInvalid(raw).select("F_MAMH").as[String].collect().toSet
+    assert(flagged == Set("C1", "C2"), s"flagged $flagged")
+    val enriched = Enrich.consumerPipeline(raw)
+    assert(enriched.count() == 4)
+    val r = Progress.report(spark, enriched).collect()
+    assert(r.length == 1)
+    assert(r.head.getAs[Double]("credits_earned") == 0.0, r.head)
+    assert(r.head.getAs[Double]("total_points") == 0.0, r.head)
+    assert(r.head.getAs[Double]("dtbctl") == 0.0, r.head)
+    val audit = Progress.creditsAudit(enriched).select("computed_credits").as[Double].collect()
+    assert(audit.toSeq == Seq(0.0), s"audit ${audit.toSeq}")
+  }
+
   test("transcript is the app.py table: filtered, projected, sorted") {
     val t = Progress.transcript(rows, "B2100001").collect()
     assert(t.length == 5)
