@@ -51,7 +51,8 @@ object Explain {
   /** `runMain graft.Explain <sfDir> --sweep [query ...]` — one line per
     * named query (every REGISTERED query when none is named) summarizing its
     * formatted physical plan (exchange count, join strategies, scans
-    * with/without PushedFilters, cartesian/BNLJ flags), so "all ~150
+    * with/without PushedFilters, cartesian/BNLJ flags, Sort nodes, and
+    * sort-path aggregates: SortAggregate + ObjectHashAggregate), so "all ~150
     * untouched plans are clean" is a committed, diffable artifact instead of
     * a /tmp claim (r19 verdict #6).
     * Streaming replay rungs execute at build time — run at a small sf. */
@@ -72,7 +73,9 @@ object Explain {
           f"scans=${nodes.count(_.startsWith("Scan"))} " +
           f"pushed=${pushed.count(_.nonEmpty)}/${pushed.size} " +
           f"cartesian=${nodes.count(_ == "CartesianProduct")} " +
-          f"bnlj=${nodes.count(_ == "BroadcastNestedLoopJoin")}"
+          f"bnlj=${nodes.count(_ == "BroadcastNestedLoopJoin")} " +
+          f"sorts=${nodes.count(_ == "Sort")} " +
+          f"sortagg=${nodes.count(n => n == "SortAggregate" || n == "ObjectHashAggregate")}"
       } catch { case e: Throwable => s"$n ERROR ${e.getClass.getSimpleName}: ${e.getMessage.take(100)}" }
       println(s"[sweep] $line")
     }

@@ -25,9 +25,13 @@ import org.apache.spark.sql.types.{BooleanType, DataType}
   * compare with Spark's SQL ordering (NaN greatest; -0.0 TIES with 0.0 —
   * nanSafeCompareDoubles short-circuits on ==, and UnsafeRow normalizes
   * -0.0 anyway), matching what the struct ordering used. Ties beyond (o1,
-  * o2) don't exist for callers that make o2 a total tiebreaker (the repo
-  * call sites pass ids). Buffer stays flat-mutable only for fixed-size
-  * value types (numeric/boolean/timestamp); var-length values (strings)
+  * o2) don't exist for callers that make o2 a total tiebreaker (ids, as in
+  * assignCells and the PQ encode). A caller may also pass the value itself
+  * as o2 (`maxByLex(v, o1, v)`, `Progress`'s A3 pick): rows tied on both
+  * keys then carry the same value, so the pick is deterministic, and a null
+  * value never qualifies, so it loses to any present one. Buffer stays
+  * flat-mutable only for fixed-size value types (numeric/boolean/
+  * timestamp); var-length values (strings)
   * would re-demote the buffer — keep those on the struct form. */
 case class LexArgExtreme(valueExpr: Expression, ord1: Expression,
                          ord2: Expression, isMin: Boolean)

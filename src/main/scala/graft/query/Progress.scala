@@ -3,7 +3,7 @@ package graft.query
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.Enrich.lenientDouble
-import graft.functions.GradeScale
+import graft.functions.{GradeScale, LexArgExtreme}
 
 /** The flagship analytical query: per-student degree progress + cumulative
   * GPA (ĐTBCTL) on the 4.0 scale — reference `app.py:58-191` (SURVEY.md §3.3,
@@ -55,27 +55,40 @@ object Progress {
   def gpa(points: Column, credits: Column): Column =
     when(credits > 0, points / credits).otherwise(0.0)
 
+  /** A3: the registrar's cumulative credits (`F_TCDTTL`, app.py:108). The
+    * reference takes `iloc[0]` of an unordered hit list; we pin the figure of
+    * the latest semester (SURVEY.md §7.4). A null semester still counts,
+    * ranked below every real one. Within a semester the largest figure wins:
+    * a cumulative counter posts its largest figure last, and the pick then
+    * depends only on the (semester, figure) pairs, never on row order or
+    * course-code spelling. The figure is read like the other numeric fields,
+    * so a junk or NaN figure is missing and never beats a present one. Both
+    * ordering keys are primitive, so the aggregate stays on codegen
+    * HashAggregate (a struct ordering would plan SortAggregate). */
+  private def registrarCredits: Column = {
+    val v = lenientDouble(col("F_TCDTTL"))
+    LexArgExtreme.maxByLex(v, coalesce(col("NHHK"), lit(Int.MinValue)), v)
+  }
+
   /** All-students progress report over an enriched enrollment table.
     *
-    * Input columns: F_MASV, F_MAMH, F_TENMHVN, F_TENLOP, F_KHOAHOC, NHHK,
-    * F_DIEM2 (double), F_DVHT, F_TCDTTL.
+    * Reads columns: F_MASV, F_TENMHVN, F_TENLOP, NHHK, F_DIEM2, F_DVHT,
+    * F_TCDTTL.
     */
   def report(spark: SparkSession, enrollment: DataFrame,
              params: Params = Params()): DataFrame = {
     val p = params
 
-    // T18: cohort from student-id prefix (app.py:86); app.py drops
-    // unknown prefixes, and so does the not-null filter. The coalesce never
-    // fires after it: it only types khoa non-null in the output schema.
-    val withKhoa = enrollment
-      .withColumn("khoa", cohort(substring(col("F_MASV"), 1, 3)))
+    // T18: cohort from student-id prefix (app.py:86); app.py drops unknown
+    // prefixes, and so does the not-null filter. T13: query-side coercing
+    // casts (app.py:124-125), NaN read as missing.
+    val typed = enrollment.select(col("F_MASV"),
+      cohort(substring(col("F_MASV"), 1, 3)).as("khoa"),
+      col("F_TENMHVN"), col("F_TENLOP"), col("NHHK"),
+      lenientDouble(col("F_DIEM2")).as("F_DIEM2"),
+      lenientDouble(col("F_DVHT")).as("F_DVHT"),
+      col("F_TCDTTL"))
       .filter(col("khoa").isNotNull)
-      .withColumn("khoa", coalesce(col("khoa"), lit(0)))
-
-    // T13: query-side coercing casts (app.py:124-125), NaN read as missing.
-    val typed = withKhoa
-      .withColumn("F_DIEM2", lenientDouble(col("F_DIEM2")))
-      .withColumn("F_DVHT", lenientDouble(col("F_DVHT")))
 
     val eligible = gpaEligible(p.excludedSemester)
 
@@ -83,42 +96,31 @@ object Progress {
     // (map-side combine — one shuffle on F_MASV for the whole report).
     val grade4 = GradeScale.grade4(col("F_DIEM2"))
 
-    // A2: major from ANY class prefix, DI checked before FL (app.py:90-98).
-    val perStudent = typed.groupBy("F_MASV", "khoa").agg(
+    // The coalesce on khoa never fires after the filter: it only types khoa
+    // non-null in the output schema.
+    val perStudent = typed.groupBy(col("F_MASV"), coalesce(col("khoa"), lit(0)).as("khoa")).agg(
+      // A2: major from ANY class prefix, DI checked before FL (app.py:90-98).
       max(when(col("F_TENLOP").startsWith("DI"), 1).otherwise(0)).as("any_di"),
       max(when(col("F_TENLOP").startsWith("FL"), 1).otherwise(0)).as("any_fl"),
       sum(when(eligible, grade4 * col("F_DVHT")).otherwise(0.0)).as("total_points"),
       sum(when(eligible, col("F_DVHT")).otherwise(0.0)).as("credits_earned"),
-      // A3: registrar cumulative credits — reference takes iloc[0] from
-      // unstable ES order; we pin "value at the latest semester" (max_by with
-      // a NHHK/tiebreak total order). Documented deviation, SURVEY.md §7.4.
-      max_by(col("F_TCDTTL"), struct(col("NHHK"), col("F_MAMH"))).as("completed_credits"),
+      registrarCredits.as("completed_credits"),
       count(lit(1)).as("n_records") // A4
     )
 
-    val withMajor = perStudent.withColumn("major",
-      when(col("any_di") === 1, "MMT")
-        .when(col("any_fl") === 1, "NNA")
-        .otherwise("Chưa xác định"))
-
+    val major = when(col("any_di") === 1, "MMT")
+      .when(col("any_fl") === 1, "NNA")
+      .otherwise("Chưa xác định")
     // T18: (major, cohort) requirements; the unknown major has none (null).
-    val withReqs = withMajor.select(col("major"), col("khoa"), col("F_MASV"),
-      col("total_points"), col("credits_earned"), col("completed_credits"),
-      col("n_records"),
-      creditReq(col("major"))(col("khoa")).as("total_credits"),
-      duration(col("major"))(col("khoa")).as("total_semesters"))
-
+    val totalCredits = creditReq(major)(col("khoa"))
+    val totalSemesters = duration(major)(col("khoa"))
     // T19: progress arithmetic (app.py:102-121).
-    val arith = withReqs
-      .withColumn("start_year", lit(2020) + (col("khoa") - 46))
-      .withColumn("years_elapsed", lit(p.currentYear) - col("start_year"))
-      .withColumn("semesters_elapsed", col("years_elapsed") * 3)
-      .withColumn("remaining_credits", col("total_credits") - col("completed_credits"))
-      .withColumn("remaining_semesters", col("total_semesters") - col("semesters_elapsed"))
-      .withColumn("max_credits_remaining_in_time",
-        col("remaining_semesters") * p.maxCreditsPerSemester)
-      .withColumn("progress_pct", col("completed_credits") / col("total_credits") * 100)
-      .withColumn("dtbctl", gpa(col("total_points"), col("credits_earned")))
+    val startYear = lit(2020) + (col("khoa") - 46)
+    val yearsElapsed = lit(p.currentYear) - startYear
+    val semestersElapsed = yearsElapsed * 3
+    val remainingCredits = totalCredits - col("completed_credits")
+    val remainingSemesters = totalSemesters - semestersElapsed
+    val maxInTime = remainingSemesters * p.maxCreditsPerSemester
 
     // T20: tri-state status (app.py:154-178). A student whose requirements
     // are UNKNOWN (major 'Chưa xác định' — no creditReq/duration entry)
@@ -127,11 +129,25 @@ object Progress {
     // 'Chậm tiến độ' over unknown requirements (review finding). The
     // reference raises KeyError here; a null verdict is the documented
     // sane deviation (same class as the null lookup itself).
-    arith.withColumn("status",
-      when(col("remaining_credits").isNull, lit(null).cast("string"))
-        .when(col("remaining_credits") <= 0, "Hoàn thành")
-        .when(col("remaining_credits") <= col("max_credits_remaining_in_time"), "Đúng tiến độ")
-        .otherwise("Chậm tiến độ"))
+    val status = when(remainingCredits.isNull, lit(null).cast("string"))
+      .when(remainingCredits <= 0, "Hoàn thành")
+      .when(remainingCredits <= maxInTime, "Đúng tiến độ")
+      .otherwise("Chậm tiến độ")
+
+    perStudent.select(major.as("major"), col("khoa"), col("F_MASV"),
+      col("total_points"), col("credits_earned"), col("completed_credits"),
+      col("n_records"),
+      totalCredits.as("total_credits"),
+      totalSemesters.as("total_semesters"),
+      startYear.as("start_year"),
+      yearsElapsed.as("years_elapsed"),
+      semestersElapsed.as("semesters_elapsed"),
+      remainingCredits.as("remaining_credits"),
+      remainingSemesters.as("remaining_semesters"),
+      maxInTime.as("max_credits_remaining_in_time"),
+      (col("completed_credits") / totalCredits * 100).as("progress_pct"),
+      gpa(col("total_points"), col("credits_earned")).as("dtbctl"),
+      status.as("status"))
   }
 
   /** Registrar cross-check (SURVEY.md §5, the reference's one implicit
@@ -143,34 +159,27 @@ object Progress {
     * credit-bearing here — only the GPA excludes them), and the delta.
     * A nonzero delta flags registrar/transcript drift — bad feed rows,
     * transfer credits outside the transcript, or a broken upstream join.
-    * One shuffle on the student key; metrics-sized output. */
+    * The registrar figure is typed like the others by the A3 pick, so a
+    * junk registrar value audits as a null delta. One shuffle on the
+    * student key; metrics-sized output. */
   def creditsAudit(enrollment: DataFrame): DataFrame = {
-    val typed = enrollment
-      .withColumn("F_DIEM2", lenientDouble(col("F_DIEM2")))
-      .withColumn("F_DVHT", lenientDouble(col("F_DVHT")))
-      // F_TCDTTL typed like the others BEFORE the max_by pick: delta below
-      // is then double − double — a junk registrar value audits as a null
-      // delta under the same lenient-cast posture, instead of relying on
-      // implicit string−double coercion (silent null in legacy mode, a
-      // throw under ANSI) (review finding).
-      .withColumn("F_TCDTTL", lenientDouble(col("F_TCDTTL")))
-    typed.groupBy("F_MASV").agg(
-      max_by(col("F_TCDTTL"), struct(col("NHHK"), col("F_MAMH")))
-        .as("registrar_credits"),
-      sum(when(col("F_DIEM2") >= 4.0, col("F_DVHT")).otherwise(0.0))
-        .as("computed_credits"))
+    val grade = lenientDouble(col("F_DIEM2"))
+    val credits = lenientDouble(col("F_DVHT"))
+    enrollment.groupBy("F_MASV").agg(
+      registrarCredits.as("registrar_credits"),
+      sum(when(grade >= 4.0, credits).otherwise(0.0)).as("computed_credits"))
       .withColumn("delta", col("registrar_credits") - col("computed_credits"))
   }
 
   /** Single-student transcript view (the table the reference renders):
-    * T10 point filter, T12 projection, T17 year/semester split, sort, T21. */
+    * T10 point filter, T12 projection, sort, T21. T17's year/semester split
+    * (`nam_hoc`, `hoc_ky`) is dropped again before the reference renders
+    * (T21), so it is not built. */
   def transcript(enrollment: DataFrame, masv: String): DataFrame =
     enrollment
       .filter(col("F_MASV") === masv)                                      // T10
       .select("F_MAMH", "F_TENMHVN", "F_DVHT", "F_MASV", "F_TENLOP",
         "NHHK", "F_DIEM2", "F_TCDTTL")                                     // T12
-      .withColumn("nam_hoc", substring(col("NHHK").cast("string"), 1, 4).cast("int")) // T17
-      .withColumn("hoc_ky", substring(col("NHHK").cast("string"), 5, 1).cast("int"))
       // T11 cap applied ON the sort order, ties broken by course code for
       // a total order: the reference's ES size=1000 cap returns an
       // arbitrary subset, and a limit BEFORE any sort reproduces that
@@ -180,5 +189,4 @@ object Progress {
       // arbitrary orders.
       .orderBy(col("NHHK"), col("F_MAMH"))                                 // sort
       .limit(1000)                                                         // T11
-      .drop("nam_hoc", "hoc_ky")                                           // T21
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
+import graft.etl.Enrich.lenientDouble
 import graft.functions.GradeScale
 import graft.query.Progress
 
@@ -36,12 +37,17 @@ object StatefulGpa {
   case class Partial(masv: String, pts: Double, cr: Double, n: Long)
 
   /** Eligible-course projection: the batch flagship query's predicate,
-    * [[Progress.gpaEligible]]. */
+    * [[Progress.gpaEligible]], over grades and credits read as the report
+    * reads them ([[graft.etl.Enrich.lenientDouble]]: junk or NaN is missing). A
+    * missing credit adds 0 points and 0 credits, as the report's sums skip
+    * it. */
   def eligiblePartials(enrollments: DataFrame, excludedSemester: Int): DataFrame = {
-    enrollments.filter(Progress.gpaEligible(excludedSemester) && col("F_MASV").isNotNull)
+    enrollments.select(col("F_MASV"), col("F_TENMHVN"), col("NHHK"),
+        lenientDouble(col("F_DIEM2")).as("F_DIEM2"), lenientDouble(col("F_DVHT")).as("F_DVHT"))
+      .filter(Progress.gpaEligible(excludedSemester) && col("F_MASV").isNotNull)
       .select(col("F_MASV").as("masv"),
-        (GradeScale.grade4(col("F_DIEM2")) * col("F_DVHT")).as("pts"),
-        col("F_DVHT").as("cr"))
+        coalesce(GradeScale.grade4(col("F_DIEM2")) * col("F_DVHT"), lit(0.0)).as("pts"),
+        coalesce(col("F_DVHT"), lit(0.0)).as("cr"))
   }
 
   /** The stateful leg. Input: any (streaming) frame with masv/pts/cr.

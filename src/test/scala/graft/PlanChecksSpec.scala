@@ -58,6 +58,17 @@ class PlanChecksSpec extends SparkSpec {
     assert(!plan.contains("Join"), s"join in the flagship plan:\n$plan")
   }
 
+  test("flagship query aggregates on HashAggregate, off the sort path") {
+    // A3's registrar pick keeps its two ordering keys in primitive buffer
+    // slots (LexArgExtreme); a struct-ordered max_by would put a struct in
+    // the buffer and plan SortAggregate behind a Sort on both sides of the
+    // student shuffle.
+    val plan = finalPlanString(SparkEntry.queries("flagship_progress")(spark, sf))
+    assert(!plan.contains("SortAggregate") && !plan.contains("ObjectHashAggregate"),
+      s"flagship aggregate left HashAggregate:\n$plan")
+    assert(plan.contains("HashAggregate"), s"no hash aggregate in:\n$plan")
+  }
+
   test("near-dup pipeline shingles the corpus exactly once (materialized sketch)") {
     // The signature frame feeds 5 plan branches; without materialization each
     // branch re-runs the shingle pipeline (pruning blocks ReusedExchange).

@@ -89,7 +89,7 @@ class ProgressSpec extends SparkSpec {
     // Student A: registrar says 9, transcript sums 6 passed (one failed
     // course's 4 credits excluded) -> delta 3 (e.g. transfer credits).
     // Student B: figures agree -> delta 0. The registrar figure is the
-    // A3-pinned latest (NHHK, course) value, so the stale 5.0 loses.
+    // A3-pinned latest semester's value, so the stale 5.0 loses.
     val rows = Seq(
       (t0, "A", "C1", "Toán", "FL01", "46", Some(20231), "7.0", 3.0, 5.0),
       (t0, "A", "C2", "Văn", "FL01", "46", Some(20232), "8.0", 3.0, 9.0),
@@ -128,20 +128,59 @@ class ProgressSpec extends SparkSpec {
     // 3-credit C (2.0); B2100011 passes a 2-credit course (B, 3.0) with a
     // null course name beside a 2-credit D (1.0). Both rows are eligible:
     // GPA 3.0 and 2.0; dropping them would read 2.0 and 1.0.
+    // Grades and credits are read as the report reads them: B2100012's
+    // passed row with a NaN credit adds nothing beside a 3-credit A
+    // (4.0 over 3); B2100013's NaN grade is no passed A beside a 3-credit C
+    // (2.0 over 3); B2100014's passed row with a null credit adds nothing
+    // beside a 2-credit B (3.0 over 2).
     val nulls = Seq(
-      (t0, "B2100010", "C1", Some("Toán"), "DI01", "47", None, 9.0, 3.0, 6.0),
-      (t0, "B2100010", "C2", Some("Văn"), "DI01", "47", Some(20231), 5.5, 3.0, 6.0),
-      (t0, "B2100011", "C1", None, "FL01", "47", Some(20231), 7.0, 2.0, 4.0),
-      (t0, "B2100011", "C2", Some("Lý"), "FL01", "47", Some(20232), 4.0, 2.0, 4.0)
+      (t0, "B2100010", "C1", Some("Toán"), "DI01", "47", None, 9.0, Some(3.0), 6.0),
+      (t0, "B2100010", "C2", Some("Văn"), "DI01", "47", Some(20231), 5.5, Some(3.0), 6.0),
+      (t0, "B2100011", "C1", None, "FL01", "47", Some(20231), 7.0, Some(2.0), 4.0),
+      (t0, "B2100011", "C2", Some("Lý"), "FL01", "47", Some(20232), 4.0, Some(2.0), 4.0),
+      (t0, "B2100012", "C1", Some("Toán"), "DI01", "47", Some(20231), 9.0, Some(3.0), 3.0),
+      (t0, "B2100012", "C2", Some("Văn"), "DI01", "47", Some(20231), 8.0, Some(Double.NaN), 3.0),
+      (t0, "B2100013", "C1", Some("Toán"), "DI01", "47", Some(20231), 5.5, Some(3.0), 3.0),
+      (t0, "B2100013", "C2", Some("Văn"), "DI01", "47", Some(20231), Double.NaN, Some(3.0), 3.0),
+      (t0, "B2100014", "C1", Some("Toán"), "FL01", "47", Some(20231), 8.0, None, 2.0),
+      (t0, "B2100014", "C2", Some("Văn"), "FL01", "47", Some(20231), 7.0, Some(2.0), 2.0)
     ).toDF("@timestamp", "F_MASV", "F_MAMH", "F_TENMHVN", "F_TENLOP",
       "F_KHOAHOC", "NHHK", "F_DIEM2", "F_DVHT", "F_TCDTTL")
     val report = Progress.report(spark, nulls).collect()
-      .map(r => r.getAs[String]("F_MASV") -> r.getAs[Double]("dtbctl")).toMap
+      .map(r => r.getAs[String]("F_MASV") ->
+        (r.getAs[Double]("dtbctl"), r.getAs[Double]("credits_earned"))).toMap
     // The stateful leg on a batch frame folds each student's rows once.
     val stateful = StatefulGpa.stream(nulls, excludedSemester = 20251).collect()
-      .map(u => u.masv -> u.dtbctl).toMap
-    assert(report == Map("B2100010" -> 3.0, "B2100011" -> 2.0), s"report $report")
+      .map(u => u.masv -> (u.dtbctl, u.credits)).toMap
+    assert(report == Map("B2100010" -> (3.0, 6.0), "B2100011" -> (2.0, 4.0),
+      "B2100012" -> (4.0, 3.0), "B2100013" -> (2.0, 3.0), "B2100014" -> (3.0, 2.0)),
+      s"report $report")
     assert(stateful == report, s"stateful $stateful vs report $report")
+  }
+
+  test("A3: the registrar figure of the latest semester, its largest present figure on a tie") {
+    // B2100030: the latest semester's rows disagree; the largest figure
+    // wins whatever the course codes, and the older 15.0 loses.
+    // B2100031: only a null-semester row, which still counts.
+    // B2100032: a NaN and a null figure lose to the present one in the
+    // same semester.
+    val regs = Seq(
+      (t0, "B2100030", "C5", "Toán", "DI01", "47", Some(20231), "8.0", 3.0, Some(15.0)),
+      (t0, "B2100030", "C9", "Văn", "DI01", "47", Some(20232), "8.0", 3.0, Some(10.0)),
+      (t0, "B2100030", "C1", "Lý", "DI01", "47", Some(20232), "8.0", 3.0, Some(12.0)),
+      (t0, "B2100031", "C1", "Toán", "DI01", "47", None, "8.0", 3.0, Some(7.0)),
+      (t0, "B2100032", "C1", "Toán", "FL01", "47", Some(20241), "8.0", 3.0, Some(Double.NaN)),
+      (t0, "B2100032", "C2", "Văn", "FL01", "47", Some(20241), "8.0", 3.0, None),
+      (t0, "B2100032", "C3", "Lý", "FL01", "47", Some(20241), "8.0", 3.0, Some(5.0))
+    ).toDF("@timestamp", "F_MASV", "F_MAMH", "F_TENMHVN", "F_TENLOP",
+      "F_KHOAHOC", "NHHK", "F_DIEM2", "F_DVHT", "F_TCDTTL")
+    val report = Progress.report(spark, regs).collect()
+      .map(r => r.getAs[String]("F_MASV") -> r.getAs[Double]("completed_credits")).toMap
+    assert(report == Map("B2100030" -> 12.0, "B2100031" -> 7.0, "B2100032" -> 5.0),
+      s"report $report")
+    val audit = Progress.creditsAudit(regs).collect()
+      .map(r => r.getAs[String]("F_MASV") -> r.getAs[Double]("registrar_credits")).toMap
+    assert(audit == report, s"audit $audit vs report $report")
   }
 
   test("a NaN grade or credit cell reads as missing: no credits, no points, flagged by the audit") {
