@@ -28,6 +28,67 @@ object SparkEntry {
   private def docs(s: SparkSession, d: String) = Tables(s, d, "documents")
   private def emb(s: SparkSession, d: String) = Tables(s, d, "embeddings")
 
+  // ------------------------------------------------------ paper-rule inputs
+  // The rows certifying Ingest/Enrich/Progress run them on the adapter's view
+  // of `events` with edge cases shaped in, once in Scala, once in SQL
+  // (FIXTURES.md B.1), so every branch of each rule fires.
+
+  /** A null `ts` (so `NHHK`) on every 5th event, a null `event_type` (so
+    * course code, name and class) on every 3rd, else '' on every 7th; after
+    * the adapter, a null course name alone where `F_DVHT` is 4. */
+  private[graft] def shapedEnrollment(events: DataFrame): DataFrame =
+    EventsAdapter.enrollmentView(events
+      .withColumn("ts", when(col("event_id") % 5 =!= 0, col("ts")))
+      .withColumn("event_type", when(col("event_id") % 3 === 0, lit(null: String))
+        .when(col("event_id") % 7 === 0, "").otherwise(col("event_type"))))
+      .withColumn("F_TENMHVN", when(col("F_DVHT") =!= 4.0, col("F_TENMHVN")))
+
+  /** The grade as a workbook string cell (`Schemas.enrollment`): junk, '' or
+    * "NaN" by the record's second, else printed with four decimals (exact:
+    * `value` has two). */
+  private[graft] def workbookCells(events: DataFrame): DataFrame = {
+    val sec = second(col("@timestamp")) % 10
+    shapedEnrollment(events).withColumn("F_DIEM2",
+      when(sec === 3, "junk").when(sec === 5, "").when(sec === 7, "NaN")
+        .otherwise(format_string("%.4f", col("F_DIEM2"))))
+  }
+
+  /** The adapter's SQL columns renamed as the Spark frame names them. */
+  private val enrollCols: String =
+    """"timestamp" AS "@timestamp", masv AS F_MASV, mamh AS F_MAMH, tenmh AS F_TENMHVN,
+      |tenlop AS F_TENLOP, khoahoc AS F_KHOAHOC, nhhk AS NHHK, diem2 AS F_DIEM2,
+      |dvht AS F_DVHT, tcdttl AS F_TCDTTL""".stripMargin
+
+  /** Oracle CTEs: `mapped` is [[shapedEnrollment]] under the adapter's SQL
+    * names, `enroll` the same under the Spark names, `cells` [[workbookCells]]. */
+  private val enrollSql: String =
+    s"""WITH shaped AS (SELECT * REPLACE (CASE WHEN event_id % 5 <> 0 THEN ts END AS ts,
+       |  CASE WHEN event_id % 3 = 0 THEN NULL WHEN event_id % 7 = 0 THEN ''
+       |       ELSE event_type END AS event_type) FROM events),
+       |mapped AS (SELECT * REPLACE (CASE WHEN dvht <> 4 THEN tenmh END AS tenmh)
+       |  FROM (${EventsAdapter.sqlOver("shaped")})),
+       |enroll AS (SELECT $enrollCols FROM mapped),
+       |cells AS (SELECT * REPLACE (CASE second("@timestamp") % 10 WHEN 3 THEN 'junk'
+       |  WHEN 5 THEN '' WHEN 7 THEN 'NaN' ELSE printf('%.4f', F_DIEM2) END AS F_DIEM2)
+       |  FROM enroll)""".stripMargin
+
+  // The oracle's spelling of each rule, over the Spark names.
+  private val lenientGradeSql = "CASE WHEN isnan(TRY_CAST(F_DIEM2 AS DOUBLE)) THEN NULL " +
+    "ELSE TRY_CAST(F_DIEM2 AS DOUBLE) END"
+  private val normSql: String = Enrich.stringCells.map(c => s"nullif($c, '') AS $c")
+    .mkString("norm AS (SELECT * REPLACE (", ", ", ") FROM cells)")
+  private val majorColsSql: String = {
+    val guard = "F_TENLOP IS NOT NULL AND F_TENMHVN IS NOT NULL AND F_TENLOP LIKE"
+    s"""CASE WHEN $guard 'FL%' THEN F_TENMHVN END AS NNA,
+       |CASE WHEN $guard 'FL%' THEN F_DIEM2 END AS DIEM_NNA,
+       |CASE WHEN $guard 'DI%' THEN F_TENMHVN END AS MMT,
+       |CASE WHEN $guard 'DI%' THEN F_DIEM2 END AS DIEM_MMT""".stripMargin
+  }
+  private val docIdSql: String =
+    """CASE WHEN F_MAMH IS NOT NULL AND F_MASV IS NOT NULL AND F_KHOAHOC IS NOT NULL
+      |  THEN F_MAMH || '_' || F_MASV || '_' || F_KHOAHOC ||
+      |    coalesce('_' || CAST(NHHK AS VARCHAR), '') END""".stripMargin
+
   /** l3's staged-and-compacted lineitem store, memoized per sf dir: the
     * fragment-then-compact side effect runs once per JVM however many times
     * the registered query is invoked (gate + bench), and the staged root is
@@ -115,19 +176,16 @@ object SparkEntry {
     // ---- T1: MD5 anti-join delta vs seen-hashes state (pro.py:46-55)
     ("t1_delta_antijoin",
       (s, d) => {
-        val e = ev(s, d)
-        val h = md5(concat_ws("|", col("event_type"), col("props"),
-          (col("event_id") % 1000).cast("string")))
-        val seen = e.filter(col("event_id") < 500)
-          .select(h.as("row_hash")).distinct()
-        e.withColumn("row_hash", h)
-          .join(seen, Seq("row_hash"), "left_anti")
-          .select("event_id", "event_type", "props")
+        val enr = shapedEnrollment(ev(s, d))
+        val proj = Seq("F_TENLOP", "F_MASV", "NHHK").map(col)
+        val seen = enr.filter(col("F_DVHT") <= 2.0).select(proj: _*)
+        Ingest.deltaDedup(enr.select(proj: _*), seen.select(Ingest.rowHash(seen).as("row_hash")))
+          .drop("row_hash")
       },
-      Some("""SELECT e.event_id, e.event_type, e.props FROM events e
-        |WHERE md5(concat_ws('|', e.event_type, e.props, CAST(e.event_id % 1000 AS VARCHAR)))
-        |  NOT IN (SELECT md5(concat_ws('|', s.event_type, s.props, CAST(s.event_id % 1000 AS VARCHAR)))
-        |          FROM events s WHERE s.event_id < 500)""".stripMargin)),
+      Some(s"""$enrollSql
+        |SELECT F_TENLOP, F_MASV, NHHK FROM enroll e WHERE NOT EXISTS (SELECT 1 FROM enroll s
+        |  WHERE s.F_DVHT <= 2 AND s.F_TENLOP IS NOT DISTINCT FROM e.F_TENLOP
+        |    AND s.F_MASV IS NOT DISTINCT FROM e.F_MASV AND s.NHHK IS NOT DISTINCT FROM e.NHHK)""".stripMargin)),
 
     // ---- T2: strict total ingest order (pro.py:27,70-73)
     ("t2_monotonic_seq",
@@ -141,13 +199,8 @@ object SparkEntry {
     // ---- T3/T4: ''->null normalization + column reorder (pro.py:76-82)
     ("t3_null_normalize",
       (s, d) => Ingest.columnFirst(
-        ev(s, d).select(
-          nullif(col("event_type"), lit("")).as("event_type_n"),
-          col("event_id"),
-          coalesce(nullif(col("props"), lit("")), lit("{}")).as("props_n")),
-        "event_id"),
-      Some("""SELECT event_id, nullif(event_type, '') AS event_type_n,
-        |coalesce(nullif(props, ''), '{}') AS props_n FROM events""".stripMargin)),
+        Ingest.normalizeEmpty(workbookCells(ev(s, d)), Enrich.stringCells), "@timestamp"),
+      Some(s"$enrollSql, $normSql SELECT * FROM norm")),
 
     // ---- T5: epoch-ms <-> timestamp <-> formatted string (con.py:35-36)
     ("t5_epoch_iso",
@@ -160,80 +213,45 @@ object SparkEntry {
         |strftime(ts, '%Y-%m-%d %H:%M:%S') AS iso_s,
         |CAST(ts AS DATE) AS day FROM events""".stripMargin)),
 
-    // ---- T6: lenient cast, junk -> null + invalid audit (con.py:39-43)
+    // ---- T6: lenient cast + invalid audit (con.py:39-43): typed rows, then the audit's
     ("t6_lenient_cast",
-      (s, d) => ev(s, d).select(
-        col("event_id"),
-        get_json_object(col("props"), "$.k").try_cast("double").as("k_num"),
-        col("event_type").try_cast("double").as("junk_cast"),
-        when(col("props").isNotNull &&
-          get_json_object(col("props"), "$.k").try_cast("double").isNull, 1)
-          .otherwise(0).as("is_invalid")),
-      Some("""SELECT event_id,
-        |TRY_CAST(json_extract_string(props, '$.k') AS DOUBLE) AS k_num,
-        |TRY_CAST(event_type AS DOUBLE) AS junk_cast,
-        |CASE WHEN props IS NOT NULL
-        |      AND TRY_CAST(json_extract_string(props, '$.k') AS DOUBLE) IS NULL
-        |     THEN 1 ELSE 0 END AS is_invalid FROM events""".stripMargin)),
+      (s, d) => {
+        val cells = workbookCells(ev(s, d))
+        Enrich.castGrade(cells).unionByName(
+          Enrich.auditInvalid(cells).withColumnRenamed("F_DIEM2", "invalid_grade"),
+          allowMissingColumns = true)
+      },
+      Some(s"""$enrollSql
+        |SELECT * REPLACE ($lenientGradeSql AS F_DIEM2), NULL AS invalid_grade FROM cells
+        |UNION ALL
+        |SELECT * REPLACE (NULL AS F_DIEM2), F_DIEM2 AS invalid_grade FROM cells
+        |WHERE F_DIEM2 IS NOT NULL AND $lenientGradeSql IS NULL""".stripMargin)),
 
-    // ---- T7: conditional enrichment by prefix (con.py:46-52)
+    // ---- T7: conditional enrichment by class prefix (con.py:46-52)
     ("t7_conditional_enrich",
-      (s, d) => ev(s, d).select(
-        col("event_id"),
-        when(col("event_type").startsWith("p"), col("event_type")).as("mmt_course"),
-        when(col("event_type").startsWith("p"), col("value")).as("mmt_score"),
-        when(col("event_type").startsWith("s"), col("event_type")).as("nna_course"),
-        when(col("event_type").startsWith("s"), col("value")).as("nna_score")),
-      Some("""SELECT event_id,
-        |CASE WHEN event_type LIKE 'p%' THEN event_type END AS mmt_course,
-        |CASE WHEN event_type LIKE 'p%' THEN value END AS mmt_score,
-        |CASE WHEN event_type LIKE 's%' THEN event_type END AS nna_course,
-        |CASE WHEN event_type LIKE 's%' THEN value END AS nna_score
-        |FROM events""".stripMargin)),
+      (s, d) => Enrich.enrichMajorColumns(shapedEnrollment(ev(s, d))),
+      Some(s"$enrollSql SELECT *, $majorColsSql FROM enroll")),
 
-    // ---- T8: composite key with fallback + rejection (con.py:23-30)
+    // ---- T8: composite key with fallback + rejection (con.py:23-30): keyed rows, then rejects
     ("t8_composite_key",
       (s, d) => {
-        val f1 = col("event_type")
-        val f2 = col("user_id").cast("string")
-        val f3 = when(col("event_id") % 5 === 0, lit(null: String))
-          .otherwise((col("event_id") % 100).cast("string"))
-        val f4 = when(col("event_id") % 3 === 0, lit(null: String))
-          .otherwise((col("event_id") % 10).cast("string"))
-        ev(s, d).select(
-          col("event_id"),
-          when(f1.isNotNull && f2.isNotNull && f3.isNotNull && f4.isNotNull,
-            concat_ws("_", f1, f2, f3, f4))
-            .when(f1.isNotNull && f2.isNotNull && f3.isNotNull,
-              concat_ws("_", f1, f2, f3))
-            .as("doc_key"))
-          .withColumn("rejected", when(col("doc_key").isNull, 1).otherwise(0))
+        val keyed = Enrich.compositeKey(shapedEnrollment(ev(s, d)))
+        keyed.withColumn("side", lit("keyed"))
+          .union(Enrich.rejected(keyed).withColumn("side", lit("rejected")))
       },
-      Some("""WITH k AS (SELECT event_id, event_type AS f1,
-        |  CAST(user_id AS VARCHAR) AS f2,
-        |  CASE WHEN event_id % 5 = 0 THEN NULL ELSE CAST(event_id % 100 AS VARCHAR) END AS f3,
-        |  CASE WHEN event_id % 3 = 0 THEN NULL ELSE CAST(event_id % 10 AS VARCHAR) END AS f4
-        |  FROM events)
-        |SELECT event_id,
-        |  CASE WHEN f1 IS NOT NULL AND f2 IS NOT NULL AND f3 IS NOT NULL AND f4 IS NOT NULL
-        |         THEN f1 || '_' || f2 || '_' || f3 || '_' || f4
-        |       WHEN f1 IS NOT NULL AND f2 IS NOT NULL AND f3 IS NOT NULL
-        |         THEN f1 || '_' || f2 || '_' || f3
-        |  END AS doc_key,
-        |  CASE WHEN (CASE WHEN f1 IS NOT NULL AND f2 IS NOT NULL AND f3 IS NOT NULL AND f4 IS NOT NULL
-        |         THEN f1 || '_' || f2 || '_' || f3 || '_' || f4
-        |       WHEN f1 IS NOT NULL AND f2 IS NOT NULL AND f3 IS NOT NULL
-        |         THEN f1 || '_' || f2 || '_' || f3 END) IS NULL THEN 1 ELSE 0 END AS rejected
-        |FROM k""".stripMargin)),
+      Some(s"""$enrollSql, keyed AS (SELECT *, $docIdSql AS doc_id FROM enroll)
+        |SELECT *, 'keyed' AS side FROM keyed
+        |UNION ALL SELECT *, 'rejected' FROM keyed WHERE doc_id IS NULL""".stripMargin)),
 
-    // ---- T9: daily partition routing (con.py:58)
+    // ---- T9: the whole consumer chain (con.py:33-63), ending in daily
+    // partition routing (con.py:58) and the null-key filter
     ("t9_partition_route",
-      (s, d) => ev(s, d).select(
-        col("event_id"),
-        to_date(col("ts")).as("ingest_date"),
-        concat(lit("phantich1-"), date_format(col("ts"), "yyyy.MM.dd")).as("index_name")),
-      Some("""SELECT event_id, CAST(ts AS DATE) AS ingest_date,
-        |'phantich1-' || strftime(ts, '%Y.%m.%d') AS index_name FROM events""".stripMargin)),
+      (s, d) => Enrich.consumerPipeline(workbookCells(ev(s, d))),
+      Some(s"""$enrollSql, $normSql,
+        |graded AS (SELECT * REPLACE ($lenientGradeSql AS F_DIEM2) FROM norm)
+        |SELECT *, $majorColsSql, $docIdSql AS doc_id,
+        |  CAST("@timestamp" AS DATE) AS ingest_date
+        |FROM graded WHERE ($docIdSql) IS NOT NULL""".stripMargin)),
 
     // ---- T10: point lookup (app.py:60-67)
     ("t10_point_lookup",
@@ -250,13 +268,9 @@ object SparkEntry {
 
     // ---- T14/T15: compound predicate + exclusion filters (app.py:128,131)
     ("t14_t15_filters",
-      (s, d) => ev(s, d)
-        .filter(col("value") >= 100.0 && !col("event_type").contains("r") &&
-          col("event_id") % 10 =!= 7)
-        .select("event_id", "event_type", "value"),
-      Some("""SELECT event_id, event_type, value FROM events
-        |WHERE value >= 100.0 AND NOT contains(event_type, 'r')
-        |  AND event_id % 10 <> 7""".stripMargin)),
+      (s, d) => shapedEnrollment(ev(s, d))
+        .filter(Progress.gpaEligible(EventsAdapter.ExcludedSemester)),
+      Some(s"$enrollSql SELECT $enrollCols FROM mapped WHERE ${EventsAdapter.gpaEligibleSql}")),
 
     // ---- T16: 10-scale -> 4-scale banding ladder (app.py:39-55)
     ("t16_grade_band",
@@ -1184,11 +1198,9 @@ object SparkEntry {
       Some(s"""WITH enroll AS (${EventsAdapter.sql}),
         |per AS (
         |  SELECT masv, nhhk,
-        |    sum(CASE WHEN diem2 >= 4.0 AND NOT contains(tenmh, '*')
-        |              AND nhhk <> ${EventsAdapter.ExcludedSemester}
+        |    sum(CASE WHEN ${EventsAdapter.gpaEligibleSql}
         |             THEN (${GradeScale.grade4Sql("diem2")}) * dvht ELSE 0.0 END) AS pts,
-        |    sum(CASE WHEN diem2 >= 4.0 AND NOT contains(tenmh, '*')
-        |              AND nhhk <> ${EventsAdapter.ExcludedSemester}
+        |    sum(CASE WHEN ${EventsAdapter.gpaEligibleSql}
         |             THEN dvht ELSE 0.0 END) AS cr
         |  FROM enroll GROUP BY masv, nhhk)
         |SELECT masv, nhhk,
@@ -2248,8 +2260,7 @@ object SparkEntry {
 
   private lazy val gpaReplayOracle: String = {
     val ladder = GradeScale.grade4Sql("diem2")
-    val eligible = "diem2 >= 4.0 AND NOT contains(tenmh, '*') " +
-      s"AND nhhk <> ${EventsAdapter.ExcludedSemester}"
+    val eligible = EventsAdapter.gpaEligibleSql
     s"""WITH enroll AS (${EventsAdapter.sql}),
        |agg AS (
        |  SELECT masv,
@@ -3205,7 +3216,7 @@ object SparkEntry {
       (46 to 50).map(k => s"('NNA', $k, 141, 12)")
     ).mkString(", ")
     val ladder = GradeScale.grade4Sql("diem2")
-    val eligible = s"diem2 >= 4.0 AND NOT contains(tenmh, '*') AND nhhk <> ${EventsAdapter.ExcludedSemester}"
+    val eligible = EventsAdapter.gpaEligibleSql
     s"""WITH enroll AS (${EventsAdapter.sql}),
        |dims(major, khoa, total_credits, total_semesters) AS (VALUES $dims),
        |per AS (

@@ -24,11 +24,11 @@ object Enrich {
   /** T6: lenient numeric cast (`con.py:39-43`): junk -> null (the columnar
     * twin of catch-ValueError-keep-going). `auditInvalid` surfaces the rows
     * the reference merely warns about. */
-  def castGrade(df: DataFrame, c: String = "F_DIEM2"): DataFrame =
-    df.withColumn(c, lenientDouble(col(c)))
+  def castGrade(df: DataFrame): DataFrame =
+    df.withColumn("F_DIEM2", lenientDouble(col("F_DIEM2")))
 
-  def auditInvalid(df: DataFrame, c: String = "F_DIEM2"): DataFrame =
-    df.filter(col(c).isNotNull && lenientDouble(col(c)).isNull)
+  def auditInvalid(df: DataFrame): DataFrame =
+    df.filter(col("F_DIEM2").isNotNull && lenientDouble(col("F_DIEM2")).isNull)
 
   /** T7: conditional major-specific columns (`con.py:46-52`): class prefix
     * FL -> (NNA, DIEM_NNA), DI -> (MMT, DIEM_MMT); guarded on both source
@@ -59,13 +59,16 @@ object Enrich {
   /** T9: daily partition routing (`con.py:58` `phantich1-YYYY.MM.dd`).
     * Partition key derived from the record's own timestamp — never the
     * wall clock — so replays land in the same partition (SURVEY.md §7.4). */
-  def withIngestDate(df: DataFrame, tsCol: String = "@timestamp"): DataFrame =
-    df.withColumn("ingest_date", to_date(col(tsCol)))
+  def withIngestDate(df: DataFrame): DataFrame =
+    df.withColumn("ingest_date", to_date(col("@timestamp")))
+
+  /** The workbook's string cells, which T3 normalizes ('' -> null) first. */
+  private[graft] val stringCells =
+    Seq("F_MASV", "F_MAMH", "F_TENMHVN", "F_TENLOP", "F_KHOAHOC", "F_DIEM2")
 
   /** Full consumer chain, `con.py:33-63` in order. */
   def consumerPipeline(df: DataFrame): DataFrame = {
-    val normalized = Ingest.normalizeEmpty(df,
-      Seq("F_MASV", "F_MAMH", "F_TENMHVN", "F_TENLOP", "F_KHOAHOC", "F_DIEM2"))
+    val normalized = Ingest.normalizeEmpty(df, stringCells)
     val pipeline = withIngestDate(compositeKey(enrichMajorColumns(castGrade(normalized))))
     pipeline.filter(col("doc_id").isNotNull)
   }

@@ -113,29 +113,4 @@ object Ingest {
     * (`pro.py:79-82`). */
   def columnFirst(df: DataFrame, first: String): DataFrame =
     df.select((first +: df.columns.filterNot(_ == first).toIndexedSeq).map(col): _*)
-
-  /** In-flight audit counters via `Dataset.observe`: the [[profile]] stats
-    * (row count + per-column null counts) accumulate DURING whatever action
-    * the caller runs next — a write, an aggregate — instead of costing a
-    * second scan. At 100 TB that second scan is real money; observation
-    * metrics ride the task completion events for free and reach the
-    * returned [[org.apache.spark.sql.Observation]] (or any
-    * QueryExecutionListener) when the action finishes.
-    *
-    * Batch-only by contract here (the Observation helper requires it);
-    * streaming pipelines attach the same named observe() and read metrics
-    * per micro-batch from StreamingQueryProgress. */
-  private val auditSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def withAudit(df: DataFrame, name: String = ""): (DataFrame, org.apache.spark.sql.Observation) = {
-    // Unique observation name per call: two audited frames combined into one
-    // action would otherwise collide on a duplicate-observation-name error.
-    val obsName =
-      if (name.nonEmpty) name else s"graft_audit_${auditSeq.incrementAndGet()}"
-    val obs = org.apache.spark.sql.Observation(obsName)
-    val metrics = Seq(count(lit(1)).as("n_rows")) ++ df.columns.toSeq.map { c =>
-      sum(when(qcol(c).isNull, 1L).otherwise(0L)).as(s"null_$c")
-    }
-    (df.observe(obs, metrics.head, metrics.tail: _*), obs)
-  }
 }

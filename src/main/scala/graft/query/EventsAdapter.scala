@@ -36,8 +36,11 @@ object EventsAdapter {
       ((col("user_id") % 150) + 10).cast("double").as("F_TCDTTL"))
 
   /** The identical mapping as a SQL SELECT body over `events` (oracle CTE). */
-  val sql: String =
-    """SELECT
+  val sql: String = sqlOver("events")
+
+  /** [[sql]] over another relation with the `events` columns. */
+  private[graft] def sqlOver(events: String): String =
+    s"""SELECT
       |  ts AS "timestamp",
       |  'B2' || CAST(user_id % 5 AS VARCHAR) || '-' || CAST(user_id AS VARCHAR) AS masv,
       |  event_type AS mamh,
@@ -49,5 +52,10 @@ object EventsAdapter {
       |  value / 50.0 AS diem2,
       |  CAST((event_id % 4) + 1 AS DOUBLE) AS dvht,
       |  CAST((user_id % 150) + 10 AS DOUBLE) AS tcdttl
-      |FROM events""".stripMargin
+      |FROM $events""".stripMargin
+
+  /** SQL twin of [[Progress.gpaEligible]] at [[ExcludedSemester]] over [[sql]]'s
+    * columns, null arms included. */
+  val gpaEligibleSql: String = "(diem2 >= 4.0 AND NOT coalesce(contains(tenmh, '*'), false) " +
+    s"AND (nhhk IS NULL OR nhhk <> $ExcludedSemester))"
 }

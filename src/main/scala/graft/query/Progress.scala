@@ -20,8 +20,7 @@ import graft.functions.{GradeScale, LexArgExtreme}
   */
 object Progress {
 
-  case class Params(currentYear: Int = 2024, excludedSemester: Int = 20251,
-                    maxCreditsPerSemester: Int = 20)
+  case class Params(currentYear: Int = 2024, excludedSemester: Int = 20251)
 
   // T18: the static lookup tables compiled into the reference app
   // (app.py:15-36), as literal maps read per row (SURVEY.md §1.3): a lookup
@@ -120,7 +119,7 @@ object Progress {
     val semestersElapsed = yearsElapsed * 3
     val remainingCredits = totalCredits - col("completed_credits")
     val remainingSemesters = totalSemesters - semestersElapsed
-    val maxInTime = remainingSemesters * p.maxCreditsPerSemester
+    val maxInTime = remainingSemesters * 20 // credits per regular semester (app.py:30)
 
     // T20: tri-state status (app.py:154-178). A student whose requirements
     // are UNKNOWN (major 'Chưa xác định' — no creditReq/duration entry)

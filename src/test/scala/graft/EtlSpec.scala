@@ -305,21 +305,6 @@ class EtlSpec extends SparkSpec {
     assert(after == Map("k1" -> None, "k2" -> Some("x"), "k3" -> Some("y")))
   }
 
-  test("observe() audit counters match profile() without a second scan") {
-    val df = Seq((1L, Some("a")), (2L, None), (3L, Some("c")), (4L, None))
-      .toDF("id", "v")
-    val (observed, obs) = Ingest.withAudit(df)
-    // one action drives BOTH the caller's work and the audit metrics
-    assert(observed.filter(col("id") > 1).count() == 3)
-    val m = obs.get
-    assert(m("n_rows") == 4L)   // observed BEFORE the filter: full input
-    assert(m("null_id") == 0L && m("null_v") == 2L)
-    // same numbers the two-pass profile() would have produced
-    val p = Ingest.profile(df).collect().head
-    assert(p.getAs[Long]("n_rows") == m("n_rows") &&
-      p.getAs[Long]("null_v") == m("null_v"))
-  }
-
   test("permissive JSON parse: drifted/corrupt records captured, not fatal") {
     // SURVEY §1.3: ES dynamic mapping ≙ declared StructType + PERMISSIVE
     // parse — unknown fields ignored, type drift nulls the field, junk lands
